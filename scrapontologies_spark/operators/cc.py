@@ -12,6 +12,11 @@ O(log n) rounds, skew-resistant: large-star splits high-degree neighborhoods
 instead of funneling them through one reducer.  Each round localCheckpoints
 to truncate lineage; convergence = edge-set fingerprint (count + xxhash sum)
 stable — an O(1)-size driver check, no collect of the edge set.
+
+The code corpus's module-alias graph needs none of this: it is a disjoint
+union of stars, which :func:`module_alias_labels` labels in closed form
+(the KG job's ``alias_labels`` stage).  The rounds serve graphs of unknown
+shape — duplicate clustering and the dataset queries.
 """
 
 from __future__ import annotations
@@ -298,8 +303,8 @@ def canonicalize_entities(
 def module_alias_edges(entities: DataFrame) -> DataFrame:
     """Alias rule for the code corpus: an import target ``lib::<stem>``
     aliases every module entity whose filename stem is <stem> (JVM-side
-    regexp on the module id).  Hot stems produce giant star components —
-    exactly the skew case large-star is built for."""
+    regexp on the module id).  Hot stems produce giant star components;
+    :func:`module_alias_labels` labels them without CC rounds."""
     mods = entities.filter(F.col("type") == "module").select(
         F.col("id").alias("u"),
         F.concat(
@@ -308,3 +313,24 @@ def module_alias_edges(entities: DataFrame) -> DataFrame:
         ).alias("v"),
     )
     return mods.filter(F.col("v") != "lib::")
+
+
+def module_alias_labels(entities: DataFrame) -> DataFrame:
+    """Component labels of the :func:`module_alias_edges` graph in closed
+    form: (u, v) ∪ (v, v) as (node, component), no CC rounds.
+
+    Every edge's v = ``lib::<stem>`` is a function of its u, so each u has
+    exactly one neighbour; and every u matched ``\\.[A-Za-z0-9]+$`` — it
+    contains a '.', which no v does — so no node is both a u and a v.  The
+    graph is therefore a disjoint union of stars centred on the
+    ``lib::<stem>`` nodes, and each star's centre labels its component.
+    Same partition as ``connected_components(module_alias_edges(e))``
+    (component ids differ: the centre, not the min member), so after
+    :func:`prefer_real_canonical`, which depends only on the partition,
+    the two agree row for row."""
+    edges = module_alias_edges(entities)
+    return (
+        edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
+        .unionByName(edges.select(F.col("v").alias("node"), F.col("v").alias("component")))
+        .distinct()
+    )

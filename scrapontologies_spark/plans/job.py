@@ -6,7 +6,8 @@ so a killed run resumes mid-pipeline with identical output — north_rule):
   corpus → chunks → {triples_raw, doc_entities, doc_schemas, global_schema}
          → entities (modules ∪ symbols, reconciled against any existing
            entities table — the MERGE INTO analog of J1/M6)
-         → alias_labels (large-star/small-star CC over import-stem aliases)
+         → alias_labels (closed-form star labelling of import-stem aliases:
+           every component is a star centred on lib::<stem>, so no CC rounds)
          → triples (canonicalized + referential integrity)
 
 Shuffle layout per BASELINE north_star: explicit repartition(repo, lang)
@@ -28,6 +29,7 @@ from __future__ import annotations
 import sys
 from typing import Dict, Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,8 +37,7 @@ from ..functions.semantics import canonical_json
 from ..operators.cc import (
     canonicalize_entities,
     canonicalize_triples,
-    connected_components,
-    module_alias_edges,
+    module_alias_labels,
     prefer_real_canonical,
 )
 from ..operators.extract import (
@@ -171,9 +172,7 @@ def run_job(
         labels, infos["alias_labels"] = wh.run_stage(
             spark,
             "alias_labels",
-            lambda: prefer_real_canonical(
-                connected_components(module_alias_edges(entities))
-            ),
+            lambda: prefer_real_canonical(module_alias_labels(entities)),
             config=cc_cfg,
         )
         triples_canon = canonicalize_triples(triples_raw, labels)
@@ -199,10 +198,15 @@ def run_job(
             spark, "doc_schemas", lambda: doc_schemas_view(extracted), config=cfg
         )
 
+        # driver-sized frames (1 row, ~10 rows) are built from Arrow: the
+        # Python-list path would run a Python-worker job per frame
+        built: Dict[str, str] = {}
+
         def build_global() -> DataFrame:
-            g = global_schema(doc_schemas)
+            built["schema_json"] = canonical_json(global_schema(doc_schemas))
             return spark.createDataFrame(
-                [("global", canonical_json(g))], "scope string, schema_json string"
+                pd.DataFrame({"scope": ["global"], "schema_json": [built["schema_json"]]}),
+                "scope string, schema_json string",
             )
 
         gdf, infos["global_schema"] = wh.run_stage(spark, "global_schema", build_global, config=cfg)
@@ -210,7 +214,8 @@ def run_job(
         # M5(a) — containment triples from the global ontology (the Digraph
         # exemplar, prompts.py:1-38; rendered arrows pyecharts_renderer.py:
         # 65-67): ROOT → top-level entity → nested-object attribute.  The
-        # global schema is ONE tiny row, so derivation is driver-side.
+        # global schema is ONE tiny row, so derivation is driver-side; the
+        # checkpoint is read only when this run skipped the global stage.
         def build_containment() -> DataFrame:
             import json as _json
 
@@ -219,12 +224,17 @@ def run_job(
                 schema_to_entities,
             )
 
-            gjson = gdf.collect()[0]["schema_json"]
+            gjson = built.get("schema_json")
+            if gjson is None:
+                gjson = gdf.collect()[0]["schema_json"]
             rels = derive_containment_relations(
                 schema_to_entities(_json.loads(gjson) if gjson else {})
             )
+            cols = ["subj", "pred", "obj", "rel_type"]
             return spark.createDataFrame(
-                [(r.source, r.name, r.target, r.type) for r in rels],
+                pd.DataFrame(
+                    [(r.source, r.name, r.target, r.type) for r in rels], columns=cols
+                ),
                 "subj string, pred string, obj string, rel_type string",
             )
 

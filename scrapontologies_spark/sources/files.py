@@ -122,6 +122,11 @@ def corpus_from_files(
     UTF-8 with invalid byte sequences replaced by U+FFFD
     (``make_valid_utf8``, ANSI-safe — the deterministic analog of the
     reference's text extraction never failing a page).
+
+    Hidden files are not scanned: Spark's file index skips every file or
+    directory whose basename starts with ``_`` or ``.`` (e.g.
+    ``__init__.py``, ``.eslintrc.json``), and Spark 4.1 has no setting to
+    keep them.  Ingest such files through another reader if they matter.
     """
     langs = dict(ext_lang) if ext_lang is not None else EXT_LANG
     root = root_dir.rstrip("/")

@@ -11,21 +11,28 @@ Format: parquet in this sandbox; the writer goes through ``format(...)`` so
 an Iceberg catalog (``df.writeTo(table).using("iceberg")``) is a config
 switch, not a rewrite — no Iceberg jars ship in this container.
 
-Metrics: one row per completed stage (stage, rows, wall_ms, fingerprint)
-under ``_metrics/stage=<name>`` (overwritten per attempt — a crashed
-attempt leaves no orphan rows); fingerprint is an order-independent
-MODULAR SUM of row hashes (Σ xxhash64(row) mod 2⁶³), so cross-run output
-equality is checkable without a diff.  Sum, not xor: xor cancels rows with
-even multiplicity, so {A,A,C} and {B,B,C} would collide — exactly the
+Metrics: one row per completed stage (rows, wall_ms, fingerprint) under
+``_metrics/stage=<name>``; fingerprint is an order-independent MODULAR SUM
+of row hashes (Σ xxhash64(row) mod 2⁶³), so cross-run output equality is
+checkable without a diff.  Sum, not xor: xor cancels rows with even
+multiplicity, so {A,A,C} and {B,B,C} would collide — exactly the
 duplication bugs a dedup engine's fingerprint must catch.
 
-Lineage: one row per checkpoint FILE under ``_lineage/stage=<name>`` —
-the per-partition lineage rows of the north_rule.  The file is the durable
-partition unit (what a restarted reader re-reads); stage totals are
-derived from the same aggregation (count sums; the modular sum is
-associative), so lineage and metrics can never disagree.  Per-stage
-overwrite means a retry after a crash between lineage write and marker
-commit replaces the orphan rows instead of appending next to them.
+Lineage: one row per checkpoint FILE (file, rows, fingerprint) under
+``_lineage/stage=<name>`` — the per-partition lineage rows of the
+north_rule.  The file is the durable partition unit (what a restarted
+reader re-reads).
+
+One Spark action per commit: after the data write, a single read-back
+``groupBy(input_file_name())`` aggregate brings the per-file rows to the
+driver, and the stage totals fold out of those same rows (count sums; the
+modular sum is associative), so lineage and metrics can never disagree.
+Both side tables are then written FROM THE DRIVER with pyarrow — parquet
+whatever the stage ``fmt`` — beside the driver-local manifest markers,
+atomically (tmp file + ``os.replace``) and overwritten per attempt: a
+crash between a side-table write and the marker commit leaves rows a retry
+replaces, never orphans next to live rows.  Readers recover the ``stage``
+column from partition discovery.
 
 Resume is guarded by a CONFIG TOKEN: ``run_stage(..., config=...)`` stores
 a canonical-JSON token in the stage marker and rebuilds when the stored
@@ -39,10 +46,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from typing import Callable, Iterable, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,6 +67,12 @@ class StageInfo:
 
 
 _FP_MOD = 2 ** 63
+_LINEAGE_SCHEMA = pa.schema(
+    [("file", pa.string()), ("rows", pa.int64()), ("fingerprint", pa.int64())]
+)
+_METRICS_SCHEMA = pa.schema(
+    [("rows", pa.int64()), ("wall_ms", pa.int64()), ("fingerprint", pa.int64())]
+)
 
 # Optional hook: called as stage_observer(stage_name, "start"|"end") around
 # every non-skipped run_stage build+write.  Diagnostics only (the sf1 bench
@@ -156,6 +172,18 @@ class Warehouse:
         partition_by: Optional[Iterable[str]] = None,
         config_token: Optional[str] = None,
     ) -> StageInfo:
+        return self._write_stage(df, name, partition_by, config_token)[1]
+
+    def _write_stage(
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: Optional[Iterable[str]] = None,
+        config_token: Optional[str] = None,
+    ) -> tuple[DataFrame, StageInfo]:
+        """Write ``df`` as stage ``name`` and commit it; returns the stage
+        read back from storage (the DataFrame downstream stages consume)
+        and its StageInfo."""
         t0 = time.monotonic()
         # invalidate any prior marker BEFORE touching the data: a rebuild
         # that crashes mid-overwrite must leave the stage "incomplete" —
@@ -171,15 +199,21 @@ class Warehouse:
         if pb:
             w = w.partitionBy(*pb)
         w.save(self.path(name))
-        spark = df.sparkSession
-        out = spark.read.format(self.fmt).load(self.path(name))
-        # per-file lineage rows; stage totals fold out of the SAME rows
-        # (count sums; the modular hash-sum is associative), so _lineage
-        # and _metrics cannot disagree.  Per-file fingerprint = Σ
-        # xxhash64(row) mod 2⁶³ — multiplicity-sensitive where bit_xor
-        # cancels even-multiplicity rows (see module docstring); summed as
-        # decimal so the bigint sum cannot overflow under ANSI mode.
-        lin = (
+        # parquet schema inference is a Spark job of its own, and parquet
+        # round-trips the written schema exactly (the reader makes it
+        # nullable, as inference would), so read back under that schema.
+        # Other formats may infer other types, and partition columns keep
+        # their inferred types, so those reads still infer.
+        reader = df.sparkSession.read.format(self.fmt)
+        if self.fmt == "parquet" and not pb:
+            reader = reader.schema(df.schema)
+        out = reader.load(self.path(name))
+        # the commit's one action: per-file lineage rows to the driver.
+        # Per-file fingerprint = Σ xxhash64(row) mod 2⁶³ — multiplicity-
+        # sensitive where bit_xor cancels even-multiplicity rows (see module
+        # docstring); summed as decimal so the bigint sum cannot overflow
+        # under ANSI mode.
+        lineage = (
             out.groupBy(F.input_file_name().alias("file"))
             .agg(
                 F.count("*").alias("rows"),
@@ -190,34 +224,49 @@ class Warehouse:
                 .cast("long")
                 .alias("fingerprint"),
             )
-            .persist()
+            .collect()
         )
-        # per-stage partition dir, OVERWRITTEN per attempt: a crash between
-        # this write and the marker commit leaves rows a retry replaces,
-        # never orphans appended next to live rows.  Readers recover the
-        # `stage` column from partition discovery.
-        lin.write.mode("overwrite").format(self.fmt).save(
-            f"{self.root}/_lineage/stage={name}"
-        )
-        agg = lin.agg(
-            F.sum("rows").alias("n"),
-            F.pmod(
-                F.sum(F.col("fingerprint").cast("decimal(38,0)")),
-                F.lit(str(_FP_MOD)).cast("decimal(38,0)"),
-            )
-            .cast("long")
-            .alias("h"),
-        ).collect()[0]
-        lin.unpersist()
         info = StageInfo(
             name=name,
-            rows=agg["n"] if agg["n"] is not None else 0,
+            rows=sum(r["rows"] for r in lineage),
             wall_ms=int((time.monotonic() - t0) * 1000),
-            fingerprint=agg["h"] if agg["h"] is not None else 0,
+            fingerprint=sum(r["fingerprint"] for r in lineage) % _FP_MOD,
         )
-        self._append_metrics(spark, info)
+        self._write_side_table(
+            "_lineage", name,
+            pa.Table.from_pylist([r.asDict() for r in lineage], _LINEAGE_SCHEMA),
+        )
+        self._write_side_table(
+            "_metrics", name,
+            pa.Table.from_pylist(
+                [{"rows": info.rows, "wall_ms": info.wall_ms,
+                  "fingerprint": info.fingerprint}],
+                _METRICS_SCHEMA,
+            ),
+        )
         self._commit(info, config_token)
-        return info
+        return out, info
+
+    def _write_side_table(self, table: str, stage: str, rows: pa.Table) -> None:
+        """Driver-side parquet write of ``<root>/<table>/stage=<stage>``:
+        one file, replaced atomically (the dot-prefixed tmp file is hidden
+        from Spark's file index), then any other entry in the partition dir
+        — a previous writer's leftovers — removed, so the dir holds exactly
+        this attempt's rows."""
+        d = f"{self.root}/{table}/stage={stage}"
+        os.makedirs(d, exist_ok=True)
+        final = "part-00000.parquet"
+        tmp = f"{d}/.{final}.tmp"
+        pq.write_table(rows, tmp)
+        os.replace(tmp, f"{d}/{final}")
+        for entry in os.listdir(d):
+            if entry == final:
+                continue
+            p = f"{d}/{entry}"
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
 
     def write_bucketed(
         self,
@@ -251,19 +300,12 @@ class Warehouse:
     def read_stage(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.format(self.fmt).load(self.path(name))
 
-    def _append_metrics(self, spark: SparkSession, info: StageInfo) -> None:
-        row = [(info.rows, info.wall_ms, info.fingerprint)]
-        spark.createDataFrame(
-            row, "rows long, wall_ms long, fingerprint long"
-        ).write.mode("overwrite").format(self.fmt).save(
-            f"{self.root}/_metrics/stage={info.name}"
-        )
-
+    # side tables are driver-written parquet whatever the stage format
     def metrics(self, spark: SparkSession) -> DataFrame:
-        return spark.read.format(self.fmt).load(f"{self.root}/_metrics")
+        return spark.read.parquet(f"{self.root}/_metrics")
 
     def lineage(self, spark: SparkSession) -> DataFrame:
-        return spark.read.format(self.fmt).load(f"{self.root}/_lineage")
+        return spark.read.parquet(f"{self.root}/_lineage")
 
     # -- resumable orchestration ----------------------------------------------
 
@@ -305,9 +347,9 @@ class Warehouse:
         if stage_observer is not None:
             stage_observer(name, "start")
         try:
-            info = self.write_stage(build(), name, pb, config_token=token)
+            out, info = self._write_stage(build(), name, pb, config_token=token)
         finally:
             if stage_observer is not None:
                 stage_observer(name, "end")
             spark.sparkContext.setJobDescription(None)
-        return self.read_stage(spark, name), info
+        return out, info

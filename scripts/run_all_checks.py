@@ -14,11 +14,16 @@ passing would muddy diagnosis), and exits nonzero if ANY step failed:
   3. the three adversarial sweeps — hostile (NULL/CJK/malformed), skew
      (mass duplication + hot keys), and zero-row tables — each regenerated
      fresh, then the full registry vs DuckDB on each
+  4. the KG-job benchmark's output checks on real multi-chunk files
+     (`perfbench/run.py --workload real_multichunk`): exits 1 when the
+     job's triples, global schema or fingerprints disagree with the
+     sequential kernel replay
 
 Usage:
   python scripts/run_all_checks.py            # everything (~25-35 min)
   python scripts/run_all_checks.py --fast     # sf0.001 + skip pytest
-                                              # (oracle sweeps only, ~8 min)
+                                              # (oracle sweeps + benchmark
+                                              # checks, ~9 min)
   SPARK_GRAFT_CPUS=16 ...                     # parallelism override
 """
 from __future__ import annotations
@@ -67,6 +72,9 @@ def main() -> int:
         steps.append((f"gen:{variant}", gen))
         steps.append((f"oracle@{variant}",
                       [py, "scripts/cross_scale_check.py", out, CPUS]))
+    steps.append(("perfbench:real_multichunk",
+                  [py, "perfbench/run.py", "--workload", "real_multichunk",
+                   "--seed", "1", "--seconds", "1", "--trace", "0"]))
 
     results = []
     failed_gens: set[str] = set()

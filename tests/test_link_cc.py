@@ -20,6 +20,7 @@ from scrapontologies_spark.operators.cc import (
     canonicalize_triples,
     connected_components,
     module_alias_edges,
+    module_alias_labels,
 )
 from scrapontologies_spark.operators.link import (
     reconcile,
@@ -195,6 +196,28 @@ def test_canonicalize_and_integrity_end_to_end(spark):
         n_in = canon.filter(F.col("rel_type") == rel).count()
         n_out = ok.filter(F.col("rel_type") == rel).count()
         assert n_in == n_out, f"{rel}: {n_in} -> {n_out} lost by integrity"
+
+    # the job's closed-form star labelling == the CC reference, on these
+    # entities plus hand-made edge cases: a hot stem shared by many repos,
+    # a module id without '/' (NULL repo), and a repo named lib::x (real
+    # ids carrying the alias prefix, alone and sharing a star)
+    extra = spark.createDataFrame(
+        [(f"r{i}/pkg/utils.py", "module", "{}") for i in range(40)]
+        + [
+            ("setup.py", "module", "{}"),
+            ("lib::x/core.py", "module", "{}"),
+            ("lib::x/utils.py", "module", "{}"),
+        ],
+        ENT_SCHEMA,
+    )
+    ents = res.entities.unionByName(extra)
+    closed = set(prefer_real_canonical(module_alias_labels(ents)).collect())
+    reference = set(
+        prefer_real_canonical(connected_components(module_alias_edges(ents))).collect()
+    )
+    assert closed == reference
+    assert ("lib::x/core.py", "lib::core") in closed
+    assert ("lib::utils", "lib::x/utils.py") not in closed
     res.doc_rows.unpersist()
 
 

@@ -119,6 +119,44 @@ def test_format_switch_orc_runs_and_resumes(spark, corpus, tmp_path):
     assert {k: v.fingerprint for k, v in first.items()} == {
         k: v.fingerprint for k, v in second.items()
     }
+    # the side tables are driver-written parquet whatever the stage format,
+    # and still sum to each stage's StageInfo
+    wh = Warehouse(root, "orc")
+    metrics = {r.stage: r for r in wh.metrics(spark).collect()}
+    lineage: dict = {}
+    for r in wh.lineage(spark).collect():
+        lineage.setdefault(r.stage, []).append(r)
+    assert set(metrics) == set(lineage) == set(first)
+    for stage, info in first.items():
+        assert (metrics[stage].rows, metrics[stage].fingerprint) == (
+            info.rows, info.fingerprint
+        ), stage
+        assert sum(r.rows for r in lineage[stage]) == info.rows, stage
+        assert sum(r.fingerprint for r in lineage[stage]) % 2 ** 63 == info.fingerprint, stage
+
+
+def test_commit_spark_job_budget(spark, tmp_path):
+    """One warehouse commit launches at most 4 Spark jobs: the data write
+    (a shuffle stage + the write) and ONE read-back aggregate (a shuffle
+    stage + the collect).  Lineage and metrics are written by the driver,
+    and the read-back uses the written schema and is the DataFrame
+    run_stage returns, so no schema-inference job, no second read and no
+    Python-worker job remains."""
+    import os
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    df = spark.range(1000).repartition(4)
+    sc = spark.sparkContext
+    group = f"commit-budget-{os.getpid()}"
+    sc.setJobGroup(group, "one warehouse commit")
+    try:
+        _, info = wh.run_stage(spark, "s", lambda: df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert info.rows == 1000
+    assert len(wh.lineage(spark).collect()) == 4  # multi-file stage
+    assert len(jobs) <= 4, sorted(jobs)
 
 
 def test_salted_reconcile_job_stage_equivalence(spark, corpus, tmp_path):
