@@ -548,7 +548,9 @@ def _mask_block_spans(text: str, lang: str) -> str:
     no opener occurs.
     """
     probes = _MASK_PROBES[lang]
-    if not any(p in text for p in probes):
+    if not any(p in text for p in probes) and not (
+        lang == "c" and _C_IF0_PROBE.search(text)
+    ):
         return text
     if lang == "yaml":
         # block scalars (`run: |`, `script: >-` — every CI file's shape):
@@ -751,6 +753,9 @@ _MASKED_LANGS = frozenset(
 _PY_MASK_TOK = re.compile(r'"""|\'\'\'|#|["\']')
 _JSGO_MASK_TOK = re.compile(r"/\*|//|[\"'`]")
 _C_MASK_TOK = re.compile(r"/\*|//|[\"']|^[ \t]*#[ \t]*if[ \t]+0\b", re.M)
+# the C probe for '#if 0': every spacing _C_MASK_TOK accepts (`#  if 0`,
+# `#\tif 0`), but not a bare '#' — every file with an #include has one
+_C_IF0_PROBE = re.compile(r"^[ \t]*#[ \t]*if[ \t]+0", re.M)
 # preprocessor conditional keywords for the '#if 0' depth scan
 # (ifdef/ifndef before if — alternation is first-match)
 _C_PP_TOK = re.compile(
@@ -770,9 +775,10 @@ _RB_TERM_OK = re.compile(r"[A-Z_]\w*\Z", re.ASCII)
 _SH_TERM_OK = re.compile(r"[A-Za-z_]\w*\Z", re.ASCII)
 # shell: '#' is a comment only at line start / after whitespace (never
 # inside ${#var}); heredoc openers share the ruby branch (same group
-# structure — quote group then tag), tags may be lowercase
+# structure — quote group then tag), tags may be lowercase.  A here-string
+# `<<<word` is not a heredoc: its second '<' must not open one.
 _SH_MASK_TOK = re.compile(
-    r"(?:(?<=\s)|^)#|[\"']|<<-?(['\"]?)([A-Za-z_]\w*)\1", re.M
+    r"(?:(?<=\s)|^)#|[\"']|(?<!<)<<-?(['\"]?)([A-Za-z_]\w*)\1", re.M
 )
 # toml: '#' comments, multi-line basic/literal strings reuse the
 # triple-quote branch, single-line strings skip like everywhere else
@@ -810,7 +816,7 @@ _MASK_PROBES = {
     "go": ("/*", "`"),
     "java": ("/*", '"""'),
     "rust": ("/*", 'r"', '#"'),
-    "c": ("/*", "\\\n", "#if", "# if"),
+    "c": ("/*", "\\\n"),
     "ruby": ("=begin", "<<"),
     "shell": ("<<",),
     "yaml": ("|", ">"),
@@ -1114,10 +1120,11 @@ _SH_SOURCE = re.compile(r"^[ \t]*(?:source|\.)[ \t]+['\"]?([\w./-]+)", re.M)
 # a 'class'; ARG/ENV names → 'method' owned by the current stage
 # ('function' before the first FROM — global ARGs).  Instructions are
 # case-insensitive per spec; `#` comment lines cannot match (anchors
-# require the instruction word first).  RUN bodies are shell and are
-# never parsed — no call stream, like the shell grammar.
+# require the instruction word first); `--platform=…`-style flags before
+# the image are skipped.  RUN bodies are shell and are never parsed — no
+# call stream, like the shell grammar.
 _DOCKER_FROM = re.compile(
-    r"^[ \t]*FROM[ \t]+(\S+)(?:[ \t]+AS[ \t]+([\w.-]+))?",
+    r"^[ \t]*FROM[ \t]+(?:--\S+[ \t]+)*(\S+)(?:[ \t]+AS[ \t]+([\w.-]+))?",
     re.M | re.I | re.ASCII,
 )
 _DOCKER_ARGENV = re.compile(

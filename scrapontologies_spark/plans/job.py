@@ -3,12 +3,22 @@
 Stage DAG (each boundary = warehouse checkpoint + manifest + metrics row,
 so a killed run resumes mid-pipeline with identical output — north_rule):
 
-  corpus → chunks → {triples_raw, doc_entities, doc_schemas, global_schema}
-         → entities (modules ∪ symbols, reconciled against any existing
-           entities table — the MERGE INTO analog of J1/M6)
-         → alias_labels (closed-form star labelling of import-stem aliases:
-           every component is a star centred on lib::<stem>, so no CC rounds)
-         → triples (canonicalized + referential integrity)
+  corpus → extracted (one fused mapInPandas pass), then three independent
+  chains at the same time, each on a driver thread of its own:
+    triples_raw
+    doc_entities → entities (modules ∪ symbols, reconciled against any
+        existing entities table — the MERGE INTO analog of J1/M6)
+      → alias_labels (closed-form star labelling of import-stem aliases:
+        every component is a star centred on lib::<stem>, so no CC rounds)
+      → entities_canonical
+    doc_schemas → global_schema → containment_triples
+  → triples (canonicalized + referential integrity), once triples_raw,
+    alias_labels and entities_canonical are written.
+
+Each stage returns as soon as its data is written; its commit bookkeeping
+(read-back lineage aggregate, side tables, marker) runs on the
+warehouse's committer thread while the next stage writes (sources/io.py).
+:func:`run_job` returns only after every commit.
 
 Shuffle layout per BASELINE north_star: explicit repartition(repo, lang)
 before the link stage; AQE + skew-join on (session.py); the deleted-ids /
@@ -27,11 +37,14 @@ Local:  python -m scrapontologies_spark.plans.job <warehouse_root> <n_rows>
 from __future__ import annotations
 
 import sys
+import threading
+from concurrent.futures import Future, ThreadPoolExecutor
 from typing import Dict, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..functions.semantics import canonical_json
 from ..operators.cc import (
@@ -50,6 +63,17 @@ from ..operators.extract import (
 from ..operators.link import reconcile, referential_integrity
 from ..operators.schema_merge import global_schema
 from ..sources.io import StageInfo, Warehouse
+
+# every stage in DAG order: the order of run_job's result
+STAGES = (
+    "extracted", "triples_raw", "doc_entities", "entities", "alias_labels",
+    "entities_canonical", "triples", "doc_schemas", "global_schema",
+    "containment_triples",
+)
+
+
+class _Aborted(Exception):
+    """Raised instead of starting a stage once another stage has failed."""
 
 
 def run_job(
@@ -83,7 +107,10 @@ def run_job(
 
     salt = pick(salt, resolve_profile(scale).reconcile_salt)
     wh = Warehouse(warehouse_root, fmt)
-    infos: Dict[str, StageInfo] = {}
+    commits: Dict[str, Future] = {}
+    errors: list = []
+    errors_lock = threading.Lock()
+    failed = threading.Event()
 
     # Resume guard: each stage's token covers the parameters ITS output
     # depends on — no more (a whole-DAG token would re-run the mapInPandas
@@ -119,84 +146,67 @@ def run_job(
     }
     cc_cfg = {**ent_cfg, "with_cc": with_cc}
 
-    # Fused one-pass extraction: chunk/fold/schema/triple rows from ONE
-    # narrow mapInPandas over the scan (operators/extract.py) — the 100 TB
-    # hot path has zero shuffles; the warehouse write is the only wide cost
-    # and doubles as the resume checkpoint.
-    extracted, infos["extracted"] = wh.run_stage(
-        spark,
-        "extracted",
-        lambda: extract_document_rows(
-            corpus, chunk_bytes, with_schemas,
-            allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
-        ),
-        config=cfg,
-    )
+    def fail(exc: BaseException) -> None:
+        # first error wins; a branch that stopped because of it is not one
+        with errors_lock:
+            if not isinstance(exc, _Aborted) and exc not in errors:
+                errors.append(exc)
+        failed.set()
 
-    triples_raw, infos["triples_raw"] = wh.run_stage(
-        spark, "triples_raw", lambda: triples_view(extracted), config=cfg
-    )
-
-    doc_entities, infos["doc_entities"] = wh.run_stage(
-        spark, "doc_entities", lambda: doc_entities_view(extracted), config=cfg
-    )
-
-    def build_entities() -> DataFrame:
-        symbols = doc_entities.select(
-            F.concat(
-                F.concat_ws("/", "repo", "path"), F.lit("::"), F.col("entity_name")
-            ).alias("id"),
-            F.col("entity_type").alias("type"),
-            F.col("attributes"),
+    def stage(name: str, build, config) -> DataFrame:
+        """Write stage ``name`` in this thread; its commit is queued."""
+        if failed.is_set():
+            raise _Aborted(name)
+        out, commits[name] = wh.run_stage_nowait(spark, name, build, config=config)
+        commits[name].add_done_callback(
+            lambda f: f.exception() is None or fail(f.exception())
         )
-        # explicit repartition(repo, lang) ahead of the link stage
-        # (north_star) — co-locates a repo's symbols for reconcile/CC
-        new = (
-            module_entities_view(extracted.repartition("repo", "lang"))
-            .select("id", "type", "attributes")
-            .unionByName(symbols)
+        return out
+
+    def entity_chain():
+        doc_entities = stage(
+            "doc_entities", lambda: doc_entities_view(extracted), cfg
         )
-        # MERGE-INTO analog: reconcile against a previous run's entities
-        # table when present (J1 full-outer + A1 attribute merge), salted
-        # per the north_star skew mandate unless explicitly disabled
-        if wh.is_complete("entities_prev"):
-            existing = wh.read_stage(spark, "entities_prev")
-            return reconcile(existing, new, salt=8 if salt is None else salt)
-        return new
 
-    entities, infos["entities"] = wh.run_stage(
-        spark, "entities", build_entities, config=ent_cfg
-    )
+        def build_entities() -> DataFrame:
+            symbols = doc_entities.select(
+                F.concat(
+                    F.concat_ws("/", "repo", "path"), F.lit("::"), F.col("entity_name")
+                ).alias("id"),
+                F.col("entity_type").alias("type"),
+                F.col("attributes"),
+            )
+            # explicit repartition(repo, lang) ahead of the link stage
+            # (north_star) — co-locates a repo's symbols for reconcile/CC
+            new = (
+                module_entities_view(extracted.repartition("repo", "lang"))
+                .select("id", "type", "attributes")
+                .unionByName(symbols)
+            )
+            # MERGE-INTO analog: reconcile against a previous run's entities
+            # table when present (J1 full-outer + A1 attribute merge), salted
+            # per the north_star skew mandate unless explicitly disabled
+            if wh.is_complete("entities_prev"):
+                existing = wh.read_stage(spark, "entities_prev")
+                return reconcile(existing, new, salt=8 if salt is None else salt)
+            return new
 
-    if with_cc:
-        labels, infos["alias_labels"] = wh.run_stage(
-            spark,
+        entities = stage("entities", build_entities, ent_cfg)
+        if not with_cc:
+            return None, entities
+        labels = stage(
             "alias_labels",
             lambda: prefer_real_canonical(module_alias_labels(entities)),
-            config=cc_cfg,
+            cc_cfg,
         )
-        triples_canon = canonicalize_triples(triples_raw, labels)
-        entities_final, infos["entities_canonical"] = wh.run_stage(
-            spark,
+        return labels, stage(
             "entities_canonical",
             lambda: canonicalize_entities(entities, labels),
-            config=cc_cfg,
+            cc_cfg,
         )
-    else:
-        triples_canon = triples_raw
-        entities_final = entities
 
-    triples, infos["triples"] = wh.run_stage(
-        spark,
-        "triples",
-        lambda: referential_integrity(triples_canon, entities_final),
-        config=cc_cfg,
-    )
-
-    if with_schemas:
-        doc_schemas, infos["doc_schemas"] = wh.run_stage(
-            spark, "doc_schemas", lambda: doc_schemas_view(extracted), config=cfg
-        )
+    def schema_chain() -> None:
+        doc_schemas = stage("doc_schemas", lambda: doc_schemas_view(extracted), cfg)
 
         # driver-sized frames (1 row, ~10 rows) are built from Arrow: the
         # Python-list path would run a Python-worker job per frame
@@ -209,7 +219,7 @@ def run_job(
                 "scope string, schema_json string",
             )
 
-        gdf, infos["global_schema"] = wh.run_stage(spark, "global_schema", build_global, config=cfg)
+        gdf = stage("global_schema", build_global, cfg)
 
         # M5(a) — containment triples from the global ontology (the Digraph
         # exemplar, prompts.py:1-38; rendered arrows pyecharts_renderer.py:
@@ -238,11 +248,57 @@ def run_job(
                 "subj string, pred string, obj string, rel_type string",
             )
 
-        _, infos["containment_triples"] = wh.run_stage(
-            spark, "containment_triples", build_containment, config=cfg
-        )
+        stage("containment_triples", build_containment, cfg)
 
-    return infos
+    try:
+        # Fused one-pass extraction: chunk/fold/schema/triple rows from ONE
+        # narrow mapInPandas over the scan (operators/extract.py) — the
+        # 100 TB hot path has zero shuffles; the warehouse write is the only
+        # wide cost and doubles as the resume checkpoint.
+        extracted = stage(
+            "extracted",
+            lambda: extract_document_rows(
+                corpus, chunk_bytes, with_schemas,
+                allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
+            ),
+            cfg,
+        )
+        # the three chains share nothing but `extracted`; each runs on a
+        # driver thread that carries this thread's Spark job group and
+        # description.  Leaving the block waits for every started branch.
+        with ThreadPoolExecutor(max_workers=3, thread_name_prefix="run_job") as pool:
+
+            def branch(chain) -> Future:
+                def body():
+                    try:
+                        return chain()
+                    except BaseException as exc:
+                        fail(exc)
+                        raise
+
+                return pool.submit(inheritable_thread_target(spark)(body))
+
+            raw = branch(lambda: stage("triples_raw", lambda: triples_view(extracted), cfg))
+            linked = branch(entity_chain)
+            if with_schemas:
+                branch(schema_chain)
+            triples_raw = raw.result()
+            labels, entities_final = linked.result()
+            triples_canon = (
+                canonicalize_triples(triples_raw, labels) if with_cc else triples_raw
+            )
+            stage(
+                "triples",
+                lambda: referential_integrity(triples_canon, entities_final),
+                cc_cfg,
+            )
+    except BaseException as exc:
+        fail(exc)
+    finally:
+        wh.drain_commits()
+    if errors:
+        raise errors[0]
+    return {name: commits[name].result() for name in STAGES if name in commits}
 
 
 def _arg_parser() -> "argparse.ArgumentParser":

@@ -34,6 +34,21 @@ crash between a side-table write and the marker commit leaves rows a retry
 replaces, never orphans next to live rows.  Readers recover the ``stage``
 column from partition discovery.
 
+A commit is split in two.  The data write runs in the CALLER's thread
+(the old marker is removed first, as ever).  The bookkeeping — the
+read-back aggregate, ``_lineage``, ``_metrics`` and the marker — runs on
+the Warehouse's one committer thread, first in, first out, under the
+Spark job group and description the caller had at its write.  A stage is
+written only after the stages it reads are written, so FIFO order makes
+its marker land after theirs: a crash can never leave a marker whose
+inputs are unmarked.  A commit queued behind a failed one fails too.
+``run_stage_nowait`` hands back the read-back DataFrame as soon as the
+data is written, with the commit as a future; ``run_stage`` is that plus
+a wait on the commit.  ``wall_ms`` runs from the write's start to the
+marker commit, so it includes any wait behind earlier commits.  Callers
+may run stages from several threads at once (``plans/job.py`` does), so
+``stage_observer`` is called from several threads, with overlapping spans.
+
 Resume is guarded by a CONFIG TOKEN: ``run_stage(..., config=...)`` stores
 a canonical-JSON token in the stage marker and rebuilds when the stored
 token differs — re-running a job with changed parameters (filters,
@@ -47,7 +62,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
+from collections import deque
+from concurrent.futures import Future
 from dataclasses import dataclass
 from typing import Callable, Iterable, Optional
 
@@ -55,6 +73,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 @dataclass
@@ -75,9 +94,12 @@ _METRICS_SCHEMA = pa.schema(
 )
 
 # Optional hook: called as stage_observer(stage_name, "start"|"end") around
-# every non-skipped run_stage build+write.  Diagnostics only (the sf1 bench
-# installs a heap sampler here to attribute driver-JVM peaks per stage);
-# the job's behavior must never depend on it.
+# every non-skipped stage's build+write, in the thread that runs it (the
+# bookkeeping is outside the span).  run_job runs stages on several
+# threads, so calls come from several threads and spans overlap.
+# Diagnostics only (the sf1 bench installs a heap sampler here to
+# attribute driver-JVM peaks per stage); the job's behavior must never
+# depend on it.
 stage_observer: Optional[Callable[[str, str], None]] = None
 
 
@@ -123,6 +145,11 @@ class Warehouse:
         self.root = root.rstrip("/")
         self.fmt = fmt
         os.makedirs(f"{self.root}/_manifest", exist_ok=True)
+        # FIFO commit bookkeeping: one committer thread, started on demand
+        # and gone once the queue is empty
+        self._commit_lock = threading.Lock()
+        self._commit_queue: deque = deque()
+        self._committer: Optional[threading.Thread] = None
 
     # -- manifest ------------------------------------------------------------
 
@@ -172,7 +199,7 @@ class Warehouse:
         partition_by: Optional[Iterable[str]] = None,
         config_token: Optional[str] = None,
     ) -> StageInfo:
-        return self._write_stage(df, name, partition_by, config_token)[1]
+        return self._write_stage(df, name, partition_by, config_token)[1].result()
 
     def _write_stage(
         self,
@@ -180,10 +207,10 @@ class Warehouse:
         name: str,
         partition_by: Optional[Iterable[str]] = None,
         config_token: Optional[str] = None,
-    ) -> tuple[DataFrame, StageInfo]:
-        """Write ``df`` as stage ``name`` and commit it; returns the stage
-        read back from storage (the DataFrame downstream stages consume)
-        and its StageInfo."""
+    ) -> tuple[DataFrame, Future]:
+        """Write ``df`` as stage ``name`` in this thread and queue its
+        commit; returns the stage read back from storage (the DataFrame
+        downstream stages consume) and the commit's future StageInfo."""
         t0 = time.monotonic()
         # invalidate any prior marker BEFORE touching the data: a rebuild
         # that crashes mid-overwrite must leave the stage "incomplete" —
@@ -204,10 +231,22 @@ class Warehouse:
         # nullable, as inference would), so read back under that schema.
         # Other formats may infer other types, and partition columns keep
         # their inferred types, so those reads still infer.
-        reader = df.sparkSession.read.format(self.fmt)
+        spark = df.sparkSession
+        reader = spark.read.format(self.fmt)
         if self.fmt == "parquet" and not pb:
             reader = reader.schema(df.schema)
         out = reader.load(self.path(name))
+        # wrapped here, so the committer runs the read-back under this
+        # thread's job group and description
+        bookkeep = inheritable_thread_target(spark)(
+            lambda: self._bookkeep(out, name, t0, config_token)
+        )
+        return out, self._enqueue_commit(bookkeep)
+
+    def _bookkeep(
+        self, out: DataFrame, name: str, t0: float, config_token: Optional[str]
+    ) -> StageInfo:
+        """The committer-thread half of a commit: lineage, metrics, marker."""
         # the commit's one action: per-file lineage rows to the driver.
         # Per-file fingerprint = Σ xxhash64(row) mod 2⁶³ — multiplicity-
         # sensitive where bit_xor cancels even-multiplicity rows (see module
@@ -245,7 +284,47 @@ class Warehouse:
             ),
         )
         self._commit(info, config_token)
-        return out, info
+        return info
+
+    def _enqueue_commit(self, bookkeep: Callable[[], StageInfo]) -> Future:
+        fut: Future = Future()
+        with self._commit_lock:
+            self._commit_queue.append((bookkeep, fut))
+            if self._committer is None:
+                self._committer = threading.Thread(
+                    target=self._run_commits, name="warehouse-committer", daemon=True
+                )
+                self._committer.start()
+        return fut
+
+    def _run_commits(self) -> None:
+        failed: Optional[BaseException] = None
+        while True:
+            with self._commit_lock:
+                if not self._commit_queue:
+                    self._committer = None
+                    return
+                bookkeep, fut = self._commit_queue.popleft()
+            if failed is not None:
+                # a stage queued behind a failed commit may read it: its
+                # marker must not land without the upstream one
+                fut.set_exception(
+                    RuntimeError(f"not committed: an earlier commit failed ({failed!r})")
+                )
+                continue
+            try:
+                fut.set_result(bookkeep())
+            except BaseException as exc:
+                failed = exc
+                fut.set_exception(exc)
+
+    def drain_commits(self) -> None:
+        """Wait until every queued commit has run and the committer thread
+        has exited."""
+        with self._commit_lock:
+            committer = self._committer
+        if committer is not None:
+            committer.join()
 
     def _write_side_table(self, table: str, stage: str, rows: pa.Table) -> None:
         """Driver-side parquet write of ``<root>/<table>/stage=<stage>``:
@@ -323,12 +402,28 @@ class Warehouse:
         the stored DataFrame (so downstream stages read the checkpoint, not
         the lineage — restart-safe).  A marker from a run with different
         parameters triggers a rebuild instead of serving stale data.
+        Returns once the stage's marker is committed.
 
         ``partition_by`` is folded into the token: the stage's on-disk
         LAYOUT is part of its output (partition pruning, bucketed-join
         co-location), so changing it must rebuild rather than silently
         serve the old layout — the same stale-checkpoint class the config
         token exists to prevent."""
+        out, commit = self.run_stage_nowait(spark, name, build, partition_by, config)
+        return out, commit.result()
+
+    def run_stage_nowait(
+        self,
+        spark: SparkSession,
+        name: str,
+        build: Callable[[], DataFrame],
+        partition_by: Optional[Iterable[str]] = None,
+        config=None,
+    ) -> tuple[DataFrame, Future]:
+        """:meth:`run_stage` that returns as soon as the data is written:
+        the read-back DataFrame and a future of the StageInfo, resolved
+        when the committer thread has committed the marker (already
+        resolved for a skipped stage)."""
         # materialize once: a generator ``partition_by`` consumed here would
         # read as exhausted-but-truthy in write_stage and silently write
         # unpartitioned while the token records the requested layout
@@ -336,10 +431,11 @@ class Warehouse:
         token = _config_token({"cfg": config, "partition_by": pb, "fmt": self.fmt})
         meta = self._read_marker(name)
         if meta is not None and meta.get("config") == token:
-            return (
-                self.read_stage(spark, name),
-                StageInfo(name, meta["rows"], 0, meta["fingerprint"], skipped=True),
+            done: Future = Future()
+            done.set_result(
+                StageInfo(name, meta["rows"], 0, meta["fingerprint"], skipped=True)
             )
+            return self.read_stage(spark, name), done
         # tag the Spark UI / event log with the warehouse stage name, and
         # tell any installed observer (scripts/sf1_bench.py heap profiler)
         # which stage the jobs about to run belong to
@@ -347,9 +443,8 @@ class Warehouse:
         if stage_observer is not None:
             stage_observer(name, "start")
         try:
-            out, info = self._write_stage(build(), name, pb, config_token=token)
+            return self._write_stage(build(), name, pb, config_token=token)
         finally:
             if stage_observer is not None:
                 stage_observer(name, "end")
             spark.sparkContext.setJobDescription(None)
-        return out, info

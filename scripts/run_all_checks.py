@@ -18,11 +18,16 @@ passing would muddy diagnosis), and exits nonzero if ANY step failed:
      (`perfbench/run.py --workload real_multichunk`): exits 1 when the
      job's triples, global schema or fingerprints disagree with the
      sequential kernel replay
+  5. (full mode only) the same checks on a whole `run_job` with a
+     reconcile (`perfbench/run.py --workload incremental_merge`) — the
+     only bench workload that runs the concurrent stage DAG; it also
+     exits 1 when the entity ids disagree with the replay
 
 Usage:
   python scripts/run_all_checks.py            # everything (~25-35 min)
-  python scripts/run_all_checks.py --fast     # sf0.001 + skip pytest
-                                              # (oracle sweeps + benchmark
+  python scripts/run_all_checks.py --fast     # sf0.001, skip pytest and
+                                              # incremental_merge (oracle
+                                              # sweeps + real_multichunk
                                               # checks, ~9 min)
   SPARK_GRAFT_CPUS=16 ...                     # parallelism override
 """
@@ -72,9 +77,11 @@ def main() -> int:
         steps.append((f"gen:{variant}", gen))
         steps.append((f"oracle@{variant}",
                       [py, "scripts/cross_scale_check.py", out, CPUS]))
-    steps.append(("perfbench:real_multichunk",
-                  [py, "perfbench/run.py", "--workload", "real_multichunk",
-                   "--seed", "1", "--seconds", "1", "--trace", "0"]))
+    workloads = ["real_multichunk"] if fast else ["real_multichunk", "incremental_merge"]
+    for workload in workloads:
+        steps.append((f"perfbench:{workload}",
+                      [py, "perfbench/run.py", "--workload", workload,
+                       "--seed", "1", "--seconds", "1", "--trace", "0"]))
 
     results = []
     failed_gens: set[str] = set()

@@ -186,17 +186,20 @@ def _jvm_heap_mb(spark) -> int:
 class _HeapProfiler:
     """Per-warehouse-stage driver-JVM heap attribution (VERDICT r03 ask #4:
     'which stage holds the 34 GB').  Installed as sources.io.stage_observer;
-    a daemon thread samples used heap every 0.5 s and records the max seen
-    while each stage is current ('peak' — includes un-collected garbage,
-    i.e. allocation pressure), plus the heap right after the stage's write
-    completes following a System.gc() ('live' — what the stage actually
-    RETAINS: caches, localCheckpoint blocks, broadcast state)."""
+    a daemon thread samples used heap every 0.5 s and raises the max seen
+    ('peak' — includes un-collected garbage, i.e. allocation pressure) of
+    every stage current at the sample, plus the heap right after each
+    stage's write completes following a System.gc() ('live' — what is
+    RETAINED then: caches, localCheckpoint blocks, broadcast state).
+    run_job runs independent stages at the same time, so stages running
+    together share their peaks, and a stage's 'live' includes what the
+    stages still running with it hold."""
 
     def __init__(self, spark):
         import threading
 
         self.spark = spark
-        self.current: "str | None" = None
+        self.current: set[str] = set()
         self.peak: dict[str, int] = {}
         self.live: dict[str, int] = {}
         self._stop = threading.Event()
@@ -205,8 +208,9 @@ class _HeapProfiler:
 
     def _sample(self) -> None:
         while not self._stop.wait(0.5):
-            cur = self.current
-            if cur is not None:
+            # a copy: stage threads add and remove names while we sample
+            cur = list(self.current)
+            if cur:
                 try:
                     mb = _jvm_heap_mb(self.spark)
                 except Exception:
@@ -216,15 +220,16 @@ class _HeapProfiler:
                     if self._stop.is_set():
                         return
                     continue
-                if mb > self.peak.get(cur, 0):
-                    self.peak[cur] = mb
+                for name in cur:
+                    if mb > self.peak.get(name, 0):
+                        self.peak[name] = mb
 
     def __call__(self, name: str, event: str) -> None:
         if event == "start":
             self.peak.setdefault(name, _jvm_heap_mb(self.spark))
-            self.current = name
+            self.current.add(name)
         else:
-            self.current = None
+            self.current.discard(name)
             self.spark._jvm.java.lang.System.gc()
             time.sleep(0.3)  # let the concurrent collector settle
             self.live[name] = _jvm_heap_mb(self.spark)

@@ -34,6 +34,8 @@ entities there, so they must not here either.
 
 from __future__ import annotations
 
+import pytest
+
 from scrapontologies_spark.functions.code_gazetteer import (
     _mask_block_spans,
     chunk_text,
@@ -431,6 +433,17 @@ def test_c_if0_nested_conditionals_mask_to_matching_endif():
         "int real(void) { return 1; }\n"
     )
     assert _decls("c", src) == [("function", "real", "")]
+
+
+@pytest.mark.parametrize("opener", ["#  if 0", "#\tif 0", "  #if 0"])
+def test_c_if0_probe_accepts_spaced_directives(opener):
+    # no '/*' and no backslash-newline: only the '#if 0' probe can admit
+    # the file to the mask scan
+    src = (
+        f"{opener}\nint dead_fn(void) {{ return 0; }}\n#endif\n"
+        "int live(void) { return 1; }\n"
+    )
+    assert _decls("c", src) == [("function", "live", "")]
 
 
 def test_c_ifdef_code_still_extracts():

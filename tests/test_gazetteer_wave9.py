@@ -188,3 +188,26 @@ def test_docker_copy_heredoc_masks():
         ("class", "b", ""),
         ("method", "REAL", "b"),
     ]
+
+
+# --- ADVICE regressions: here-strings and FROM flags ------------------------
+
+
+def test_shell_here_string_does_not_open_a_heredoc():
+    # `<<<"word"` is a here-string: its second '<' once opened a heredoc
+    # tagged `word` that masked to the end of the chunk
+    src = 'grep foo <<<"word"\nfunction after_here() {\n  echo hi\n}\n'
+    assert _rows("shell", src) == [("function", "after_here", "")]
+
+
+def test_docker_from_flags_are_skipped():
+    src = (
+        "FROM --platform=$BUILDPLATFORM golang:1.22 AS build\n"
+        "ARG REV\n"
+        "RUN go build\n"
+    )
+    assert _rows("docker", src) == [
+        ("import", "golang", ""),
+        ("class", "build", ""),
+        ("method", "REV", "build"),
+    ]

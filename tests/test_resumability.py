@@ -5,10 +5,12 @@ stages and produce byte-identical outputs to an uninterrupted run
 from __future__ import annotations
 
 import shutil
+import threading
 
 import pytest
 
 from scrapontologies_spark.plans.job import run_job
+from scrapontologies_spark.sources import io as wh_io
 from scrapontologies_spark.sources.corpus import corpus_df
 from scrapontologies_spark.sources.io import Warehouse
 
@@ -141,7 +143,8 @@ def test_commit_spark_job_budget(spark, tmp_path):
     stage + the collect).  Lineage and metrics are written by the driver,
     and the read-back uses the written schema and is the DataFrame
     run_stage returns, so no schema-inference job, no second read and no
-    Python-worker job remains."""
+    Python-worker job remains.  The read-back runs on the committer thread
+    under the caller's job group, so it is counted here."""
     import os
 
     wh = Warehouse(str(tmp_path / "wh"))
@@ -151,6 +154,10 @@ def test_commit_spark_job_budget(spark, tmp_path):
     sc.setJobGroup(group, "one warehouse commit")
     try:
         _, info = wh.run_stage(spark, "s", lambda: df)
+        # standalone run_stage waits for its own commit: the marker and the
+        # _metrics row exist the moment it returns
+        assert wh.is_complete("s")
+        assert os.path.exists(f"{wh.root}/_metrics/stage=s/part-00000.parquet")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
@@ -434,3 +441,182 @@ def test_file_uri_warehouse_root_resolves_to_posix(spark, tmp_path):
     assert Warehouse(posix_root).is_complete("s")
     with pytest.raises(NotImplementedError):
         Warehouse("file://otherhost/data/wh")
+
+
+# --- the concurrent stage DAG and pipelined commits -------------------------
+
+# the stages each stage reads (run_job's DAG)
+_READS = {
+    "triples_raw": {"extracted"},
+    "doc_entities": {"extracted"},
+    "entities": {"extracted", "doc_entities"},
+    "alias_labels": {"entities"},
+    "entities_canonical": {"entities", "alias_labels"},
+    "triples": {"triples_raw", "alias_labels", "entities_canonical"},
+    "doc_schemas": {"extracted"},
+    "global_schema": {"doc_schemas"},
+    "containment_triples": {"global_schema"},
+}
+
+
+def _fingerprints(infos):
+    return {name: (i.rows, i.fingerprint) for name, i in infos.items()}
+
+
+@pytest.fixture(scope="module")
+def clean_fingerprints(spark, tmp_path_factory):
+    """Stage rows and fingerprints of an undisturbed run over the corpus
+    fixture's rows."""
+    corpus = corpus_df(spark, 60)
+    root = str(tmp_path_factory.mktemp("clean") / "wh")
+    return _fingerprints(run_job(spark, corpus, root, chunk_bytes=512))
+
+
+def _job_threads():
+    return [t.name for t in threading.enumerate()
+            if t.name.startswith(("run_job", "warehouse-committer"))]
+
+
+def test_schema_chain_overlaps_entity_chain(spark, corpus, tmp_path, monkeypatch):
+    """The schema chain does not wait for the entity chain: doc_schemas
+    starts before entities ends.  ``entities`` gives it 30 s to start — a
+    sequential DAG reaches doc_schemas only after ``triples``."""
+    events = []
+    schemas_started = threading.Event()
+
+    def observer(stage, event):
+        events.append((stage, event))
+        if (stage, event) == ("doc_schemas", "start"):
+            schemas_started.set()
+        if (stage, event) == ("entities", "start"):
+            schemas_started.wait(timeout=30)
+
+    monkeypatch.setattr(wh_io, "stage_observer", observer)
+    run_job(spark, corpus, str(tmp_path / "wh"), chunk_bytes=512)
+    assert events.index(("doc_schemas", "start")) < events.index(("entities", "end"))
+
+
+def test_commit_bookkeeping_runs_behind_downstream_writes(
+    spark, corpus, tmp_path, monkeypatch, clean_fingerprints
+):
+    """extracted's bookkeeping is held until a downstream stage starts: a
+    job that waited for each commit before the next write would time out
+    here.  The outputs are those of an undisturbed run."""
+    downstream = threading.Event()
+
+    def observer(stage, event):
+        if event == "start" and stage != "extracted":
+            downstream.set()
+
+    real = Warehouse._write_side_table
+
+    def held(self, table, stage, rows):
+        if (table, stage) == ("_lineage", "extracted") and not downstream.wait(timeout=30):
+            raise TimeoutError("extracted's commit held back every downstream stage")
+        real(self, table, stage, rows)
+
+    monkeypatch.setattr(Warehouse, "_write_side_table", held)
+    monkeypatch.setattr(wh_io, "stage_observer", observer)
+    infos = run_job(spark, corpus, str(tmp_path / "wh"), chunk_bytes=512)
+    assert downstream.is_set()
+    assert _fingerprints(infos) == clean_fingerprints
+    assert not _job_threads()
+
+
+def test_markers_land_after_the_markers_of_their_inputs(
+    spark, corpus, tmp_path, monkeypatch
+):
+    order = []
+    real = Warehouse._commit
+
+    def recording(self, info, config_token=None):
+        real(self, info, config_token)
+        order.append(info.name)
+
+    monkeypatch.setattr(Warehouse, "_commit", recording)
+    infos = run_job(spark, corpus, str(tmp_path / "wh"), chunk_bytes=512)
+    assert sorted(order) == sorted(infos) == sorted(["extracted", *_READS])
+    for stage, inputs in _READS.items():
+        for inp in inputs:
+            assert order.index(inp) < order.index(stage), (inp, stage, order)
+
+
+def test_failing_branch_raises_and_keeps_completed_stages(
+    spark, corpus, tmp_path, monkeypatch, clean_fingerprints
+):
+    """A build that raises in the schema chain fails the job with that
+    error once the other branches and every pending commit are done.
+    Stages already written keep valid markers, and a rerun skips them and
+    ends where a clean run does."""
+    import scrapontologies_spark.plans.job as job_mod
+
+    class Boom(RuntimeError):
+        pass
+
+    def boom(_doc_schemas):
+        raise Boom("global schema")
+
+    root = str(tmp_path / "wh")
+    monkeypatch.setattr(job_mod, "global_schema", boom)
+    with pytest.raises(Boom):
+        run_job(spark, corpus, root, chunk_bytes=512)
+    assert not _job_threads()
+    monkeypatch.undo()
+
+    wh = Warehouse(root)
+    done = {s for s in clean_fingerprints if wh.is_complete(s)}
+    assert {"extracted", "doc_schemas"} <= done
+    assert not done & {"global_schema", "containment_triples"}
+    for s in done:
+        meta = wh._read_marker(s)
+        assert (meta["rows"], meta["fingerprint"]) == clean_fingerprints[s], s
+
+    rerun = run_job(spark, corpus, root, chunk_bytes=512)
+    assert {s for s, i in rerun.items() if i.skipped} == done
+    assert _fingerprints(rerun) == clean_fingerprints
+
+
+def test_commit_queue_is_fifo_under_contention(tmp_path):
+    """Many threads queue commits while the committer starts and exits:
+    every commit runs once, each thread's commits run in its order, a
+    commit queued behind a failed one fails, and drain_commits leaves no
+    committer behind."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    ran = []
+
+    def producer(t):
+        futs = []
+        for i in range(200):
+            futs.append(wh._enqueue_commit(lambda t=t, i=i: ran.append((t, i)) or i))
+            time.sleep(0.0002 * (i % 3))  # let the queue drain and the committer exit
+        return futs
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            futs = [f for fs in pool.map(producer, range(16)) for f in fs]
+        assert [f.result(timeout=60) for f in futs] == list(range(200)) * 16
+    finally:
+        sys.setswitchinterval(switch)
+    wh.drain_commits()
+    assert sorted(ran) == [(t, i) for t in range(16) for i in range(200)]
+    for t in range(16):
+        assert [i for u, i in ran if u == t] == list(range(200))
+    assert not _job_threads()
+
+    # a failed commit fails the ones queued behind it, not later ones
+    gate = threading.Event()
+    first = wh._enqueue_commit(lambda: gate.wait(10) and 1 / 0)
+    second = wh._enqueue_commit(lambda: "committed")
+    gate.set()
+    with pytest.raises(ZeroDivisionError):
+        first.result(timeout=10)
+    with pytest.raises(RuntimeError, match="earlier commit failed"):
+        second.result(timeout=10)
+    wh.drain_commits()
+    assert wh._enqueue_commit(lambda: "committed").result(timeout=10) == "committed"
