@@ -107,15 +107,8 @@ class CorpusExtractor:
             self.corpus, self.chunk_bytes, with_schemas=True, emit_chunks=False,
             allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
             with_entities=False, with_triples=False,
-        ).persist()
-        try:
-            # single-Python-stage cache fill: the reduce's partial
-            # mapInPandas must not chain onto the extraction mapInPandas
-            # in one task pipeline (~4× slower, see plans/pipeline.py)
-            doc_rows.count()
-            return global_schema(doc_schemas_view(doc_rows))
-        finally:
-            doc_rows.unpersist()
+        )
+        return global_schema(doc_schemas_view(doc_rows))
 
     def generate_entities_json_schema(self) -> Dict[str, Any]:
         """extractor.py:117-125 — (re)generate and return the JSON schema."""

@@ -2,14 +2,14 @@
 
 One Arrow-batched ``mapInPandas`` pass fuses the chunker (S1 fan-out: one
 file row → N chunk rows, the "PDF → pages" analog of pdf_parser.py:54-108)
-with M1 mention detection — no shuffle between them, and Catalyst pipelines
-the pass with the upstream scan.  Python is entered once per input batch
-(the sanctioned slow path per SURVEY §2.10); everything downstream of this
-stage (explode, triple derivation, joins) is JVM-side.
+with M1 mention detection and every other per-document step — no shuffle
+between them, and Catalyst pipelines the pass with the upstream scan.
+Python is entered once per input batch (the sanctioned slow path per SURVEY
+§2.10); everything downstream of this stage (explode, joins, the views
+below) is JVM-side.
 
-Output: one row per chunk with the per-chunk payload (the "page JSON
-answer"), the per-chunk schema digest, and the mention list as a JSON array
-for JVM-side ``from_json`` + ``explode``.
+Output: tall rows discriminated by ``kind`` (see
+:func:`extract_document_rows`); the ``*_view`` functions select one kind.
 
 Scale notes (100 TB design point):
 - chunk ids are byte offsets → stable across reruns/partitioning, so the
@@ -25,7 +25,7 @@ import json
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,70 +47,7 @@ from ..functions.semantics import (
     sha256_hex,
 )
 
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("commit", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("sha256", T.StringType()),
-        T.StructField("chunk_id", T.LongType()),
-        T.StructField("payload_json", T.StringType()),
-        T.StructField("schema_json", T.StringType()),
-        T.StructField("mentions_json", T.StringType()),
-    ]
-)
-
 MENTION_STRUCT = "array<struct<kind:string,name:string,owner:string>>"
-
-
-def extract_chunks(
-    corpus: DataFrame,
-    chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-    allowed_kinds=None,
-    allowed_terms=None,
-) -> DataFrame:
-    """corpus(repo,path,commit,lang,content) → chunk rows with payload,
-    schema digest and mentions.  Narrow transformation (no shuffle).
-    ``allowed_kinds``/``allowed_terms`` — P8 extraction allowlist
-    (code_gazetteer.extract_mentions)."""
-    allowed_kinds = frozenset(allowed_kinds) if allowed_kinds is not None else None
-    allowed_terms = frozenset(allowed_terms) if allowed_terms is not None else None
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for repo, path, commit, lang, content in zip(
-                b["repo"], b["path"], b["commit"], b["lang"], b["content"]
-            ):
-                if content is None:
-                    content = ""  # a NULL row must not kill the stage
-                sha = sha256_hex(content)
-                # chunk rows keep ORIGINAL text (sha invariant); the
-                # extraction reads the document-level block-comment mask
-                for cid, _orig, ext in chunk_text_masked(content, lang, chunk_bytes):
-                    mentions = extract_mentions(lang, ext, allowed_kinds, allowed_terms)
-                    payload = chunk_payload(mentions)
-                    digest = chunk_schema_digest(payload)
-                    rows.append(
-                        (
-                            repo,
-                            path,
-                            commit,
-                            lang,
-                            sha,
-                            cid,
-                            canonical_json(payload),
-                            canonical_json(digest),
-                            json.dumps(mentions),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in CHUNK_SCHEMA.fields],
-            )
-
-    return corpus.mapInPandas(run, schema=CHUNK_SCHEMA)
 
 
 # Unified tall schema for the fused one-pass extraction.  The corpus input
@@ -121,9 +58,10 @@ def extract_chunks(
 # groupBy(repo,path) shuffles and two extra Python stages from the hot path;
 # per-doc triple dedup equals global dedup (subjects carry the module id),
 # so the global distinct() shuffle is dropped as well.  Only genuinely
-# cross-document work (entity reconcile J1, CC canonicalization, global
-# schema tree-reduce) shuffles — exactly the 100 TB-scale plan you want:
-# the dominant stage is embarrassingly parallel over scan splits.
+# cross-document work (entity reconcile J1, CC canonicalization) shuffles;
+# the global schema is a shuffle-free per-partition reduce
+# (schema_merge.global_schema).  The dominant stage is embarrassingly
+# parallel over scan splits.
 DOC_ROWS_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType()),  # chunk|entity|module|schema|triple|containment
@@ -177,7 +115,7 @@ def extract_document_rows(
     Precondition: ``(repo, path)`` is unique in ``corpus`` (BASELINE
     input_hint — one row per file).  Triple dedup here is per-document;
     duplicate corpus rows for the same document would emit duplicate
-    triples that the staged path's global distinct() used to collapse.
+    triples.
     Run exact_dedup / dropDuplicates upstream if the source may repeat
     documents.
 
@@ -186,11 +124,6 @@ def extract_document_rows(
     schemas — are materialized.  Chunk rows are intermediate state ("page
     answers", pdf_parser.py state IR), not a reference output; dropping them
     cuts the Arrow transfer + cache volume by the size of the corpus itself.
-
-    Semantics are byte-identical to the staged operators (fold_documents,
-    document_schemas, triples_from_mentions): all call the same pure
-    functions, and the equivalence suite pins both paths to the sequential
-    oracle.
 
     ``allowed_kinds``/``allowed_terms`` — P8 extraction allowlist
     (user_prompt_for_filter stand-in, code_gazetteer.extract_mentions):
@@ -205,10 +138,7 @@ def extract_document_rows(
     ``with_containment`` (implies schema computation) — emit M5(a)
     ``containment`` rows (subj/pred/obj/rel_type): per-document schema →
     M4 entities → ``has_<child>`` edges rooted at the module id.  Fused
-    here because the derivation is row-local; chaining it as a second
-    mapInPandas (containment_triples_from_doc_schemas) doubles the Python
-    runner pipeline per task, which measures ~4× slower end-to-end on the
-    same input than this single-stage emit.
+    here because the derivation is row-local.
     """
     with_schemas = with_schemas or with_containment
     allowed_kinds = frozenset(allowed_kinds) if allowed_kinds is not None else None
@@ -372,9 +302,18 @@ def doc_entities_view(doc_rows: DataFrame) -> DataFrame:
     )
 
 
+def module_id_col() -> Column:
+    """A document's module id from its ``repo``/``path`` columns, with a
+    NULL key read as '' — the id the kernel's triple and containment
+    subjects carry (``f"{repo or ''}/{path or ''}"``)."""
+    return F.concat(
+        F.coalesce("repo", F.lit("")), F.lit("/"), F.coalesce("path", F.lit(""))
+    )
+
+
 def module_entities_view(doc_rows: DataFrame) -> DataFrame:
     return doc_rows.filter(F.col("kind") == "module").select(
-        F.concat_ws("/", "repo", "path").alias("id"),
+        module_id_col().alias("id"),
         F.col("entity_type").alias("type"),
         "attributes",
         "repo",
@@ -386,33 +325,6 @@ def module_entities_view(doc_rows: DataFrame) -> DataFrame:
 def doc_schemas_view(doc_rows: DataFrame) -> DataFrame:
     return doc_rows.filter(F.col("kind") == "schema").select(
         "repo", "path", "schema_json"
-    )
-
-
-def containment_triples_from_doc_schemas(doc_schemas: DataFrame) -> DataFrame:
-    """M5(a) — per-document containment triples mirroring the reference's
-    Digraph exemplar (prompts.py:1-38: ROOT→portfolio→fees→fundExpenses) and
-    the rendered containment arrows (renderers/pyecharts_renderer.py:65-67):
-    each document's A4 schema → M4 entities → ``has_<child>`` edges rooted
-    at the module id.
-
-    Narrow mapInPandas over the (one-row-per-document) schema table — tiny
-    rows, no shuffle; the global-schema variant lives in plans/job.py's
-    ``containment_triples`` stage."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for repo, path, sjson in zip(b["repo"], b["path"], b["schema_json"]):
-                # same "None"-stringification guard as the extraction kernel
-                mod = f"{repo or ''}/{path or ''}"
-                ents = schema_to_entities(json.loads(sjson) if sjson else {})
-                for r in derive_containment_relations(ents, root=mod):
-                    rows.append((r.source, r.name, r.target, r.type))
-            yield pd.DataFrame(rows, columns=["subj", "pred", "obj", "rel_type"])
-
-    return doc_schemas.mapInPandas(
-        run, "subj string, pred string, obj string, rel_type string"
     )
 
 
@@ -443,55 +355,3 @@ def mentions_df(
             (F.col("kind") != "term") | F.col("name").isin(*sorted(allowed_terms))
         )
     return m
-
-
-def triples_from_mentions(mentions: DataFrame) -> DataFrame:
-    """M5(b) — deterministic code-semantics triples, entirely JVM-side
-    (SURVEY §2.11 M5): imports / defines / has_method / calls.
-
-    Triple field mapping per primitives.py:10-17: subj=source, pred=name,
-    obj=target; deduplicated with a single distinct (shuffle on the triple
-    key — unavoidable and final).
-    """
-    module_id = F.concat_ws("/", "repo", "path")
-    qual = lambda name_col: F.concat(module_id, F.lit("::"), name_col)
-
-    imports = mentions.filter(F.col("kind") == "import").select(
-        module_id.alias("subj"),
-        F.lit("imports").alias("pred"),
-        F.concat(F.lit("lib::"), F.col("name")).alias("obj"),
-        F.lit("import").alias("rel_type"),
-    )
-    defines = mentions.filter(F.col("kind").isin("function", "class", "method")).select(
-        module_id.alias("subj"),
-        F.lit("defines").alias("pred"),
-        qual(F.col("name")).alias("obj"),
-        F.lit("defines").alias("rel_type"),
-    )
-    methods = mentions.filter(F.col("kind") == "method").select(
-        qual(F.col("owner")).alias("subj"),
-        F.lit("has_method").alias("pred"),
-        qual(F.col("name")).alias("obj"),
-        F.lit("containment").alias("rel_type"),
-    )
-    terms = mentions.filter(F.col("kind") == "term").select(
-        module_id.alias("subj"),
-        F.lit("mentions").alias("pred"),
-        F.concat(F.lit("term::"), F.col("name")).alias("obj"),
-        F.lit("mention").alias("rel_type"),
-    )
-    calls = mentions.filter(F.col("kind") == "call").select(
-        F.when(F.col("owner") == "", module_id)
-        .otherwise(qual(F.col("owner")))
-        .alias("subj"),
-        F.lit("calls").alias("pred"),
-        qual(F.col("name")).alias("obj"),
-        F.lit("call").alias("rel_type"),
-    )
-    return (
-        imports.unionByName(defines)
-        .unionByName(methods)
-        .unionByName(calls)
-        .unionByName(terms)
-        .distinct()
-    )

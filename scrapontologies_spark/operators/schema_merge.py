@@ -1,17 +1,19 @@
-"""A4/A5 — per-document and global JSON-schema merge.
+"""A4/A5 — global JSON-schema merge.
 
 The reference merges page schemas per document with one LLM call
 (pdf_parser.py:418-432) and across documents in ``merge_schemas``
-(extractor.py:193-248).  Deterministic stand-in M3 (schema_union) is
-commutative + associative + idempotent (property-tested), which licenses the
-treeAggregate-style shape mandated by BASELINE.json north_star:
+(extractor.py:193-248).  Here the per-document union (A4) is row-local in
+the fused extraction kernel (operators/extract.py emits one ``schema`` row
+per document), and the global union (A5) is one reduce:
 
-  per-partition partial union (mapInPandas, one output row per batch)
-    → groupBy(partial_key % k) partial merge (applyInPandas)
-    → final union of ≤k rows driver-side.
+  per-partition union (mapInPandas, at most one output row per partition)
+    → collect the ≤ #partitions rows → fold them on the driver.
 
-At 100 TB the first level collapses billions of chunk digests to one row per
-scan partition with NO shuffle; only ≤(partitions) tiny rows ever shuffle.
+Deterministic stand-in M3 (schema_union) is commutative, associative and
+idempotent (property-tested), so this depth-1 ``aggregate`` equals the union
+of all rows in any order or grouping, so no shuffle is needed.
+At 100 TB the partials are one small row per scan partition; the
+driver-side fold is over those rows only.
 """
 
 from __future__ import annotations
@@ -23,70 +25,31 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.semantics import canonical_json, schema_union_all
-
-_PARTIAL_SCHEMA = "bucket int, schema_json string"
-_DOC_SCHEMA = "repo string, path string, schema_json string"
+from ..functions.semantics import canonical_json, schema_union_all, schema_union_owned
 
 
-def document_schemas(chunks: DataFrame) -> DataFrame:
-    """A4 — per-document schema: union of the document's chunk digests.
-    Safe as unordered applyInPandas because M3 is order-independent."""
-
-    def union_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # NULL schema_json rows (chunks built with with_schemas=False, or a
-        # corrupt row) are skipped like merge_external_schemas does — one
-        # such row must not abort the whole merge job on json.loads(None)
-        merged = schema_union_all(
-            json.loads(s) for s in pdf["schema_json"] if s is not None
-        )
-        return pd.DataFrame(
-            [(pdf["repo"].iloc[0], pdf["path"].iloc[0], canonical_json(merged))],
-            columns=["repo", "path", "schema_json"],
-        )
-
-    return (
-        chunks.select("repo", "path", "schema_json")
-        .groupBy("repo", "path")
-        .applyInPandas(union_group, schema=_DOC_SCHEMA)
-    )
-
-
-def global_schema(chunks: DataFrame, fanin: int = 16) -> dict:
-    """A5 — tree-shaped global ontology reduce over per-chunk digests.
-
-    Level 0 (no shuffle): each input batch → one partial-union row.
-    Level 1 (tiny shuffle of ≤ #partitions rows): groupBy(bucket) union.
-    Level 2 (driver): union of ≤fanin rows.
-    """
+def global_schema(schema_rows: DataFrame) -> dict:
+    """A5 — union of the ``schema_json`` column of ``schema_rows`` (per-doc
+    or per-chunk schemas; NULL rows are skipped, so a frame built without
+    schemas or one corrupt row cannot abort the merge).  Adds one Spark job
+    and no shuffle to the input's plan; returns ``{}`` for empty input."""
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        merged = None
         for b in batches:
-            if len(b) == 0:
-                continue
-            merged = schema_union_all(
-                json.loads(s) for s in b["schema_json"] if s is not None
-            )
-            # bucket is assigned downstream from a stable content hash
-            yield pd.DataFrame([(0, canonical_json(merged))], columns=["bucket", "schema_json"])
+            for s in b["schema_json"]:
+                if s is not None:
+                    # json.loads hands over fresh dicts: the owned union
+                    # may adopt and mutate them
+                    merged = schema_union_owned(merged, json.loads(s))
+        if merged is not None:
+            yield pd.DataFrame({"schema_json": [canonical_json(merged)]})
 
-    def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = schema_union_all(
-            json.loads(s) for s in pdf["schema_json"] if s is not None
-        )
-        return pd.DataFrame(
-            [(int(pdf["bucket"].iloc[0]), canonical_json(merged))],
-            columns=["bucket", "schema_json"],
-        )
-
-    partials = (
-        chunks.select("schema_json")
-        .mapInPandas(partial, schema=_PARTIAL_SCHEMA)
-        .withColumn("bucket", F.pmod(F.crc32(F.col("schema_json")), F.lit(fanin)).cast("int"))
-        .groupBy("bucket")
-        .applyInPandas(merge_bucket, schema=_PARTIAL_SCHEMA)
+    rows = (
+        schema_rows.select("schema_json")
+        .mapInPandas(partial, schema="schema_json string")
+        .collect()
     )
-    rows = partials.collect()  # ≤ fanin tiny rows
     return schema_union_all(json.loads(r["schema_json"]) for r in rows)
 
 

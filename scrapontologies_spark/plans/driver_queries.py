@@ -205,7 +205,7 @@ def queries() -> Q:
 
         # with_containment: the per-doc schema → M4 → has_<child> derivation
         # is row-local, so it's fused into the extraction kernel — ONE
-        # Python stage (a chained second mapInPandas measures ~4× slower)
+        # Python stage
         doc_rows = extract_document_rows(
             documents_as_corpus(spark, d), 1024, with_schemas=False,
             emit_chunks=False, with_entities=False, with_triples=False,
@@ -220,15 +220,16 @@ def queries() -> Q:
     # reference threads the user filter into every extraction prompt,
     # pdf_parser.py:399-401) — mention counts reflect only allowed terms.
     def p8_filtered(spark: SparkSession, d: str) -> DataFrame:
-        from ..operators.extract import extract_chunks, mentions_df
+        from ..operators.extract import chunks_view, extract_document_rows, mentions_df
         from .driver_helpers import documents_as_corpus
 
-        chunks = extract_chunks(
-            documents_as_corpus(spark, d), 1024,
+        doc_rows = extract_document_rows(
+            documents_as_corpus(spark, d), 1024, with_schemas=False,
             allowed_terms=("join", "hash", "query"),
+            with_entities=False, with_triples=False,
         )
         return (
-            mentions_df(chunks)
+            mentions_df(chunks_view(doc_rows))
             .groupBy("repo", "path", "name")
             .agg(F.count("*").alias("n_mentions"))
         )
@@ -254,21 +255,14 @@ def queries() -> Q:
     q["kg_fold_entities"] = kg_fold_entities
 
     def kg_global_schema(spark: SparkSession, d: str) -> DataFrame:
-        from ..operators.extract import extract_chunks
+        from ..operators.extract import doc_schemas_view, extract_document_rows
         from ..operators.schema_merge import global_schema
         from .driver_helpers import documents_as_corpus
 
-        # materialize the chunk rows before the reduce: global_schema's
-        # partial mapInPandas would otherwise chain onto the extraction
-        # mapInPandas in one task pipeline (~4× slower, see pipeline.py);
-        # global_schema is eager (collects), so the cache can be dropped
-        # right after.
-        chunks = extract_chunks(documents_as_corpus(spark, d), 1024).persist()
-        try:
-            chunks.count()
-            g = global_schema(chunks)
-        finally:
-            chunks.unpersist()
+        g = global_schema(doc_schemas_view(extract_document_rows(
+            documents_as_corpus(spark, d), 1024, emit_chunks=False,
+            with_entities=False, with_triples=False,
+        )))
         from ..functions.semantics import canonical_json
 
         return spark.createDataFrame(

@@ -58,6 +58,7 @@ from ..operators.extract import (
     doc_schemas_view,
     extract_document_rows,
     module_entities_view,
+    module_id_col,
     triples_view,
 )
 from ..operators.link import reconcile, referential_integrity
@@ -170,9 +171,7 @@ def run_job(
 
         def build_entities() -> DataFrame:
             symbols = doc_entities.select(
-                F.concat(
-                    F.concat_ws("/", "repo", "path"), F.lit("::"), F.col("entity_name")
-                ).alias("id"),
+                F.concat(module_id_col(), F.lit("::"), F.col("entity_name")).alias("id"),
                 F.col("entity_type").alias("type"),
                 F.col("attributes"),
             )

@@ -1,21 +1,26 @@
 """Stage DAG of the KG-construction job (SURVEY §3 EP1+EP2 re-expression).
 
 corpus → chunk+extract (mapInPandas, fused, no shuffle)
-       → triples        (JVM explode + distinct)
-       → per-doc fold   (applyInPandas over groupBy(repo,path))  [A2/A3]
-       → entities       (module + symbol entities, reconciled)    [M4/M6]
-       → schemas        (per-doc union + tree-reduced global)     [A4/A5]
+       → triples        (kind=triple rows, deduplicated per document)
+       → per-doc fold   (kind=entity rows, row-local in the kernel)  [A2/A3]
+       → entities       (module + symbol entities)                   [M4/M6]
+       → schemas        (per-doc union in the kernel, then one
+                         global reduce)                              [A4/A5]
 
-Each stage returns a DataFrame; ``run_pipeline`` wires them and (optionally)
-checkpoints stage outputs through the warehouse (sources/io.py) for
-resumability.  The reference's langgraph node DAGs (pdf_parser.py:161-244)
-map 1:1 onto these stages (SURVEY §2.9 O1-O4).
+The global reduce (operators/schema_merge.global_schema) is a depth-1
+``aggregate``: one union row per partition, folded on the driver.  M3
+union is commutative, associative and idempotent, so ≤ #partitions rows
+carry the whole global schema and no shuffle is needed.
+
+Each stage returns a DataFrame; ``run_pipeline`` wires them (plans/job.py
+checkpoints the same stages through the warehouse for resumability).  The
+reference's langgraph node DAGs (pdf_parser.py:161-244) map 1:1 onto these
+stages (SURVEY §2.9 O1-O4).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +37,7 @@ from ..operators.extract import (
     extract_document_rows,
     mentions_df,
     module_entities_view,
+    module_id_col,
     triples_view,
 )
 from ..operators.schema_merge import global_schema
@@ -58,32 +64,27 @@ def run_pipeline(
     emit_chunks: bool = True,
     allowed_kinds=None,
     allowed_terms=None,
-    persist: Optional[bool] = None,
 ) -> PipelineResult:
     """``allowed_kinds``/``allowed_terms``: P8 extraction allowlist — the
     user_prompt_for_filter stand-in, applied at extraction so entities,
     schemas and triples all reflect the restriction.
 
-    ``persist`` (default: only when ``with_schemas``): cache the tall
-    fused-output rows.  The schema path materializes the cache internally
-    and a multi-consumer caller benefits from it, but a single-consumer
-    caller (e.g. a contract query reading one view) would just leak one
-    never-unpersisted cached frame per invocation — callers that keep the
-    cache own unpersisting ``result.doc_rows``."""
-    if persist is None:
-        persist = with_schemas
+    With ``with_schemas`` the tall fused-output rows are cached: the
+    global-schema reduce and the returned views all read them, and
+    the caller owns unpersisting ``result.doc_rows``.  Without it nothing
+    is cached, so a single-consumer caller (e.g. a contract query reading
+    one view) leaks no cached frame."""
     # Fused one-pass extraction (see operators/extract.py): every
     # per-document computation is row-local, so chunk/fold/schema/triple
-    # rows all come out of ONE narrow mapInPandas — zero shuffles.  One
-    # Python pass feeds five consumers → cache the tall rows.  At cluster
-    # scale this stage is checkpointed to the warehouse instead
+    # rows all come out of ONE narrow mapInPandas — zero shuffles.  At
+    # cluster scale this stage is checkpointed to the warehouse instead
     # (io.write_stage, partitioned by kind), which also provides resume;
     # cache is the local-mode equivalent.
     doc_rows = extract_document_rows(
         corpus, chunk_bytes, with_schemas, emit_chunks,
         allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
     )
-    if persist:
+    if with_schemas:
         doc_rows = doc_rows.persist()
 
     # chunk rows are intermediate "page answers"; with emit_chunks=False the
@@ -94,7 +95,7 @@ def run_pipeline(
 
     doc_entities = doc_entities_view(doc_rows)
     symbols = doc_entities.select(
-        F.concat(F.concat_ws("/", "repo", "path"), F.lit("::"), F.col("entity_name")).alias("id"),
+        F.concat(module_id_col(), F.lit("::"), F.col("entity_name")).alias("id"),
         F.col("entity_type").alias("type"),
         F.col("attributes"),
     )
@@ -103,18 +104,6 @@ def run_pipeline(
 
     if with_schemas:
         doc_schemas = doc_schemas_view(doc_rows)
-        # Fill the cache with a single-Python-stage action BEFORE the
-        # global-schema reduce: otherwise the reduce's collect is the first
-        # action and its plan chains the extraction mapInPandas with the
-        # schema-partial mapInPandas in one task pipeline — two Python
-        # runners ping-ponging per task, measured ~4× slower than running
-        # them against the materialized cache (same pathology fixed for
-        # m5 containment via the fused with_containment emit).  With
-        # persist=False there is no cache to fill — the count would be a
-        # full wasted extraction pass before the reduce re-runs it all.
-        if persist:
-            doc_rows.count()
-        # tree-reduce over the (already per-doc-unioned) schema rows
         gschema = global_schema(doc_schemas)
         gschema_json = canonical_json(gschema)
         schema_ents = schema_to_entities(gschema)
@@ -149,7 +138,7 @@ def pipeline_summary(
     row (emit_chunks=False); a CHAINED narrow mapInPandas reduces each Arrow
     batch to kind-counts plus a partial M3 schema union, and the driver
     folds the ≤#partitions partials (M3 is commutative/associative/
-    idempotent — the same license as the A5 tree reduce).  Zero shuffles,
+    idempotent — the same shape as the A5 reduce, global_schema).  Zero shuffles,
     no cache: this is the scaling bench's measured job, and tests pin its
     outputs to run_pipeline's."""
     import json as _json
@@ -205,7 +194,14 @@ def verify_content_invariant(corpus: DataFrame, chunks: DataFrame) -> int:
     carried = chunks.select(
         "repo", "path", F.col("sha256").alias("sha_carried")
     ).distinct()
-    joined = src.join(carried, ["repo", "path"], "full_outer")
+    # null-safe keys: the kernel keeps a NULL repo/path document as a real
+    # identity, and `=` would split it into a corpus-only and a chunk-only row
+    joined = src.alias("s").join(
+        carried.alias("c"),
+        F.col("s.repo").eqNullSafe(F.col("c.repo"))
+        & F.col("s.path").eqNullSafe(F.col("c.path")),
+        "full_outer",
+    )
     bad = joined.filter(
         F.col("sha_src").isNull()          # chunk rows for a non-corpus doc
         | F.col("sha_carried").isNull()    # corpus doc with no chunk rows

@@ -23,12 +23,14 @@ passing would muddy diagnosis), and exits nonzero if ANY step failed:
      only bench workload that runs the concurrent stage DAG; it also
      exits 1 when the entity ids disagree with the replay
 
+In `--fast` mode step 1 runs only the suites that pin every caller of the
+global-schema reduce (FAST_TESTS).
+
 Usage:
   python scripts/run_all_checks.py            # everything (~25-35 min)
-  python scripts/run_all_checks.py --fast     # sf0.001, skip pytest and
-                                              # incremental_merge (oracle
-                                              # sweeps + real_multichunk
-                                              # checks, ~9 min)
+  python scripts/run_all_checks.py --fast     # sf0.001, FAST_TESTS only,
+                                              # no incremental_merge
+                                              # (~10 min)
   SPARK_GRAFT_CPUS=16 ...                     # parallelism override
 """
 from __future__ import annotations
@@ -40,6 +42,12 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
+FAST_TESTS = [
+    "tests/test_pipeline_equivalence.py",
+    "tests/test_schema_union.py",
+    "tests/test_api_facade.py",
+    "tests/test_ddl.py",
+]
 
 
 def run(label: str, cmd: list[str]) -> tuple[str, float, int]:
@@ -60,8 +68,7 @@ def main() -> int:
     )
     py = sys.executable
     steps: list[tuple[str, list[str]]] = []
-    if not fast:
-        steps.append(("pytest", [py, "-m", "pytest", "tests/", "-q"]))
+    steps.append(("pytest", [py, "-m", "pytest", *(FAST_TESTS if fast else ["tests/"]), "-q"]))
     steps.append((f"oracle@{sf}",
                   [py, "scripts/cross_scale_check.py", sf, CPUS]))
     for variant, flag in (("adversarial", None),

@@ -237,7 +237,7 @@ def main() -> None:
             "own equal data share (weak scaling — at 10^12-file scale every "
             "executor reads its own scan split, and the measured job is "
             "shuffle-free so shares compose exactly; the only cross-executor "
-            "step at cluster scale is the ≤k-row schema tree-reduce fold).",
+            "step at cluster scale is the driver fold of ≤ #partitions schema rows).",
             "",
             "| executors | wall (s) | aggregate triples/sec | per-JVM walls (s), all reps |",
             "|---|---|---|---|",

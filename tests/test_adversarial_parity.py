@@ -145,7 +145,7 @@ def test_skew_query_matches_oracle(spark, ddb_skew, skew_dir, name):
 # the suite pins the queries with eager/driver-side or divide-prone
 # stages that could plausibly crash on nothing
 EMPTY_QUERIES = (
-    "kg_global_schema",      # eager treeAggregate-style reduce of 0 rows
+    "kg_global_schema",      # eager per-partition reduce of 0 rows
     "sim_cosine_topk_ivf",   # codebook sampled from an empty table
     "text_vocabulary",       # corpus-size N = 0 broadcast, idf divides
     "dedup_clusters",        # CC over zero edges
@@ -284,6 +284,9 @@ def test_run_job_hostile_corpus_end_to_end_and_resume(spark, tmp_path):
     assert got1, "hostile corpus produced no triples at all"
     subjects = {r.subj for r in triples1.select("subj").distinct().collect()}
     assert not any(s and "None" in s for s in subjects), subjects
+    # a NULL-repo doc keeps its triples: the entity ids and the kernel's
+    # triple subjects agree on "/b.py", so referential integrity keeps them
+    assert ("/b.py", "defines", "/b.py::A", "defines") in got1, got1
     # the NULL-content doc still has a real extracted row (content treated
     # as "", identity kept — the kernel's visible-degrade contract)
     extracted = spark.read.parquet(f"{wh}/extracted")

@@ -100,25 +100,25 @@ def test_containment_relations_from_global_schema(result):
 
 
 def test_containment_triples_per_doc_match_sequential_oracle(spark):
-    """Distributed per-document containment operator == sequential
+    """The kernel's fused per-document containment emit == sequential
     document_schema → M4 → M5(a) oracle, module-rooted."""
     from scrapontologies_spark.functions.semantics import (
         derive_containment_relations,
         schema_to_entities,
     )
     from scrapontologies_spark.operators.extract import (
-        containment_triples_from_doc_schemas,
-        doc_schemas_view,
+        containment_view,
         extract_document_rows,
     )
 
     corpus = corpus_df(spark, 30)
-    doc_rows = extract_document_rows(corpus, 512, with_schemas=True, emit_chunks=False)
+    doc_rows = extract_document_rows(
+        corpus, 512, with_schemas=False, emit_chunks=False,
+        with_entities=False, with_triples=False, with_containment=True,
+    )
     got = {
         (r.subj, r.pred, r.obj, r.rel_type)
-        for r in containment_triples_from_doc_schemas(
-            doc_schemas_view(doc_rows)
-        ).collect()
+        for r in containment_view(doc_rows).collect()
     }
     expected = set()
     for repo, path, commit, lang, content in corpus_rows(30):
@@ -126,39 +126,6 @@ def test_containment_triples_per_doc_match_sequential_oracle(spark):
         for r in derive_containment_relations(ents, root=f"{repo}/{path}"):
             expected.add((r.source, r.name, r.target, r.type))
     assert got == expected and got
-
-
-def test_fused_containment_emit_matches_chained_operator(spark):
-    """extract_document_rows(with_containment=True) — the single-Python-stage
-    fused emit — produces exactly the rows of the chained
-    containment_triples_from_doc_schemas path (which the test above pins to
-    the sequential oracle)."""
-    from scrapontologies_spark.operators.extract import (
-        containment_triples_from_doc_schemas,
-        containment_view,
-        doc_schemas_view,
-        extract_document_rows,
-    )
-
-    corpus = corpus_df(spark, 30)
-    fused = {
-        (r.subj, r.pred, r.obj, r.rel_type)
-        for r in containment_view(
-            extract_document_rows(
-                corpus, 512, with_schemas=False, emit_chunks=False,
-                with_entities=False, with_triples=False, with_containment=True,
-            )
-        ).collect()
-    }
-    chained = {
-        (r.subj, r.pred, r.obj, r.rel_type)
-        for r in containment_triples_from_doc_schemas(
-            doc_schemas_view(
-                extract_document_rows(corpus, 512, with_schemas=True, emit_chunks=False)
-            )
-        ).collect()
-    }
-    assert fused == chained and fused
 
 
 def test_p8_allowlist_restricts_whole_pipeline(spark):
@@ -191,12 +158,20 @@ def test_p8_allowlist_restricts_whole_pipeline(spark):
 
 def test_p8_jvm_mention_filter_matches_extraction_filter(spark):
     """mentions_df's JVM-side isin filter == filtering at extraction."""
-    from scrapontologies_spark.operators.extract import extract_chunks, mentions_df
+    from scrapontologies_spark.operators.extract import (
+        chunks_view,
+        extract_document_rows,
+        mentions_df,
+    )
 
     corpus = corpus_df(spark, 20)
     kinds = {"function", "class"}
-    jvm = mentions_df(extract_chunks(corpus, CHUNK_BYTES), allowed_kinds=kinds)
-    at_ext = mentions_df(extract_chunks(corpus, CHUNK_BYTES, allowed_kinds=kinds))
+
+    def chunks(**allow):
+        return chunks_view(extract_document_rows(corpus, CHUNK_BYTES, **allow))
+
+    jvm = mentions_df(chunks(), allowed_kinds=kinds)
+    at_ext = mentions_df(chunks(allowed_kinds=kinds))
     assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, at_ext.collect()))
     assert jvm.count() > 0
 
@@ -313,34 +288,19 @@ def test_content_invariant_catches_mixed_sha_rows(spark):
     assert verify_content_invariant(corpus, chunks_orphan) == 1
     # ...as is a corpus document with no chunk rows at all
     assert verify_content_invariant(corpus, chunks_ok.limit(0)) == 1
-
-
-def test_staged_fold_matches_fused_doc_entities(spark):
-    """operators/fold.fold_documents (the staged A2/A3 operator for
-    pre-chunked inputs) must produce exactly the fused kernel's
-    doc-entities rows when fed the fused pass's own chunk rows."""
+    # a NULL repo or path is a real document identity (the kernel keeps
+    # it): chunk rows that carry the right sha are not violations
     from scrapontologies_spark.operators.extract import (
         chunks_view,
-        doc_entities_view,
         extract_document_rows,
     )
-    from scrapontologies_spark.operators.fold import fold_documents
-    from scrapontologies_spark.sources.corpus import corpus_df
 
-    corpus = corpus_df(spark, 24)
-    doc_rows = extract_document_rows(corpus, 512, with_schemas=False).persist()
-    try:
-        fused = {
-            (r.repo, r.path, r.entity_name): (r.entity_type, r.attributes)
-            for r in doc_entities_view(doc_rows).collect()
-        }
-        staged = {
-            (r.repo, r.path, r.entity_name): (r.entity_type, r.attributes)
-            for r in fold_documents(chunks_view(doc_rows)).collect()
-        }
-        assert staged == fused and len(fused) > 0
-    finally:
-        doc_rows.unpersist()
+    null_keys = spark.createDataFrame(
+        [(None, "b.py", "c", "python", "def g(): pass"), ("r", None, "c", "python", "x = 2")],
+        corpus.schema,
+    )
+    chunks = chunks_view(extract_document_rows(null_keys, 512))
+    assert verify_content_invariant(null_keys, chunks) == 0
 
 
 def test_null_content_rows_do_not_abort_extraction(spark):
@@ -351,7 +311,7 @@ def test_null_content_rows_do_not_abort_extraction(spark):
     import hashlib
 
     from scrapontologies_spark.operators.extract import (
-        extract_chunks,
+        chunks_view,
         extract_document_rows,
         module_entities_view,
         triples_view,
@@ -372,5 +332,5 @@ def test_null_content_rows_do_not_abort_extraction(spark):
     # the good doc still yields its triples
     subs = {r.subj for r in triples_view(rows).collect()}
     assert "r/good.py" in subs
-    # the chunk-only operator takes the same path
-    assert extract_chunks(corpus, 512).count() >= 2
+    # ...and both docs keep their chunk rows
+    assert chunks_view(rows).count() >= 2

@@ -1,8 +1,8 @@
 """Layer-2 property tests (SURVEY.md §5.2): M3 schema-union algebra.
 
-Commutativity + associativity + idempotence license the tree-shaped global
-schema reduce (SURVEY §2.4 A5) — without them, partial aggregation order
-would change the global ontology."""
+Commutativity + associativity + idempotence license the per-partition
+global schema reduce (SURVEY §2.4 A5) — without them, partial aggregation
+order would change the global ontology."""
 
 from __future__ import annotations
 
@@ -214,3 +214,47 @@ def test_union_type_lists_and_keyword_shadowing():
     m1 = {"type": {"weird": 1}}
     m2 = {"type": "string"}
     assert schema_union(m1, m2) == schema_union(m2, m1)
+
+
+def test_global_schema_is_one_job_over_partitions(spark, tmp_path):
+    """The A5 reduce is one Spark job (per-partition unions, folded on the
+    driver; no shuffle) and equals the M3 fold of its rows, with an empty
+    partition and a NULL schema_json in the input."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from scrapontologies_spark.operators.schema_merge import global_schema
+
+    parts = [
+        [
+            '{"properties": {"x": {"type": "string"}}, "required": ["x"]}',
+            '{"properties": {"y": {"type": "integer"}}, "required": ["x", "y"]}',
+        ],
+        [],  # an empty file → an empty partition
+        [None, '{"properties": {"x": {"type": "object", "properties": {"z": {}}}}}'],
+        ['{"type": "object", "properties": {"y": {"type": "number"}}}'],
+    ]
+    for i, rows in enumerate(parts):
+        pq.write_table(
+            pa.table({"schema_json": pa.array(rows, pa.string())}),
+            str(tmp_path / f"part-{i}.parquet"),
+        )
+    df = spark.read.parquet(str(tmp_path))
+    sizes = df.rdd.glom().map(len).collect()
+    assert len(sizes) > 1 and 0 in sizes, sizes
+
+    sc = spark.sparkContext
+    group = f"global-schema-{id(df)}"
+    sc.setJobGroup(group, "one global-schema reduce")
+    try:
+        got = global_schema(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    expected = schema_union_all(
+        json.loads(s) for rows in parts for s in rows if s is not None
+    )
+    assert canonical_json(got) == canonical_json(expected)
+    assert global_schema(spark.createDataFrame([], "schema_json string")) == {}
