@@ -100,15 +100,11 @@ class CorpusExtractor:
     def _compute_global_schema(
         self, allowed_kinds=None, allowed_terms=None
     ) -> Dict[str, Any]:
-        from .operators.extract import doc_schemas_view, extract_document_rows
-        from .operators.schema_merge import global_schema
+        from .operators.schema_merge import corpus_global_schema
 
-        doc_rows = extract_document_rows(
-            self.corpus, self.chunk_bytes, with_schemas=True, emit_chunks=False,
-            allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
-            with_entities=False, with_triples=False,
+        return corpus_global_schema(
+            self.corpus, self.chunk_bytes, allowed_kinds, allowed_terms
         )
-        return global_schema(doc_schemas_view(doc_rows))
 
     def generate_entities_json_schema(self) -> Dict[str, Any]:
         """extractor.py:117-125 — (re)generate and return the JSON schema."""

@@ -322,6 +322,16 @@ def module_entities_view(doc_rows: DataFrame) -> DataFrame:
     )
 
 
+def symbol_entities_view(doc_rows: DataFrame) -> DataFrame:
+    """The per-document symbol entities as ``(id, type, attributes)``,
+    with ``id`` = module id ``::`` entity name."""
+    return doc_entities_view(doc_rows).select(
+        F.concat(module_id_col(), F.lit("::"), F.col("entity_name")).alias("id"),
+        F.col("entity_type").alias("type"),
+        "attributes",
+    )
+
+
 def doc_schemas_view(doc_rows: DataFrame) -> DataFrame:
     return doc_rows.filter(F.col("kind") == "schema").select(
         "repo", "path", "schema_json"

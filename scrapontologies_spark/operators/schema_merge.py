@@ -25,7 +25,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.code_gazetteer import DEFAULT_CHUNK_BYTES
 from ..functions.semantics import canonical_json, schema_union_all, schema_union_owned
+from .extract import doc_schemas_view, extract_document_rows
 
 
 def global_schema(schema_rows: DataFrame) -> dict:
@@ -51,6 +53,19 @@ def global_schema(schema_rows: DataFrame) -> dict:
         .collect()
     )
     return schema_union_all(json.loads(r["schema_json"]) for r in rows)
+
+
+def corpus_global_schema(
+    corpus: DataFrame, chunk_bytes=DEFAULT_CHUNK_BYTES, allowed_kinds=None, allowed_terms=None
+) -> dict:
+    """A5 over a corpus: the fused extraction pass with only its per-document
+    schema rows on, then :func:`global_schema`.  ``allowed_kinds`` /
+    ``allowed_terms`` are the P8 extraction allowlist."""
+    return global_schema(doc_schemas_view(extract_document_rows(
+        corpus, chunk_bytes, emit_chunks=False,
+        allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
+        with_entities=False, with_triples=False,
+    )))
 
 
 def merge_external_schemas(global_schema_json: str, external: DataFrame) -> str:

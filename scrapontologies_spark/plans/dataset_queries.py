@@ -402,8 +402,7 @@ def queries() -> Q:
     # --- K1 — schema → 3NF DDL (data-conditioned DuckDB oracle) ----------------
     def ddl_q(spark, d):
         from ..operators.ddl import schema_to_tables, tables_to_ddl
-        from ..operators.extract import doc_schemas_view, extract_document_rows
-        from ..operators.schema_merge import global_schema
+        from ..operators.schema_merge import corpus_global_schema
         from .driver_helpers import documents_as_corpus
 
         # through the ENGINE: distributed extraction + A5 global reduce
@@ -412,9 +411,7 @@ def queries() -> Q:
         corpus = documents_as_corpus(spark, d).filter(
             F.regexp_extract("path", r"doc_(\d+)", 1).cast("int") < 20
         )
-        g = global_schema(doc_schemas_view(extract_document_rows(
-            corpus, 1024, emit_chunks=False, with_entities=False, with_triples=False,
-        )))
+        g = corpus_global_schema(corpus, 1024)
         tables = schema_to_tables({"properties": {"doc": g}})
         stmts = tables_to_ddl(tables, using="iceberg")
         return spark.createDataFrame(

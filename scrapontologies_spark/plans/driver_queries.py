@@ -255,14 +255,10 @@ def queries() -> Q:
     q["kg_fold_entities"] = kg_fold_entities
 
     def kg_global_schema(spark: SparkSession, d: str) -> DataFrame:
-        from ..operators.extract import doc_schemas_view, extract_document_rows
-        from ..operators.schema_merge import global_schema
+        from ..operators.schema_merge import corpus_global_schema
         from .driver_helpers import documents_as_corpus
 
-        g = global_schema(doc_schemas_view(extract_document_rows(
-            documents_as_corpus(spark, d), 1024, emit_chunks=False,
-            with_entities=False, with_triples=False,
-        )))
+        g = corpus_global_schema(documents_as_corpus(spark, d), 1024)
         from ..functions.semantics import canonical_json
 
         return spark.createDataFrame(

@@ -3,17 +3,20 @@
 Stage DAG (each boundary = warehouse checkpoint + manifest + metrics row,
 so a killed run resumes mid-pipeline with identical output — north_rule):
 
-  corpus → extracted (one fused mapInPandas pass), then three independent
+  corpus → extracted (one fused mapInPandas pass), then two independent
   chains at the same time, each on a driver thread of its own:
-    triples_raw
-    doc_entities → entities (modules ∪ symbols, reconciled against any
-        existing entities table — the MERGE INTO analog of J1/M6)
+    entities (modules ∪ symbols, reconciled against any existing entities
+        table — the MERGE INTO analog of J1/M6)
       → alias_labels (closed-form star labelling of import-stem aliases:
         every component is a star centred on lib::<stem>, so no CC rounds)
       → entities_canonical
-    doc_schemas → global_schema → containment_triples
-  → triples (canonicalized + referential integrity), once triples_raw,
-    alias_labels and entities_canonical are written.
+    global_schema → containment_triples
+  → triples (canonicalized + referential integrity), once alias_labels and
+    entities_canonical are written.
+
+The per-document entity, schema and triple rows are not stages but
+``kind`` filters (operators/extract.py ``*_view``) of extracted's read-back
+frame, which is its checkpoint when a rerun skips extracted.
 
 Each stage returns as soon as its data is written; its commit bookkeeping
 (read-back lineage aggregate, side tables, marker) runs on the
@@ -43,7 +46,6 @@ from typing import Dict, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..functions.semantics import canonical_json
@@ -54,11 +56,10 @@ from ..operators.cc import (
     prefer_real_canonical,
 )
 from ..operators.extract import (
-    doc_entities_view,
     doc_schemas_view,
     extract_document_rows,
     module_entities_view,
-    module_id_col,
+    symbol_entities_view,
     triples_view,
 )
 from ..operators.link import reconcile, referential_integrity
@@ -67,9 +68,8 @@ from ..sources.io import StageInfo, Warehouse
 
 # every stage in DAG order: the order of run_job's result
 STAGES = (
-    "extracted", "triples_raw", "doc_entities", "entities", "alias_labels",
-    "entities_canonical", "triples", "doc_schemas", "global_schema",
-    "containment_triples",
+    "extracted", "entities", "alias_labels", "entities_canonical", "triples",
+    "global_schema", "containment_triples",
 )
 
 
@@ -165,22 +165,13 @@ def run_job(
         return out
 
     def entity_chain():
-        doc_entities = stage(
-            "doc_entities", lambda: doc_entities_view(extracted), cfg
-        )
-
         def build_entities() -> DataFrame:
-            symbols = doc_entities.select(
-                F.concat(module_id_col(), F.lit("::"), F.col("entity_name")).alias("id"),
-                F.col("entity_type").alias("type"),
-                F.col("attributes"),
-            )
             # explicit repartition(repo, lang) ahead of the link stage
             # (north_star) — co-locates a repo's symbols for reconcile/CC
             new = (
                 module_entities_view(extracted.repartition("repo", "lang"))
                 .select("id", "type", "attributes")
-                .unionByName(symbols)
+                .unionByName(symbol_entities_view(extracted))
             )
             # MERGE-INTO analog: reconcile against a previous run's entities
             # table when present (J1 full-outer + A1 attribute merge), salted
@@ -205,14 +196,14 @@ def run_job(
         )
 
     def schema_chain() -> None:
-        doc_schemas = stage("doc_schemas", lambda: doc_schemas_view(extracted), cfg)
-
         # driver-sized frames (1 row, ~10 rows) are built from Arrow: the
         # Python-list path would run a Python-worker job per frame
         built: Dict[str, str] = {}
 
         def build_global() -> DataFrame:
-            built["schema_json"] = canonical_json(global_schema(doc_schemas))
+            built["schema_json"] = canonical_json(
+                global_schema(doc_schemas_view(extracted))
+            )
             return spark.createDataFrame(
                 pd.DataFrame({"scope": ["global"], "schema_json": [built["schema_json"]]}),
                 "scope string, schema_json string",
@@ -262,10 +253,10 @@ def run_job(
             ),
             cfg,
         )
-        # the three chains share nothing but `extracted`; each runs on a
+        # the two chains share nothing but `extracted`; each runs on a
         # driver thread that carries this thread's Spark job group and
         # description.  Leaving the block waits for every started branch.
-        with ThreadPoolExecutor(max_workers=3, thread_name_prefix="run_job") as pool:
+        with ThreadPoolExecutor(max_workers=2, thread_name_prefix="run_job") as pool:
 
             def branch(chain) -> Future:
                 def body():
@@ -277,18 +268,16 @@ def run_job(
 
                 return pool.submit(inheritable_thread_target(spark)(body))
 
-            raw = branch(lambda: stage("triples_raw", lambda: triples_view(extracted), cfg))
             linked = branch(entity_chain)
             if with_schemas:
                 branch(schema_chain)
-            triples_raw = raw.result()
             labels, entities_final = linked.result()
-            triples_canon = (
-                canonicalize_triples(triples_raw, labels) if with_cc else triples_raw
-            )
+            triples = triples_view(extracted)
+            if with_cc:
+                triples = canonicalize_triples(triples, labels)
             stage(
                 "triples",
-                lambda: referential_integrity(triples_canon, entities_final),
+                lambda: referential_integrity(triples, entities_final),
                 cc_cfg,
             )
     except BaseException as exc:

@@ -37,7 +37,7 @@ from ..operators.extract import (
     extract_document_rows,
     mentions_df,
     module_entities_view,
-    module_id_col,
+    symbol_entities_view,
     triples_view,
 )
 from ..operators.schema_merge import global_schema
@@ -77,9 +77,10 @@ def run_pipeline(
     # Fused one-pass extraction (see operators/extract.py): every
     # per-document computation is row-local, so chunk/fold/schema/triple
     # rows all come out of ONE narrow mapInPandas — zero shuffles.  At
-    # cluster scale this stage is checkpointed to the warehouse instead
-    # (io.write_stage, partitioned by kind), which also provides resume;
-    # cache is the local-mode equivalent.
+    # cluster scale run_job checkpoints this pass to the warehouse instead
+    # (the unpartitioned stage ``extracted``, which also provides resume)
+    # and reads it through the same ``*_view`` filters; cache is the
+    # local-mode equivalent.
     doc_rows = extract_document_rows(
         corpus, chunk_bytes, with_schemas, emit_chunks,
         allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
@@ -94,13 +95,8 @@ def run_pipeline(
     triples = triples_view(doc_rows)
 
     doc_entities = doc_entities_view(doc_rows)
-    symbols = doc_entities.select(
-        F.concat(module_id_col(), F.lit("::"), F.col("entity_name")).alias("id"),
-        F.col("entity_type").alias("type"),
-        F.col("attributes"),
-    )
     modules = module_entities_view(doc_rows).select("id", "type", "attributes")
-    entities = modules.unionByName(symbols)
+    entities = modules.unionByName(symbol_entities_view(doc_rows))
 
     if with_schemas:
         doc_schemas = doc_schemas_view(doc_rows)

@@ -23,8 +23,9 @@ passing would muddy diagnosis), and exits nonzero if ANY step failed:
      only bench workload that runs the concurrent stage DAG; it also
      exits 1 when the entity ids disagree with the replay
 
-In `--fast` mode step 1 runs only the suites that pin every caller of the
-global-schema reduce (FAST_TESTS).
+In `--fast` mode step 1 runs only FAST_TESTS: the suites that pin every
+caller of the global-schema reduce, plus `run_job`'s stage DAG, resume and
+marker order (`tests/test_resumability.py`), which step 4 never runs.
 
 Usage:
   python scripts/run_all_checks.py            # everything (~25-35 min)
@@ -47,6 +48,7 @@ FAST_TESTS = [
     "tests/test_schema_union.py",
     "tests/test_api_facade.py",
     "tests/test_ddl.py",
+    "tests/test_resumability.py",
 ]
 
 

@@ -9,7 +9,7 @@ import threading
 
 import pytest
 
-from scrapontologies_spark.plans.job import run_job
+from scrapontologies_spark.plans.job import STAGES, run_job
 from scrapontologies_spark.sources import io as wh_io
 from scrapontologies_spark.sources.corpus import corpus_df
 from scrapontologies_spark.sources.io import Warehouse
@@ -239,12 +239,12 @@ def test_config_mismatch_rebuilds_stage(spark, corpus, tmp_path):
     filtered = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
                        with_schemas=False, allowed_kinds=frozenset({"import"}))
     assert not filtered["extracted"].skipped
-    assert filtered["triples_raw"].rows < first["triples_raw"].rows
+    assert filtered["triples"].rows < first["triples"].rows
     # and an identical re-run of the filtered config IS skipped again
     again = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
                     with_schemas=False, allowed_kinds=frozenset({"import"}))
     assert all(info.skipped for info in again.values())
-    assert again["triples_raw"].fingerprint == filtered["triples_raw"].fingerprint
+    assert again["triples"].fingerprint == filtered["triples"].fingerprint
 
 
 def test_fingerprint_detects_even_multiplicity_swaps(spark, tmp_path):
@@ -360,7 +360,6 @@ def test_cc_flip_rebuilds_triples_but_not_extraction(spark, corpus, tmp_path):
     second = run_job(spark, corpus, root, chunk_bytes=512, with_cc=True,
                      with_schemas=False)
     assert second["extracted"].skipped
-    assert second["triples_raw"].skipped
     assert second["entities"].skipped
     assert not second["triples"].skipped
 
@@ -447,14 +446,11 @@ def test_file_uri_warehouse_root_resolves_to_posix(spark, tmp_path):
 
 # the stages each stage reads (run_job's DAG)
 _READS = {
-    "triples_raw": {"extracted"},
-    "doc_entities": {"extracted"},
-    "entities": {"extracted", "doc_entities"},
+    "entities": {"extracted"},
     "alias_labels": {"entities"},
     "entities_canonical": {"entities", "alias_labels"},
-    "triples": {"triples_raw", "alias_labels", "entities_canonical"},
-    "doc_schemas": {"extracted"},
-    "global_schema": {"doc_schemas"},
+    "triples": {"extracted", "alias_labels", "entities_canonical"},
+    "global_schema": {"extracted"},
     "containment_triples": {"global_schema"},
 }
 
@@ -478,22 +474,22 @@ def _job_threads():
 
 
 def test_schema_chain_overlaps_entity_chain(spark, corpus, tmp_path, monkeypatch):
-    """The schema chain does not wait for the entity chain: doc_schemas
+    """The schema chain does not wait for the entity chain: global_schema
     starts before entities ends.  ``entities`` gives it 30 s to start — a
-    sequential DAG reaches doc_schemas only after ``triples``."""
+    sequential DAG reaches global_schema only after ``triples``."""
     events = []
     schemas_started = threading.Event()
 
     def observer(stage, event):
         events.append((stage, event))
-        if (stage, event) == ("doc_schemas", "start"):
+        if (stage, event) == ("global_schema", "start"):
             schemas_started.set()
         if (stage, event) == ("entities", "start"):
             schemas_started.wait(timeout=30)
 
     monkeypatch.setattr(wh_io, "stage_observer", observer)
     run_job(spark, corpus, str(tmp_path / "wh"), chunk_bytes=512)
-    assert events.index(("doc_schemas", "start")) < events.index(("entities", "end"))
+    assert events.index(("global_schema", "start")) < events.index(("entities", "end"))
 
 
 def test_commit_bookkeeping_runs_behind_downstream_writes(
@@ -534,8 +530,14 @@ def test_markers_land_after_the_markers_of_their_inputs(
         order.append(info.name)
 
     monkeypatch.setattr(Warehouse, "_commit", recording)
-    infos = run_job(spark, corpus, str(tmp_path / "wh"), chunk_bytes=512)
+    root = tmp_path / "wh"
+    infos = run_job(spark, corpus, str(root), chunk_bytes=512)
+    assert tuple(infos) == STAGES
     assert sorted(order) == sorted(infos) == sorted(["extracted", *_READS])
+    # the per-document kind filters of `extracted` are views, not stages
+    for view in ("triples_raw", "doc_entities", "doc_schemas"):
+        assert not (root / view).exists(), view
+        assert not (root / "_manifest" / f"{view}.json").exists(), view
     for stage, inputs in _READS.items():
         for inp in inputs:
             assert order.index(inp) < order.index(stage), (inp, stage, order)
@@ -553,7 +555,7 @@ def test_failing_branch_raises_and_keeps_completed_stages(
     class Boom(RuntimeError):
         pass
 
-    def boom(_doc_schemas):
+    def boom(_schema_rows):
         raise Boom("global schema")
 
     root = str(tmp_path / "wh")
@@ -565,7 +567,7 @@ def test_failing_branch_raises_and_keeps_completed_stages(
 
     wh = Warehouse(root)
     done = {s for s in clean_fingerprints if wh.is_complete(s)}
-    assert {"extracted", "doc_schemas"} <= done
+    assert {"extracted"} <= done
     assert not done & {"global_schema", "containment_triples"}
     for s in done:
         meta = wh._read_marker(s)
