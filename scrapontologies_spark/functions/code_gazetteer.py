@@ -656,9 +656,7 @@ def _mask_block_spans(text: str, lang: str) -> str:
             end = n if mm is None else mm.end()
             spans.append((start, end))
             i = end
-        elif tok.startswith("<<"):  # ruby / shell heredoc opener
-            tag = m.group(2)
-            bare = tok[2] not in "~-" and not m.group(1)
+        elif tok.startswith("<<"):  # ruby / shell heredoc opener(s)
             line_end = text.find("\n", m.end())
             if line_end == -1:
                 i = n
@@ -675,21 +673,33 @@ def _mask_block_spans(text: str, lang: str) -> str:
                     if s and term_ok.match(s):
                         term_index.setdefault(s, []).append(pos + len(line))
                     pos += len(line) + 1
-            ends = term_index.get(tag)
-            hit = None
-            if ends:
-                k = bisect.bisect_right(ends, line_end)
-                if k < len(ends):
-                    hit = ends[k]
-            if hit is not None:
-                spans.append((line_end + 1, hit))
-                i = hit
-            elif bare:
-                # no terminator + shift-ambiguous token: not a heredoc
-                i = m.end()
+            # stacked openers (`foo(<<~A, <<~B)`, `cat <<A; cat <<B`): each
+            # opener on the line takes the first terminator after the
+            # previous one's; the bodies are masked through the last
+            end, mo = line_end, m
+            while mo is not None and end < n:
+                t = mo.group()
+                if t.startswith("<<"):
+                    ends = term_index.get(mo.group(2), ())
+                    k = bisect.bisect_right(ends, end)
+                    if k < len(ends):
+                        end = ends[k]
+                    elif t[2] in "~-" or mo.group(1):
+                        end = n  # unambiguous opener, no terminator
+                    j = mo.end()
+                elif t in ('"', "'"):  # one-line string: skip it
+                    j = text.find(t, mo.end(), line_end) + 1
+                    if j == 0:
+                        break
+                else:  # line comment: nothing after it opens
+                    break
+                mo = tok_re.search(text, j, line_end)
+            if end > line_end:
+                spans.append((line_end + 1, end))
+                i = end
             else:
-                spans.append((line_end + 1, n))
-                i = n
+                # no terminator + shift-ambiguous tokens only: not a heredoc
+                i = m.end()
         elif len(tok) > 1 and tok.endswith('"'):  # rust raw string rb?#*"
             closer = '"' + "#" * tok.count("#")
             j = text.find(closer, m.end())

@@ -176,7 +176,8 @@ def run_job(
             # MERGE-INTO analog: reconcile against a previous run's entities
             # table when present (J1 full-outer + A1 attribute merge), salted
             # per the north_star skew mandate unless explicitly disabled
-            if wh.is_complete("entities_prev"):
+            # (prev_meta: the one marker read behind ent_cfg's token too)
+            if prev_meta is not None:
                 existing = wh.read_stage(spark, "entities_prev")
                 return reconcile(existing, new, salt=8 if salt is None else salt)
             return new

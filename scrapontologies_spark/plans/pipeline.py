@@ -11,6 +11,8 @@ The global reduce (operators/schema_merge.global_schema) is a depth-1
 ``aggregate``: one union row per partition, folded on the driver.  M3
 union is commutative, associative and idempotent, so ≤ #partitions rows
 carry the whole global schema and no shuffle is needed.
+``pipeline_summary`` feeds the same fused pass to that same reduce, with
+an ``observe`` counting each row kind on the way: one Spark job.
 
 Each stage returns a DataFrame; ``run_pipeline`` wires them (plans/job.py
 checkpoints the same stages through the warehouse for resumability).  The
@@ -22,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.semantics import (
@@ -131,43 +133,20 @@ def pipeline_summary(
     canonical JSON).
 
     The fused extraction computes every triple / entity / module / schema
-    row (emit_chunks=False); a CHAINED narrow mapInPandas reduces each Arrow
-    batch to kind-counts plus a partial M3 schema union, and the driver
-    folds the ≤#partitions partials (M3 is commutative/associative/
-    idempotent — the same shape as the A5 reduce, global_schema).  Zero shuffles,
-    no cache: this is the scaling bench's measured job, and tests pin its
-    outputs to run_pipeline's."""
-    import json as _json
-    from collections import Counter
-
-    import pandas as pd
-
-    from ..functions.semantics import schema_union_all, schema_union_owned
-
+    row (emit_chunks=False); an ``observe`` counts each kind as the rows
+    stream into the A5 reduce (:func:`global_schema`).  One Spark job,
+    zero shuffles, no cache: this is the scaling bench's measured job, and
+    tests pin its outputs to run_pipeline's."""
     doc_rows = extract_document_rows(
         corpus, chunk_bytes=chunk_bytes, with_schemas=True, emit_chunks=False
     )
-
-    def reduce_batches(batches):
-        counts: Counter = Counter()
-        schema: dict = {}
-        for b in batches:
-            counts.update(b["kind"].value_counts().to_dict())
-            for s in b.loc[b["kind"] == "schema", "schema_json"]:
-                schema = schema_union_owned(schema, _json.loads(s))
-        yield pd.DataFrame(
-            [(_json.dumps(counts), canonical_json(schema))],
-            columns=["counts_json", "schema_json"],
-        )
-
-    partials = doc_rows.mapInPandas(
-        reduce_batches, "counts_json string, schema_json string"
-    ).collect()
-    counts: Counter = Counter()
-    for r in partials:
-        counts.update(_json.loads(r["counts_json"]))
-    gschema = schema_union_all(_json.loads(r["schema_json"]) for r in partials)
-    return dict(counts), canonical_json(gschema)
+    obs = Observation()  # unnamed: a unique name per call
+    observed = doc_rows.observe(  # every row kind of an emit_chunks=False pass
+        obs, *(F.count_if(F.col("kind") == k).alias(k)
+               for k in ("entity", "module", "schema", "triple"))
+    )
+    gschema = global_schema(doc_schemas_view(observed))
+    return {k: n for k, n in obs.get.items() if n}, canonical_json(gschema)
 
 
 def verify_content_invariant(corpus: DataFrame, chunks: DataFrame) -> int:

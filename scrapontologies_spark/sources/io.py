@@ -67,7 +67,7 @@ import time
 from collections import deque
 from concurrent.futures import Future
 from dataclasses import dataclass
-from typing import Callable, Iterable, Optional
+from typing import Callable, Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -163,14 +163,9 @@ class Warehouse:
         except FileNotFoundError:
             return None
 
-    def is_complete(self, name: str, config_token: Optional[str] = None) -> bool:
-        """Stage complete AND built with the same declared parameters.
-        A marker written with a different (or, conservatively, no) token
-        than the one now expected does not count as complete."""
-        meta = self._read_marker(name)
-        if meta is None:
-            return False
-        return config_token is None or meta.get("config") == config_token
+    def is_complete(self, name: str) -> bool:
+        """Stage ``name`` has a committed marker (whatever its token)."""
+        return self._read_marker(name) is not None
 
     def _commit(self, info: StageInfo, config_token: Optional[str] = None) -> None:
         tmp = self._marker(info.name) + ".tmp"
@@ -192,21 +187,8 @@ class Warehouse:
     def path(self, name: str) -> str:
         return f"{self.root}/{name}"
 
-    def write_stage(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_by: Optional[Iterable[str]] = None,
-        config_token: Optional[str] = None,
-    ) -> StageInfo:
-        return self._write_stage(df, name, partition_by, config_token)[1].result()
-
     def _write_stage(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_by: Optional[Iterable[str]] = None,
-        config_token: Optional[str] = None,
+        self, df: DataFrame, name: str, config_token: Optional[str]
     ) -> tuple[DataFrame, Future]:
         """Write ``df`` as stage ``name`` in this thread and queue its
         commit; returns the stage read back from storage (the DataFrame
@@ -221,19 +203,14 @@ class Warehouse:
             os.remove(self._marker(name))
         except FileNotFoundError:
             pass
-        pb = list(partition_by or [])
-        w = df.write.mode("overwrite").format(self.fmt)
-        if pb:
-            w = w.partitionBy(*pb)
-        w.save(self.path(name))
+        df.write.mode("overwrite").format(self.fmt).save(self.path(name))
         # parquet schema inference is a Spark job of its own, and parquet
         # round-trips the written schema exactly (the reader makes it
         # nullable, as inference would), so read back under that schema.
-        # Other formats may infer other types, and partition columns keep
-        # their inferred types, so those reads still infer.
+        # Other formats may infer other types, so those reads still infer.
         spark = df.sparkSession
         reader = spark.read.format(self.fmt)
-        if self.fmt == "parquet" and not pb:
+        if self.fmt == "parquet":
             reader = reader.schema(df.schema)
         out = reader.load(self.path(name))
         # wrapped here, so the committer runs the read-back under this
@@ -347,35 +324,6 @@ class Warehouse:
             else:
                 os.remove(p)
 
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_col: str,
-        n_buckets: int,
-        sort: bool = True,
-    ) -> None:
-        """Catalog table bucketed (and sorted) by ``bucket_col`` — the
-        cross-RUN co-location lever: two tables bucketed the same way
-        (same column, same ``n_buckets``) join on that column with NO
-        exchange on either side (plan-asserted in tests), so the nightly
-        reconcile of entities_prev ⋈ entities_new skips both corpus-sized
-        shuffles.  This is the parquet stand-in for Iceberg's
-        ``bucket(N, id)`` hidden partitioning named in SURVEY §1.4/§4.
-
-        Bucketing metadata lives in the session catalog (saveAsTable);
-        the data itself is plain ``self.fmt`` files under the warehouse
-        root, one directory per table."""
-        w = (
-            df.write.mode("overwrite")
-            .format(self.fmt)
-            .option("path", self.path(table))
-            .bucketBy(n_buckets, bucket_col)
-        )
-        if sort:
-            w = w.sortBy(bucket_col)
-        w.saveAsTable(table)
-
     def read_stage(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.format(self.fmt).load(self.path(name))
 
@@ -393,7 +341,6 @@ class Warehouse:
         spark: SparkSession,
         name: str,
         build: Callable[[], DataFrame],
-        partition_by: Optional[Iterable[str]] = None,
         config=None,
     ) -> tuple[DataFrame, StageInfo]:
         """Build-and-write unless the manifest already marks the stage
@@ -402,14 +349,8 @@ class Warehouse:
         the stored DataFrame (so downstream stages read the checkpoint, not
         the lineage — restart-safe).  A marker from a run with different
         parameters triggers a rebuild instead of serving stale data.
-        Returns once the stage's marker is committed.
-
-        ``partition_by`` is folded into the token: the stage's on-disk
-        LAYOUT is part of its output (partition pruning, bucketed-join
-        co-location), so changing it must rebuild rather than silently
-        serve the old layout — the same stale-checkpoint class the config
-        token exists to prevent."""
-        out, commit = self.run_stage_nowait(spark, name, build, partition_by, config)
+        Returns once the stage's marker is committed."""
+        out, commit = self.run_stage_nowait(spark, name, build, config)
         return out, commit.result()
 
     def run_stage_nowait(
@@ -417,18 +358,13 @@ class Warehouse:
         spark: SparkSession,
         name: str,
         build: Callable[[], DataFrame],
-        partition_by: Optional[Iterable[str]] = None,
         config=None,
     ) -> tuple[DataFrame, Future]:
         """:meth:`run_stage` that returns as soon as the data is written:
         the read-back DataFrame and a future of the StageInfo, resolved
         when the committer thread has committed the marker (already
         resolved for a skipped stage)."""
-        # materialize once: a generator ``partition_by`` consumed here would
-        # read as exhausted-but-truthy in write_stage and silently write
-        # unpartitioned while the token records the requested layout
-        pb = list(partition_by or [])
-        token = _config_token({"cfg": config, "partition_by": pb, "fmt": self.fmt})
+        token = _config_token({"cfg": config, "fmt": self.fmt})
         meta = self._read_marker(name)
         if meta is not None and meta.get("config") == token:
             done: Future = Future()
@@ -443,7 +379,7 @@ class Warehouse:
         if stage_observer is not None:
             stage_observer(name, "start")
         try:
-            return self._write_stage(build(), name, pb, config_token=token)
+            return self._write_stage(build(), name, token)
         finally:
             if stage_observer is not None:
                 stage_observer(name, "end")

@@ -40,8 +40,8 @@ Scale shape — two store layouts behind one interface:
   band set against the whole store, which SHUFFLES THE STORE every
   micro-batch — fine locally and for modest stores, quadratic-ish I/O over
   a long run.
-- ``BucketedBandStore`` (a catalog table bucketed on the join key,
-  sources/io.py's write_bucketed pattern): the store scan already carries
+- ``BucketedBandStore`` (a catalog table written with ``bucketBy`` on the
+  join key and ``saveAsTable``): the store scan already carries
   hash partitioning on (band_idx, band_key), so the probe co-partitions
   WITHOUT an Exchange on the store side — only the small batch side
   shuffles (plan-asserted in tests/test_streaming_neardup.py).  Compaction
@@ -164,10 +164,10 @@ class BucketedBandStore:
     the scale layout.  The bucketed scan reports hash partitioning on
     (band_idx, band_key), so the every-batch left-semi probe needs NO
     Exchange on the store side; only the small batch side shuffles into
-    the bucket layout (plan-asserted in tests).  This is the
-    sources/io.py write_bucketed pattern (the parquet stand-in for
-    Iceberg ``bucket(N, key)`` hidden partitioning) applied to streaming
-    state.
+    the bucket layout (plan-asserted in tests).  Each write is a
+    ``bucketBy(n_buckets, "band_idx", "band_key")`` + ``saveAsTable`` —
+    the parquet stand-in for Iceberg ``bucket(N, key)`` hidden
+    partitioning — applied to streaming state.
 
     Layout choice (measured, scripts/neardup_store_bench.py +
     BENCH_SCALING.md): while the store is within ~10× the batch size the

@@ -22,6 +22,9 @@ passing would muddy diagnosis), and exits nonzero if ANY step failed:
      reconcile (`perfbench/run.py --workload incremental_merge`) — the
      only bench workload that runs the concurrent stage DAG; it also
      exits 1 when the entity ids disagree with the replay
+  6. the scaling bench's timed job (`scripts/scaling_run.py`, i.e.
+     `pipeline_summary`) on the vendored real-file pool at local[4]: it
+     must exit 0 and print exactly one JSON line
 
 In `--fast` mode step 1 runs only FAST_TESTS: the suites that pin every
 caller of the global-schema reduce, plus `run_job`'s stage DAG, resume and
@@ -36,6 +39,7 @@ Usage:
 """
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -52,10 +56,24 @@ FAST_TESTS = [
 ]
 
 
-def run(label: str, cmd: list[str]) -> tuple[str, float, int]:
+def _one_json_line(out: str) -> bool:
+    lines = [ln for ln in out.splitlines() if ln.strip()]
+    try:
+        return len(lines) == 1 and isinstance(json.loads(lines[0]), dict)
+    except ValueError:
+        return False
+
+
+def run(label: str, cmd: list[str], env: dict | None = None,
+        one_json_line: bool = False) -> tuple[str, float, int]:
     print(f"\n=== {label}: {' '.join(cmd)}", flush=True)
     t0 = time.monotonic()
-    rc = subprocess.call(cmd, cwd=REPO)
+    if one_json_line:
+        p = subprocess.run(cmd, cwd=REPO, env=env, stdout=subprocess.PIPE, text=True)
+        print(p.stdout, end="", flush=True)
+        rc = p.returncode or (0 if _one_json_line(p.stdout) else 1)
+    else:
+        rc = subprocess.call(cmd, cwd=REPO, env=env)
     dt = time.monotonic() - t0
     print(f"=== {label}: {'OK' if rc == 0 else f'FAILED rc={rc}'} ({dt:.1f}s)",
           flush=True)
@@ -103,6 +121,12 @@ def main() -> int:
         results.append(run(label, cmd))
         if label.startswith("gen:") and results[-1][2] != 0:
             failed_gens.add(label.split(":", 1)[1])
+    # the scaling bench's Python workers import the package from the repo
+    results.append(run(
+        "scaling_run",
+        [py, "scripts/scaling_run.py", "perfbench/corpus/real_files.parquet", "4"],
+        env={**os.environ, "PYTHONPATH": REPO}, one_json_line=True,
+    ))
     print("\n==== gate summary ====")
     bad = 0
     for label, dt, rc in results:

@@ -48,12 +48,11 @@ def main() -> None:
     t0 = time.time()
     # One-pass deliverables measurement: the fused extraction computes every
     # triple / entity / schema row (emit_chunks=False — chunk rows are
-    # intermediate state, not an output table); a chained narrow
-    # mapInPandas reduces each batch to kind-counts + a partial M3 schema
-    # union, and the driver folds the ≤#partitions partials.  Same outputs
-    # as run_pipeline (counts checked against it in tests), but ZERO
-    # shuffles, no cache, no repeated scans — the wall measures the
-    # pipeline's compute, which is what scales with executors.
+    # intermediate state, not an output table); an observe counts each row
+    # kind as the rows stream into the one A5 global-schema reduce.  Same
+    # outputs as run_pipeline (checked against it in tests), but one Spark
+    # job, ZERO shuffles, no cache, no repeated scans — the wall measures
+    # the pipeline's compute, which is what scales with executors.
     import json as _json
 
     from scrapontologies_spark.plans.pipeline import pipeline_summary

@@ -211,3 +211,42 @@ def test_docker_from_flags_are_skipped():
         ("class", "build", ""),
         ("method", "REV", "build"),
     ]
+
+
+# --- ADVICE regression: stacked heredocs ------------------------------------
+
+
+def test_ruby_stacked_heredocs_mask_every_body():
+    # each further opener on the line takes the next terminator after the
+    # previous one's: masking stopped at ONE, so TWO's body minted a method
+    src = (
+        "class A\n"
+        "  foo(<<~ONE, <<~TWO)\n"
+        "    one\n"
+        "  ONE\n"
+        "    def leaked_two\n"
+        "    end\n"
+        "  TWO\n"
+        "  def real\n"
+        "  end\n"
+        "end\n"
+    )
+    assert _rows("ruby", src) == [
+        ("class", "A", ""),
+        ("method", "real", "A"),
+        ("call", "foo", ""),
+    ]
+
+
+def test_shell_stacked_heredocs_mask_every_body():
+    src = (
+        "cat <<A; cat <<B\n"
+        "function leak_a() {\n"
+        "A\n"
+        "function leak_b() {\n"
+        "B\n"
+        "function real_fn() {\n"
+        "  echo\n"
+        "}\n"
+    )
+    assert _rows("shell", src) == [("function", "real_fn", "")]

@@ -260,6 +260,44 @@ def test_pipeline_summary_matches_run_pipeline(result):
     assert gschema_json == full.global_schema_json
 
 
+def test_pipeline_summary_one_job_empty_and_null_keys(spark):
+    """pipeline_summary is one Spark job (the kind counts ride the A5
+    reduce as an observation), gives ({}, "{}") on an empty corpus, and
+    matches run_pipeline on NULL repo / path / content rows."""
+    from scrapontologies_spark.plans.pipeline import pipeline_summary
+
+    schema = "repo string, path string, commit string, lang string, content string"
+    assert pipeline_summary(spark.createDataFrame([], schema)) == ({}, "{}")
+
+    corpus = spark.createDataFrame(
+        [
+            (None, "a.py", "c", "python", "class A:\n    def f(self):\n        pass\n"),
+            ("r", None, "c", "python", "import os\ndef g():\n    return os.sep\n"),
+            ("r", "b.py", "c", "python", None),
+            ("r", "c.js", "c", "javascript", "class B { m() { return 1 } }\n"),
+        ],
+        schema,
+    )
+    sc = spark.sparkContext
+    group = "pipeline-summary-one-job"
+    sc.setJobGroup(group, "pipeline_summary")
+    try:
+        counts, gschema_json = pipeline_summary(corpus, chunk_bytes=CHUNK_BYTES)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    full = run_pipeline(corpus, chunk_bytes=CHUNK_BYTES)
+    try:
+        assert counts["triple"] == full.triples.count()
+        assert counts["entity"] == full.doc_entities.count()
+        assert counts["module"] + counts["entity"] == full.entities.count()
+        assert counts["schema"] == full.doc_schemas.count() == 4
+        assert gschema_json == full.global_schema_json != "{}"
+    finally:
+        full.doc_rows.unpersist()
+
+
 def test_content_invariant_catches_mixed_sha_rows(spark):
     """A document with one corrupted-sha chunk row alongside correct ones
     must be flagged — an exists-one-matching-row check would pass it."""

@@ -76,36 +76,6 @@ def test_flag_flip_invalidates_checkpoints(spark, corpus, tmp_path):
     assert second["global_schema"].rows > 0
 
 
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """write_bucketed co-location: two entity snapshots bucketed on id join
-    with NO Exchange on either side — the cross-run reconcile skips both
-    corpus-sized shuffles (the parquet stand-in for Iceberg bucket(N, id))."""
-    wh = Warehouse(str(tmp_path / "whb"))
-    e1 = spark.range(0, 500).selectExpr("concat('e', id) AS id", "'module' AS type")
-    e2 = spark.range(250, 750).selectExpr(
-        "concat('e', id) AS id", "'module' AS type_new"
-    )
-    try:
-        wh.write_bucketed(e1, "ent_prev_bt", "id", 8)
-        wh.write_bucketed(e2, "ent_new_bt", "id", 8)
-        prev_conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("ent_prev_bt").join(
-                spark.table("ent_new_bt"), "id", "full_outer"
-            )
-            plan = joined._sc._jvm.PythonSQLUtils.explainString(
-                joined._jdf.queryExecution(), "formatted"
-            )
-            assert "Exchange" not in plan, plan
-            assert joined.count() == 750
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_conf)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ent_prev_bt")
-        spark.sql("DROP TABLE IF EXISTS ent_new_bt")
-
-
 def test_format_switch_orc_runs_and_resumes(spark, corpus, tmp_path):
     """The warehouse format is a config switch (parquet locally, Iceberg on
     a cluster with its jars) — prove the switch is real by running and
@@ -254,8 +224,8 @@ def test_fingerprint_detects_even_multiplicity_swaps(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "whf"))
     aac = spark.createDataFrame([("A",), ("A",), ("C",)], "v string")
     bbc = spark.createDataFrame([("B",), ("B",), ("C",)], "v string")
-    f1 = wh.write_stage(aac, "aac").fingerprint
-    f2 = wh.write_stage(bbc, "bbc").fingerprint
+    f1 = wh.run_stage(spark, "aac", lambda: aac)[1].fingerprint
+    f2 = wh.run_stage(spark, "bbc", lambda: bbc)[1].fingerprint
     assert f1 != f2
 
 
@@ -286,40 +256,6 @@ def test_job_cli_corpus_parquet_flag(spark, tmp_path):
     assert {k: v.fingerprint for k, v in r1.items()} == {
         k: v.fingerprint for k, v in r2.items()
     }
-
-
-def test_partition_layout_change_rebuilds_stage(spark, tmp_path):
-    """run_stage's resume token covers partition_by: the stage's on-disk
-    LAYOUT is part of its output (pruning, bucketed-join co-location), so
-    re-running with a different partitioning must rebuild — not silently
-    serve the old layout."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 3).cast("string").alias("lang")
-    )
-    _, info1 = wh.run_stage(spark, "s", lambda: df, config={"k": 1})
-    assert not info1.skipped
-
-    # same config, same builder, NEW layout -> rebuild
-    _, info2 = wh.run_stage(
-        spark, "s", lambda: df, partition_by=["lang"], config={"k": 1}
-    )
-    assert not info2.skipped
-    assert any(
-        name.startswith("lang=")
-        for name in os.listdir(os.path.join(str(tmp_path / "wh"), "s"))
-    )
-
-    # identical layout + config -> skipped
-    _, info3 = wh.run_stage(
-        spark, "s", lambda: df, partition_by=["lang"], config={"k": 1}
-    )
-    assert info3.skipped
-    assert info3.fingerprint == info2.fingerprint
 
 
 def test_seeding_entities_prev_invalidates_entities_stage(spark, corpus, tmp_path):
@@ -365,7 +301,7 @@ def test_cc_flip_rebuilds_triples_but_not_extraction(spark, corpus, tmp_path):
 
 
 def test_aborted_rebuild_cannot_serve_half_rebuilt_data(spark, tmp_path):
-    """write_stage must invalidate the old marker BEFORE overwriting the
+    """run_stage must invalidate the old marker BEFORE overwriting the
     data: a rebuild under config B that crashes mid-write would otherwise
     leave config A's marker pointing at B's half-written data — a re-run
     under A would then skip and serve it."""
@@ -404,24 +340,6 @@ def test_aborted_rebuild_cannot_serve_half_rebuilt_data(spark, tmp_path):
     finally:
         cls.write = real_write
     assert not wh.is_complete("s")  # stale marker cannot serve anything
-
-
-def test_generator_partition_by_still_partitions(spark, tmp_path):
-    """A generator partition_by is legal per the Iterable hint; it must be
-    materialized once — consumed-by-the-token-then-falsy would silently
-    write unpartitioned while the token records the requested layout."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    df = spark.range(20).select(
-        F.col("id"), (F.col("id") % 2).cast("string").alias("lang")
-    )
-    wh.run_stage(spark, "s", lambda: df,
-                 partition_by=(c for c in ["lang"]), config={"k": 1})
-    subdirs = {d for d in os.listdir(wh.path("s")) if d.startswith("lang=")}
-    assert subdirs == {"lang=0", "lang=1"}
 
 
 def test_file_uri_warehouse_root_resolves_to_posix(spark, tmp_path):
