@@ -19,12 +19,16 @@ SF0001 = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG pipeline on sf0.001 documents → (subj, pred, obj,
     rel_type) triples.  The driver checks rows>0 and a stable schema."""
+    from scrapontologies_spark.operators.extract import (
+        extract_document_rows,
+        triples_view,
+    )
     from scrapontologies_spark.plans.driver_helpers import documents_as_corpus
-    from scrapontologies_spark.plans.pipeline import run_pipeline
 
     corpus = documents_as_corpus(spark, SF0001)
-    res = run_pipeline(corpus, chunk_bytes=1024, with_schemas=False)
-    return res.triples
+    return triples_view(extract_document_rows(
+        corpus, 1024, with_schemas=False, emit_chunks=False, with_entities=False,
+    ))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

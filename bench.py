@@ -10,9 +10,10 @@ JSON line::
 Two workload families:
 
 1. ``kg_pipeline`` — the flagship KG-construction job (BASELINE north_rule)
-   over a deterministic synthetic corpus sized by sf (input_hint shape);
-   the per-query value is wall seconds, and ``kg_triples_per_sec`` reports
-   throughput.
+   over a deterministic synthetic corpus sized by sf (input_hint shape),
+   timed as one ``pipeline_summary`` (one Spark job: the fused pass, its
+   per-kind counts and the global-schema reduce); the per-query value is
+   wall seconds, and ``kg_triples_per_sec`` reports throughput.
 2. Driver-contract operator queries (SURVEY §2 + training-data ops) over
    the driver's parquet tables, each forced end-to-end with a noop sink so
    Catalyst can't prune the work away.
@@ -135,7 +136,7 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from scrapontologies_spark.plans import driver_queries
-    from scrapontologies_spark.plans.pipeline import run_pipeline
+    from scrapontologies_spark.plans.pipeline import pipeline_summary
     from scrapontologies_spark.session import build_session
     from scrapontologies_spark.sources.corpus import corpus_df
 
@@ -147,17 +148,14 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm up: JVM codegen + python worker pool (not counted).  The tiny
-    # run_pipeline exercises the SAME Arrow-UDF pipelines the timed run
-    # uses (extraction kernel, schema partial/merge), so the 32 forked
-    # Python workers do their one-time module imports here — on a real
-    # cluster the workers are long-lived and already warm when a job lands.
+    # pipeline_summary is the SAME Arrow-UDF job the timed run uses
+    # (extraction kernel, global-schema reduce), so the forked Python
+    # workers do their one-time module imports here — on a real cluster
+    # the workers are long-lived and already warm when a job lands.
     spark.range(10_000).selectExpr("sum(id)").collect()
     warm = corpus_df(spark, 64).persist()
     warm.count()
-    wres = run_pipeline(warm, chunk_bytes=1024, with_schemas=True, emit_chunks=False)
-    wres.triples.count()
-    wres.entities.count()
-    wres.doc_rows.unpersist()
+    pipeline_summary(warm, chunk_bytes=1024)
     warm.unpersist()
 
     timings: dict[str, float] = {}
@@ -191,14 +189,12 @@ def main() -> None:
     for _pass in range(repeats):
         # --- flagship KG pipeline ----------------------------------------
         t0 = time.time()
-        # emit_chunks=False: measure the deliverables job (triples +
-        # entities + schemas); chunk rows are intermediate state, not an
-        # output table
-        res = run_pipeline(
-            corpus, chunk_bytes=1024, with_schemas=True, emit_chunks=False
-        )
-        n_triples = res.triples.count()
-        n_entities = res.entities.count()
+        # the deliverables job: every triple / entity / schema row of one
+        # fused pass (no chunk rows — intermediate state, not an output
+        # table), counted by kind on the way into the global-schema reduce
+        counts, _ = pipeline_summary(corpus, chunk_bytes=1024)
+        n_triples = counts.get("triple", 0)
+        n_entities = counts.get("module", 0) + counts.get("entity", 0)
         dt = time.time() - t0
         if timings.get("kg_pipeline", float("inf")) > dt:
             extra["kg_triples_per_sec"] = round(n_triples / dt, 1)
@@ -206,7 +202,6 @@ def main() -> None:
         extra["kg_n_triples"] = n_triples
         extra["kg_n_entities"] = n_entities
         extra["kg_n_docs"] = n_docs
-        res.doc_rows.unpersist()
         _release_new_persists(spark, baseline_persists)
 
         # --- operator catalog over the driver tables ---------------------

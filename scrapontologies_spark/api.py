@@ -143,7 +143,7 @@ class CorpusExtractor:
 
         (The reference's get_entities_schema_graph/get_relations_schema_graph
         return langgraph state machines — N/A by design here; the stage DAG
-        lives in plans/pipeline.py and plans/job.py.)"""
+        lives in plans/job.py.)"""
         from .operators.extract import doc_entities_view, extract_document_rows
 
         return doc_entities_view(

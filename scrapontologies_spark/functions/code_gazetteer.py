@@ -677,6 +677,7 @@ def _mask_block_spans(text: str, lang: str) -> str:
             # opener on the line takes the first terminator after the
             # previous one's; the bodies are masked through the last
             end, mo = line_end, m
+            openers = []
             while mo is not None and end < n:
                 t = mo.group()
                 if t.startswith("<<"):
@@ -684,8 +685,10 @@ def _mask_block_spans(text: str, lang: str) -> str:
                     k = bisect.bisect_right(ends, end)
                     if k < len(ends):
                         end = ends[k]
+                        openers.append(mo.span())
                     elif t[2] in "~-" or mo.group(1):
                         end = n  # unambiguous opener, no terminator
+                        openers.append(mo.span())
                     j = mo.end()
                 elif t in ('"', "'"):  # one-line string: skip it
                     j = text.find(t, mo.end(), line_end) + 1
@@ -695,6 +698,10 @@ def _mask_block_spans(text: str, lang: str) -> str:
                     break
                 mo = tok_re.search(text, j, line_end)
             if end > line_end:
+                # blank the openers too: masking the masked text again
+                # (extract_mentions on a chunk_text_masked chunk) must not
+                # see an opener whose terminator is already blank
+                spans.extend(openers)
                 spans.append((line_end + 1, end))
                 i = end
             else:

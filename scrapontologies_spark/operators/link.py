@@ -105,15 +105,14 @@ def salted_join(
     key: str,
     how: str = "inner",
     salt: int = 8,
-    fact_salt_col: str | None = None,
 ) -> DataFrame:
     """Equi-join with explicit key salting for hot keys (SURVEY §4).
 
-    The fact side derives a deterministic salt from a per-row column
-    (``fact_salt_col``, default: the whole row hash); the dim side is
-    replicated ×salt via explode(sequence).  Result columns = fact ⋈ dim
-    minus the helper columns.  Use when one join key (mega-repo, hot entity
-    id) dominates; for small dims prefer F.broadcast instead.
+    The fact side derives a deterministic salt from its whole-row hash;
+    the dim side is replicated ×salt via explode(sequence).  Result
+    columns = fact ⋈ dim minus the helper columns.  Use when one join key
+    (mega-repo, hot entity id) dominates; for small dims prefer
+    F.broadcast instead.
 
     Only fact-driven join types are valid: each fact row carries ONE salt,
     so inner/left/semi/anti results are value-identical to the unsalted
@@ -133,8 +132,9 @@ def salted_join(
             "replication would emit spurious rows for unmatched dim keys. "
             f"Use one of {sorted(allowed)} or an unsalted join."
         )
-    salt_src = F.col(fact_salt_col) if fact_salt_col else F.struct(*fact.columns)
-    f = fact.withColumn("_salt", F.pmod(F.xxhash64(salt_src), F.lit(salt)).cast("int"))
+    f = fact.withColumn(
+        "_salt", F.pmod(F.xxhash64(F.struct(*fact.columns)), F.lit(salt)).cast("int")
+    )
     d = dim.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     ).withColumn("_salt", F.col("_salt").cast("int"))

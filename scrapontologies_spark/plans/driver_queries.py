@@ -243,14 +243,13 @@ def queries() -> Q:
     # code-corpus fold stays pinned by the pytest sequential oracle,
     # SURVEY §5 layers 1+3).
     def kg_fold_entities(spark: SparkSession, d: str) -> DataFrame:
-        from .. import plans  # noqa: F401  (package anchor)
-        from ..plans.pipeline import run_pipeline
+        from ..operators.extract import doc_entities_view, extract_document_rows
         from .driver_helpers import documents_as_corpus
 
-        res = run_pipeline(
-            documents_as_corpus(spark, d), chunk_bytes=1024, with_schemas=False
-        )
-        return res.doc_entities
+        return doc_entities_view(extract_document_rows(
+            documents_as_corpus(spark, d), 1024, with_schemas=False,
+            emit_chunks=False, with_triples=False,
+        ))
 
     q["kg_fold_entities"] = kg_fold_entities
 
@@ -270,8 +269,8 @@ def queries() -> Q:
     # S3 front door — real-file ingestion as a driver-contract row (VERDICT
     # r04 ask #5): a deterministic fixture tree is (re)written at call time,
     # then binaryFile-scanned by sources/files.corpus_from_files and run
-    # through the full pipeline.  The oracle is the fixture's exact triple
-    # set, derived from the sequential kernel (document_triples) at
+    # through the fused extraction pass.  The oracle is the fixture's exact
+    # triple set, derived from the sequential kernel (document_triples) at
     # authoring time, hand-reviewed row by row, and inlined as VALUES — so
     # the machine-checked surface is everything the pytest oracles CANNOT
     # share with the engine: the binaryFile scan, ANSI-safe UTF-8 decode,
@@ -283,8 +282,8 @@ def queries() -> Q:
         import shutil
         import tempfile
 
+        from ..operators.extract import extract_document_rows, triples_view
         from ..sources.files import corpus_from_files
-        from .pipeline import run_pipeline
 
         root = os.path.join(tempfile.gettempdir(), "kg_files_fixture_v2", "kgfix")
         # clear first: a leftover tree from an older fixture version (or a
@@ -297,8 +296,9 @@ def queries() -> Q:
             with open(p, "w", encoding="utf-8", newline="") as f:
                 f.write(content)
         corpus = corpus_from_files(spark, root, repo="kgfix", commit="c0")
-        res = run_pipeline(corpus, chunk_bytes=512, with_schemas=False)
-        return res.triples.select("subj", "pred", "obj", "rel_type")
+        return triples_view(extract_document_rows(
+            corpus, 512, with_schemas=False, emit_chunks=False, with_entities=False,
+        ))
 
     q["files_pipeline_triples"] = files_pipeline_triples
 

@@ -25,11 +25,11 @@ warehouse's committer thread while the next stage writes (sources/io.py).
 
 Shuffle layout per BASELINE north_star: explicit repartition(repo, lang)
 before the link stage; AQE + skew-join on (session.py); the deleted-ids /
-alias dimension sides broadcast; the entity reconcile join runs salted when
-``salt > 0`` is passed to :func:`run_job` (default 8 whenever an
-``entities_prev`` table exists — the incremental-merge case where a
-mega-repo's new entities can hash-skew the link join; ``salt=0`` forces
-the plain full-outer path, and both paths are equivalence-tested).
+alias dimension sides broadcast; the entity reconcile against an
+``entities_prev`` table always runs salted (8 slices) — the
+incremental-merge case where a mega-repo's new entities can hash-skew the
+link join.  Salted == plain (operators/link.reconcile, equivalence-tested
+at the operator and at the job stage).
 
 Usage (cluster — spark-submit takes a primary .py FILE, not a module):
     spark-submit --py-files scrapontologies_spark.zip \
@@ -82,31 +82,15 @@ def run_job(
     corpus: DataFrame,
     warehouse_root: str,
     chunk_bytes: int = 1024,
-    with_cc: bool = True,
-    with_schemas: bool = True,
     fmt: str = "parquet",
-    salt: Optional[int] = None,
     allowed_kinds=None,
     allowed_terms=None,
-    scale=None,
 ) -> Dict[str, StageInfo]:
-    """``salt``: skew factor for the entity reconcile join (None → default:
-    8 when an entities_prev table is present, else unsalted; 0 → force
-    plain full-outer).  See operators/link.reconcile.
+    """``fmt``: the warehouse storage format (sources/io.py).
 
     ``allowed_kinds``/``allowed_terms``: P8 extraction allowlist
     (user_prompt_for_filter stand-in) — restricts mention extraction, so
-    every downstream stage reflects the filter.
-
-    ``scale``: a profiles.ScaleProfile (or preset name, e.g. "corpus")
-    filling ``salt`` when left at None — at corpus scale the reconcile
-    join is always salted so a mega-repo key cannot pin one reducer.
-    Physical knob only (salted == plain, equivalence-tested), so resume
-    tokens are unaffected — flipping the profile never invalidates
-    checkpoints."""
-    from ..profiles import pick, resolve_profile
-
-    salt = pick(salt, resolve_profile(scale).reconcile_salt)
+    every downstream stage reflects the filter."""
     wh = Warehouse(warehouse_root, fmt)
     commits: Dict[str, Future] = {}
     errors: list = []
@@ -115,28 +99,19 @@ def run_job(
 
     # Resume guard: each stage's token covers the parameters ITS output
     # depends on — no more (a whole-DAG token would re-run the mapInPandas
-    # extraction, the 100 TB hot path, when only a downstream flag flips)
-    # and no less (every upstream-affecting knob present).  salt is
-    # deliberately excluded everywhere: it is a physical knob (salted ==
-    # plain, equivalence-tested), and invalidating checkpoints over it
-    # would force needless rebuilds.
+    # extraction, the 100 TB hot path, when only entities_prev changes)
+    # and no less (every upstream-affecting knob present).
     #
-    # - cfg (extraction params): with_schemas changes the 'extracted' rows
-    #   themselves (schema rows emitted or not), so it must sit here — a
-    #   re-run with the flag flipped would otherwise serve a stale
-    #   'extracted' and yield an empty global schema.
+    # - cfg: the extraction params.
     # - ent_cfg adds the entities_prev state (rows + fingerprint from its
     #   marker): writing or replacing an entities_prev table between runs
     #   changes the reconcile's output, so it must invalidate 'entities'
     #   and everything downstream of it — with it excluded, an identical
     #   re-run after seeding entities_prev would silently skip the merge.
-    # - cc_cfg adds with_cc, which changes only canonicalization and the
-    #   final triples.
     cfg = {
         "chunk_bytes": chunk_bytes,
         "allowed_kinds": allowed_kinds,
         "allowed_terms": allowed_terms,
-        "with_schemas": with_schemas,
     }
     prev_meta = wh._read_marker("entities_prev")
     ent_cfg = {
@@ -145,7 +120,6 @@ def run_job(
         if prev_meta is None
         else {"rows": prev_meta["rows"], "fingerprint": prev_meta["fingerprint"]},
     }
-    cc_cfg = {**ent_cfg, "with_cc": with_cc}
 
     def fail(exc: BaseException) -> None:
         # first error wins; a branch that stopped because of it is not one
@@ -175,25 +149,23 @@ def run_job(
             )
             # MERGE-INTO analog: reconcile against a previous run's entities
             # table when present (J1 full-outer + A1 attribute merge), salted
-            # per the north_star skew mandate unless explicitly disabled
-            # (prev_meta: the one marker read behind ent_cfg's token too)
+            # per the north_star skew mandate (prev_meta: the one marker
+            # read behind ent_cfg's token too)
             if prev_meta is not None:
                 existing = wh.read_stage(spark, "entities_prev")
-                return reconcile(existing, new, salt=8 if salt is None else salt)
+                return reconcile(existing, new, salt=8)
             return new
 
         entities = stage("entities", build_entities, ent_cfg)
-        if not with_cc:
-            return None, entities
         labels = stage(
             "alias_labels",
             lambda: prefer_real_canonical(module_alias_labels(entities)),
-            cc_cfg,
+            ent_cfg,
         )
         return labels, stage(
             "entities_canonical",
             lambda: canonicalize_entities(entities, labels),
-            cc_cfg,
+            ent_cfg,
         )
 
     def schema_chain() -> None:
@@ -249,7 +221,7 @@ def run_job(
         extracted = stage(
             "extracted",
             lambda: extract_document_rows(
-                corpus, chunk_bytes, with_schemas,
+                corpus, chunk_bytes,
                 allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
             ),
             cfg,
@@ -270,16 +242,13 @@ def run_job(
                 return pool.submit(inheritable_thread_target(spark)(body))
 
             linked = branch(entity_chain)
-            if with_schemas:
-                branch(schema_chain)
+            branch(schema_chain)
             labels, entities_final = linked.result()
-            triples = triples_view(extracted)
-            if with_cc:
-                triples = canonicalize_triples(triples, labels)
+            triples = canonicalize_triples(triples_view(extracted), labels)
             stage(
                 "triples",
                 lambda: referential_integrity(triples, entities_final),
-                cc_cfg,
+                ent_cfg,
             )
     except BaseException as exc:
         fail(exc)
@@ -307,10 +276,6 @@ def _arg_parser() -> "argparse.ArgumentParser":
         "synthetic corpus; n_rows is ignored",
     )
     ap.add_argument(
-        "--salt", type=int, default=None,
-        help="skew factor for the entity reconcile join (0 = force unsalted)",
-    )
-    ap.add_argument(
         "--allowed-kinds", default=None,
         help="comma-separated entity kinds to keep (P8 extraction filter)",
     )
@@ -325,7 +290,6 @@ def main(argv: Optional[list] = None) -> None:
     # argparse rejects unknown --flags and flags missing their value with a
     # usage error, instead of silently routing a typo into warehouse_root
     args = _arg_parser().parse_args(argv if argv is not None else sys.argv[1:])
-    salt = args.salt
     allowed_kinds = (
         frozenset(args.allowed_kinds.split(",")) if args.allowed_kinds else None
     )
@@ -345,7 +309,7 @@ def main(argv: Optional[list] = None) -> None:
     )
     infos = run_job(
         spark, corpus, warehouse_root,
-        salt=salt, allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
+        allowed_kinds=allowed_kinds, allowed_terms=allowed_terms,
     )
     for name, info in infos.items():
         print(

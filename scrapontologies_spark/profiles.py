@@ -2,9 +2,9 @@
 
 Round-4 verdict ("What's wrong" #2): every scale guard in the engine —
 ``max_bucket_df`` on the three LSH bucket self-joins, ``max_shingle_df``
-on the exhaustive Jaccard space, the bucketed streaming band store, the
-salted reconcile join — defaulted to *off*, so every documented 100 TB
-deployment required the non-default value of 3+ knobs.  Nothing was
+on the exhaustive Jaccard space, the bucketed streaming band store —
+defaulted to *off*, so every documented 100 TB deployment required the
+non-default value of 3 knobs.  Nothing was
 incorrect, but the pit of success pointed the wrong way.
 
 A :class:`ScaleProfile` names the coherent bundle once.  Operators accept
@@ -24,8 +24,11 @@ Two presets:
   pairs) regardless of corpus size; streaming band stores must be
   catalog tables bucketed on the probe key (store-side probe needs no
   Exchange — the measured 1.9–2.0× at a 10M-row store, widening with
-  store size); the entity-reconcile join is salted (8 slices) so a
-  mega-repo key cannot pin one reducer.
+  store size).
+
+The entity-reconcile join of the KG job (plans/job.py) is not a profile
+field: it always runs salted (8 slices), so a mega-repo key cannot pin
+one reducer at any scale.
 
 Guard drops are never silent: the capped operators keep accepting
 ``bucket_metrics`` and report dropped-bucket counts regardless of how the
@@ -54,8 +57,6 @@ class ScaleProfile:
     #: streaming band store: bucket count for BucketedBandStore; None →
     #: the parquet-path layout stays acceptable (small stores only)
     band_store_buckets: Optional[int] = None
-    #: salt slices for the entity-reconcile full-outer join (plans/job)
-    reconcile_salt: Optional[int] = None
 
 
 SMALL = ScaleProfile(name="small")
@@ -65,7 +66,6 @@ CORPUS = ScaleProfile(
     max_bucket_df=10_000,   # cap² = 10⁸ candidate rows ≈ 1.6 GB per bucket
     max_shingle_df=10_000,
     band_store_buckets=64,
-    reconcile_salt=8,
 )
 
 _BY_NAME = {p.name: p for p in (SMALL, CORPUS)}

@@ -39,16 +39,6 @@ def stream_corpus(
     return reader.parquet(input_dir)
 
 
-def incremental_doc_rows(
-    corpus_stream: DataFrame,
-    chunk_bytes: int = 1024,
-    with_schemas: bool = True,
-) -> DataFrame:
-    """The fused extraction applied to a streaming corpus — identical code
-    path to batch (stateless mapInPandas lifts directly)."""
-    return extract_document_rows(corpus_stream, chunk_bytes, with_schemas)
-
-
 def dedup_stream(
     docs_stream: DataFrame,
     text_col: str = "text",

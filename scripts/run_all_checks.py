@@ -25,6 +25,8 @@ passing would muddy diagnosis), and exits nonzero if ANY step failed:
   6. the scaling bench's timed job (`scripts/scaling_run.py`, i.e.
      `pipeline_summary`) on the vendored real-file pool at local[4]: it
      must exit 0 and print exactly one JSON line
+  7. the per-round bench (`bench.py`: `kg_pipeline` plus the operator
+     suite) once at sf0.001: it must exit 0 and print exactly one JSON line
 
 In `--fast` mode step 1 runs only FAST_TESTS: the suites that pin every
 caller of the global-schema reduce, plus `run_job`'s stage DAG, resume and
@@ -126,6 +128,17 @@ def main() -> int:
         "scaling_run",
         [py, "scripts/scaling_run.py", "perfbench/corpus/real_files.parquet", "4"],
         env={**os.environ, "PYTHONPATH": REPO}, one_json_line=True,
+    ))
+    # bench.py at the driver contract's own tables (__spark_entry__.SF0001)
+    sys.path.insert(0, REPO)
+    from __spark_entry__ import SF0001
+
+    results.append(run(
+        "bench@sf0.001",
+        [py, "bench.py"],
+        env={**os.environ, "PYTHONPATH": REPO, "SPARK_GRAFT_CPUS": CPUS,
+             "SPARK_GRAFT_SF_DIR": SF0001, "SPARK_GRAFT_REPEATS": "1"},
+        one_json_line=True,
     ))
     print("\n==== gate summary ====")
     bad = 0

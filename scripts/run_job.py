@@ -5,7 +5,7 @@ Usage:
     zip -r pkg.zip scrapontologies_spark            # or shutil.make_archive
     spark-submit --master local[N] --py-files pkg.zip \
         scripts/run_job.py <warehouse_root> [n_docs] [--corpus PARQUET_PATH]
-        [--salt N] [--allowed-kinds a,b] [--allowed-terms x,y]
+        [--allowed-kinds a,b] [--allowed-terms x,y]
 
 ``--corpus`` reads a real corpus parquet (input_hint shape) instead of
 generating the synthetic one; without it, n_docs synthetic documents.

@@ -50,9 +50,10 @@ def main() -> None:
     # triple / entity / schema row (emit_chunks=False — chunk rows are
     # intermediate state, not an output table); an observe counts each row
     # kind as the rows stream into the one A5 global-schema reduce.  Same
-    # outputs as run_pipeline (checked against it in tests), but one Spark
-    # job, ZERO shuffles, no cache, no repeated scans — the wall measures
-    # the pipeline's compute, which is what scales with executors.
+    # outputs as the ``*_view``s of one fused pass (checked against them in
+    # tests), but one Spark job, ZERO shuffles, no cache, no repeated
+    # scans — the wall measures the pipeline's compute, which is what
+    # scales with executors.
     import json as _json
 
     from scrapontologies_spark.plans.pipeline import pipeline_summary

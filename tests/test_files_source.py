@@ -4,7 +4,14 @@ end-to-end — the reference's FileExtractor(path) entry surface."""
 
 from __future__ import annotations
 
+from scrapontologies_spark.operators.extract import extract_document_rows, triples_view
 from scrapontologies_spark.sources.files import corpus_from_files
+
+
+def _triples(corpus):
+    """(subj, pred, obj) of every triple one fused pass extracts."""
+    doc_rows = extract_document_rows(corpus, 512, with_schemas=False)
+    return [(r.subj, r.pred, r.obj) for r in triples_view(doc_rows).collect()]
 
 
 def _write_tree(tmp_path):
@@ -35,15 +42,9 @@ def test_corpus_from_files_shape_and_filters(spark, tmp_path):
 
 
 def test_corpus_from_files_feeds_extraction(spark, tmp_path):
-    from scrapontologies_spark.plans.pipeline import run_pipeline
-
     root = _write_tree(tmp_path)
     corpus = corpus_from_files(spark, root, max_bytes=100_000)
-    res = run_pipeline(corpus, chunk_bytes=512, with_schemas=False)
-    triples = {
-        (r.subj, r.pred, r.obj) for r in res.triples.collect()
-    }
-    res.doc_rows.unpersist()
+    triples = set(_triples(corpus))
     # the python module yields class/method/import structure
     assert ("myrepo/pkg/mod.py", "defines", "myrepo/pkg/mod.py::Greeter") in triples
     assert (
@@ -106,11 +107,9 @@ def test_ext_lang_parameter_and_broadened_defaults(spark, tmp_path):
 
 def test_golden_triples_from_fixture_tree(spark, tmp_path):
     """Exact (subj, pred, obj) golden set for a pinned fixture tree through
-    corpus_from_files → run_pipeline (VERDICT r03 ask #5: the end-to-end
-    front-door assertion must be a fixed fixture, not the drifting live
-    repo, and must pin VALUES, not just shape)."""
-    from scrapontologies_spark.plans.pipeline import run_pipeline
-
+    corpus_from_files → the fused extraction pass (VERDICT r03 ask #5: the
+    end-to-end front-door assertion must be a fixed fixture, not the
+    drifting live repo, and must pin VALUES, not just shape)."""
     root = tmp_path / "golden"
     (root / "pkg").mkdir(parents=True)
     (root / "pkg" / "mod.py").write_text(
@@ -119,9 +118,7 @@ def test_golden_triples_from_fixture_tree(spark, tmp_path):
     (root / "notes.txt").write_text("sort then merge the rows; sort wins")
 
     corpus = corpus_from_files(spark, str(root), commit="pinned")
-    res = run_pipeline(corpus, chunk_bytes=512, with_schemas=False)
-    triples = sorted((r.subj, r.pred, r.obj) for r in res.triples.collect())
-    res.doc_rows.unpersist()
+    triples = sorted(_triples(corpus))
     assert triples == [
         ("golden/notes.txt", "mentions", "term::merge"),
         ("golden/notes.txt", "mentions", "term::sort"),
@@ -136,8 +133,6 @@ def test_new_grammars_through_front_door(spark, tmp_path):
     """A Rust and a C file must ingest with their real grammar ids and
     yield structural triples end-to-end (the r03 EXT_LANG gap: rs/c fell
     to prose until the rust/ruby/c grammars landed)."""
-    from scrapontologies_spark.plans.pipeline import run_pipeline
-
     root = tmp_path / "mixed"
     root.mkdir()
     (root / "graph.rs").write_text(
@@ -157,9 +152,7 @@ def test_new_grammars_through_front_door(spark, tmp_path):
     langs = {r.path: r.lang for r in corpus.select("path", "lang").collect()}
     assert langs == {"graph.rs": "rust", "main.c": "c"}
 
-    res = run_pipeline(corpus, chunk_bytes=512, with_schemas=False)
-    triples = {(r.subj, r.pred, r.obj) for r in res.triples.collect()}
-    res.doc_rows.unpersist()
+    triples = set(_triples(corpus))
     assert ("mixed/graph.rs", "defines", "mixed/graph.rs::Engine") in triples
     assert (
         "mixed/graph.rs::Engine",
@@ -210,8 +203,6 @@ def test_config_and_shell_grammars_through_front_door(spark, tmp_path):
     default EXT_LANG and produce defines/has_method/imports triples through
     the full pipeline — they must not silently fall to the prose
     gazetteer."""
-    from scrapontologies_spark.plans.pipeline import run_pipeline
-
     root = tmp_path / "cfg"
     root.mkdir()
     (root / "app.json").write_text('{"server": {"host": "h", "port": 1}}')
@@ -224,9 +215,7 @@ def test_config_and_shell_grammars_through_front_door(spark, tmp_path):
         "app.json": "json", "ci.yaml": "yaml",
         "Cargo.toml": "toml", "run.sh": "shell",
     }
-    res = run_pipeline(corpus, chunk_bytes=512, with_schemas=False)
-    triples = {(r.subj, r.pred, r.obj) for r in res.triples.collect()}
-    res.doc_rows.unpersist()
+    triples = set(_triples(corpus))
     assert ("cfg/app.json", "defines", "cfg/app.json::server") in triples
     assert ("cfg/app.json::server", "has_method", "cfg/app.json::host") in triples
     assert ("cfg/ci.yaml::jobs", "has_method", "cfg/ci.yaml::build") in triples

@@ -175,7 +175,10 @@ def test_triples_for_modern_ts_module():
 
 
 def test_ts_file_end_to_end_through_files_source(spark, tmp_path):
-    from scrapontologies_spark.plans.pipeline import run_pipeline
+    from scrapontologies_spark.operators.extract import (
+        extract_document_rows,
+        triples_view,
+    )
     from scrapontologies_spark.sources.files import corpus_from_files
 
     root = tmp_path / "webapp"
@@ -190,9 +193,8 @@ def test_ts_file_end_to_end_through_files_source(spark, tmp_path):
         "};\n"
     )
     corpus = corpus_from_files(spark, str(root))
-    res = run_pipeline(corpus, chunk_bytes=512, with_schemas=False)
-    triples = {(r.subj, r.pred, r.obj) for r in res.triples.collect()}
-    res.doc_rows.unpersist()
+    doc_rows = extract_document_rows(corpus, 512, with_schemas=False)
+    triples = {(r.subj, r.pred, r.obj) for r in triples_view(doc_rows).collect()}
     mod = "webapp/src/app.tsx"
     assert (mod, "imports", "lib::react-dom") in triples
     assert (mod, "defines", f"{mod}::AppProps") in triples

@@ -24,7 +24,12 @@ scanned), while the reference's extraction reads every file it is given
 
 from __future__ import annotations
 
-from scrapontologies_spark.functions.code_gazetteer import extract_mentions
+import os
+
+from scrapontologies_spark.functions.code_gazetteer import (
+    document_payload,
+    extract_mentions,
+)
 
 
 def _rows(lang, text):
@@ -250,3 +255,51 @@ def test_shell_stacked_heredocs_mask_every_body():
         "}\n"
     )
     assert _rows("shell", src) == [("function", "real_fn", "")]
+
+
+# --- double mask: a chunk of chunk_text_masked is masked again --------------
+# chunk_text_masked blanks a heredoc's body and terminator at document
+# level, then extract_mentions masks each chunk again.  The openers are
+# blanked with the body, so the second pass cannot re-open a heredoc whose
+# terminator is already blank and mask to the end of the chunk.
+
+
+def _doc_names(lang, text):
+    return set(document_payload(lang, text, 1024))
+
+
+def test_double_mask_shell_dash_quoted_heredoc():
+    src = "cat <<-'EOF'\n\tdef leaked() {\n\tEOF\nafter() {\n  echo hi\n}\n"
+    assert _doc_names("shell", src) == {"after"}
+
+
+def test_double_mask_docker_run_heredoc():
+    src = "FROM alpine AS b\nRUN <<'EOF'\nENV GHOST=1\nEOF\nENV REAL=1\n"
+    assert _doc_names("docker", src) == {"alpine", "b", "REAL"}
+
+
+def test_double_mask_ruby_squiggly_heredoc():
+    src = (
+        "class A\n"
+        "  def q\n"
+        "    x = <<~SQL\n"
+        "      def ghost; end\n"
+        "    SQL\n"
+        "  end\n"
+        "  def real\n"
+        "  end\n"
+        "end\n"
+    )
+    assert _doc_names("ruby", src) == {"A", "q", "real"}
+
+
+def test_double_mask_report_fixture_keeps_later_declarations():
+    # the P/R fixture: one 723-byte chunk whose heredoc sits mid-file
+    path = os.path.join(
+        os.path.dirname(__file__), "fixtures_realworld", "files", "lib", "report.rb"
+    )
+    with open(path, encoding="utf-8") as f:
+        src = f.read()
+    names = _doc_names("ruby", src)
+    assert {"open_tasks", "quick_report", "overdue_sql"} <= names
+    assert "ghost" not in names

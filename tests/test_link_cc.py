@@ -64,6 +64,45 @@ def test_reconcile_empty_existing_copies_new(spark):
     assert len(got) == 1 and got[0].id == "x" and json.loads(got[0].attributes) == {"k": 1}
 
 
+def test_salted_reconcile_equals_plain(spark):
+    """reconcile(salt=8) == reconcile(salt=0) row for row: a hot id carried
+    by many new rows, both-sided rows (the merge UDF), one-sided rows on
+    either side, and rows whose attributes are empty or NULL on one or
+    both sides."""
+    existing = spark.createDataFrame(
+        [
+            ("hot", "object", '{"a":1}'),
+            ("both", "object", '{"x":[1]}'),
+            ("e_only", "object", '{"k":"v"}'),
+            ("e_empty", "object", ""),
+            ("empty_e", "object", ""),
+            ("empty_n", "object", '{"z":3}'),
+            ("null_e", "object", None),
+        ],
+        ENT_SCHEMA,
+    )
+    new = spark.createDataFrame(
+        [("hot", "object", f'{{"n":{i}}}') for i in range(64)]
+        + [
+            ("both", "function", '{"x":[2],"y":"NA"}'),
+            ("n_only", "object", '{"q":1}'),
+            ("n_null", "object", None),
+            ("empty_e", "object", '{"y":2}'),
+            ("empty_n", "object", ""),
+            ("null_e", "object", '{"w":0}'),
+        ],
+        ENT_SCHEMA,
+    )
+    salted = sorted(map(tuple, reconcile(existing, new, salt=8).collect()), key=str)
+    plain = sorted(map(tuple, reconcile(existing, new, salt=0).collect()), key=str)
+    assert salted == plain
+    assert sum(r[0] == "hot" for r in plain) == 64
+    assert {r[0] for r in plain} == {
+        "hot", "both", "e_only", "e_empty", "empty_e", "empty_n", "null_e",
+        "n_only", "n_null",
+    }
+
+
 def test_pagerank_matches_python_power_iteration(spark):
     """Fixed-iteration PageRank == a driver-side power iteration on the
     same graph; duplicate edges count once; dangling nodes (no out-edges)
@@ -152,15 +191,27 @@ def test_cc_giant_star_skew(spark):
 def test_canonicalize_and_integrity_end_to_end(spark):
     """Alias edges from import stems → CC → triple rewrite, on a small
     synthetic pipeline run."""
-    from scrapontologies_spark.plans.pipeline import run_pipeline
+    from scrapontologies_spark.operators.extract import (
+        extract_document_rows,
+        module_entities_view,
+        symbol_entities_view,
+        triples_view,
+    )
     from scrapontologies_spark.sources.corpus import corpus_df
 
-    res = run_pipeline(corpus_df(spark, 40), chunk_bytes=512, with_schemas=False)
-    alias = module_alias_edges(res.entities)
+    doc_rows = extract_document_rows(
+        corpus_df(spark, 40), 512, with_schemas=False
+    ).persist()
+    entities = (
+        module_entities_view(doc_rows)
+        .select("id", "type", "attributes")
+        .unionByName(symbol_entities_view(doc_rows))
+    )
+    alias = module_alias_edges(entities)
     assert alias.count() > 0
     raw_labels = connected_components(alias)
     labels = prefer_real_canonical(raw_labels)
-    canon = canonicalize_triples(res.triples, labels)
+    canon = canonicalize_triples(triples_view(doc_rows), labels)
 
     # raw CC contract: every node maps to its component min
     label_map = {r.node: r.component for r in raw_labels.collect()}
@@ -188,7 +239,7 @@ def test_canonicalize_and_integrity_end_to_end(spark):
 
     # entity canonicalization: merged table keyed by canonical ids, and
     # referential integrity retains all defines/has_method triples
-    ents_canon = canonicalize_entities(res.entities, labels)
+    ents_canon = canonicalize_entities(entities, labels)
     ids = {r.id for r in ents_canon.select("id").collect()}
     assert not (ids & non_canonical)
     ok = referential_integrity(canon, ents_canon)
@@ -210,7 +261,7 @@ def test_canonicalize_and_integrity_end_to_end(spark):
         ],
         ENT_SCHEMA,
     )
-    ents = res.entities.unionByName(extra)
+    ents = entities.unionByName(extra)
     closed = set(prefer_real_canonical(module_alias_labels(ents)).collect())
     reference = set(
         prefer_real_canonical(connected_components(module_alias_edges(ents))).collect()
@@ -218,7 +269,7 @@ def test_canonicalize_and_integrity_end_to_end(spark):
     assert closed == reference
     assert ("lib::x/core.py", "lib::core") in closed
     assert ("lib::utils", "lib::x/utils.py") not in closed
-    res.doc_rows.unpersist()
+    doc_rows.unpersist()
 
 
 def test_prefer_real_canonical_alias_only_component(spark):

@@ -19,20 +19,42 @@ from scrapontologies_spark.functions.semantics import (
     is_na,
     schema_union_all,
 )
-from scrapontologies_spark.plans.pipeline import run_pipeline, verify_content_invariant
+from scrapontologies_spark.operators.extract import (
+    chunks_view,
+    doc_entities_view,
+    doc_schemas_view,
+    extract_document_rows,
+    mentions_df,
+    module_entities_view,
+    symbol_entities_view,
+    triples_view,
+)
+from scrapontologies_spark.operators.schema_merge import global_schema
+from scrapontologies_spark.plans.pipeline import verify_content_invariant
 from scrapontologies_spark.sources.corpus import corpus_df, corpus_rows
 
 N_ROWS = 120
 CHUNK_BYTES = 512  # small → guarantees multi-chunk docs → fold order matters
 
 
+def _entities(doc_rows):
+    """Module + symbol entities (id, type, attributes), as run_job reads them."""
+    modules = module_entities_view(doc_rows).select("id", "type", "attributes")
+    return modules.unionByName(symbol_entities_view(doc_rows))
+
+
+def _global_schema_json(doc_rows):
+    return canonical_json(global_schema(doc_schemas_view(doc_rows)))
+
+
 @pytest.fixture(scope="module")
 def result(spark):
+    """(corpus, one persisted fused pass, its global schema JSON)."""
     corpus = corpus_df(spark, N_ROWS).persist()
-    res = run_pipeline(corpus, chunk_bytes=CHUNK_BYTES)
-    yield corpus, res
+    doc_rows = extract_document_rows(corpus, CHUNK_BYTES).persist()
+    yield corpus, doc_rows, _global_schema_json(doc_rows)
     corpus.unpersist()
-    res.doc_rows.unpersist()
+    doc_rows.unpersist()
 
 
 def _oracle_triples():
@@ -43,10 +65,10 @@ def _oracle_triples():
 
 
 def test_triples_pr_is_one(result):
-    _, res = result
+    _, doc_rows, _ = result
     got = {
         (r.subj, r.pred, r.obj, r.rel_type)
-        for r in res.triples.collect()
+        for r in triples_view(doc_rows).collect()
     }
     expected = _oracle_triples()
     tp = len(got & expected)
@@ -59,9 +81,9 @@ def test_triples_pr_is_one(result):
 
 
 def test_fold_matches_sequential_oracle(result):
-    _, res = result
+    _, doc_rows, _ = result
     got = {}
-    for r in res.doc_entities.collect():
+    for r in doc_entities_view(doc_rows).collect():
         got.setdefault((r.repo, r.path), {})[r.entity_name] = json.loads(r.attributes)
     for repo, path, commit, lang, content in corpus_rows(N_ROWS):
         expected = document_payload(lang, content, CHUNK_BYTES)
@@ -70,27 +92,32 @@ def test_fold_matches_sequential_oracle(result):
 
 
 def test_sha256_invariant(result):
-    corpus, res = result
-    assert verify_content_invariant(corpus, res.chunks) == 0
+    corpus, doc_rows, _ = result
+    assert verify_content_invariant(corpus, chunks_view(doc_rows)) == 0
 
 
 def test_global_schema_matches_oracle(result):
-    _, res = result
+    _, _, gschema_json = result
     expected = schema_union_all(
         document_schema(lang, content, CHUNK_BYTES)
         for _, _, _, lang, content in corpus_rows(N_ROWS)
     )
-    assert res.global_schema_json == canonical_json(expected)
+    assert gschema_json == canonical_json(expected)
 
 
 def test_containment_relations_from_global_schema(result):
     """M5(a): every top-level global-schema property gets a ROOT has_<e>
     edge, and nested-object attributes (e.g. function.calls arrays) nest a
     second containment level — the Digraph exemplar shape."""
-    _, res = result
-    rels = res.containment_relations
+    from scrapontologies_spark.functions.semantics import (
+        derive_containment_relations,
+        schema_to_entities,
+    )
+
+    _, _, gschema_json = result
+    rels = derive_containment_relations(schema_to_entities(json.loads(gschema_json)))
     assert rels and all(r.type == "containment" for r in rels)
-    props = json.loads(res.global_schema_json)["properties"]
+    props = json.loads(gschema_json)["properties"]
     roots = {r.target for r in rels if r.source == "ROOT"}
     assert roots == set(props)
     assert all(r.name == f"has_{r.target}" for r in rels)
@@ -106,10 +133,7 @@ def test_containment_triples_per_doc_match_sequential_oracle(spark):
         derive_containment_relations,
         schema_to_entities,
     )
-    from scrapontologies_spark.operators.extract import (
-        containment_view,
-        extract_document_rows,
-    )
+    from scrapontologies_spark.operators.extract import containment_view
 
     corpus = corpus_df(spark, 30)
     doc_rows = extract_document_rows(
@@ -140,10 +164,10 @@ def test_p8_allowlist_restricts_whole_pipeline(spark):
 
     kinds = frozenset({"import"})
     corpus = corpus_df(spark, 30)
-    res = run_pipeline(
-        corpus, chunk_bytes=CHUNK_BYTES, with_schemas=False, allowed_kinds=kinds
+    doc_rows = extract_document_rows(
+        corpus, CHUNK_BYTES, with_schemas=False, allowed_kinds=kinds
     )
-    got = {(r.subj, r.pred, r.obj, r.rel_type) for r in res.triples.collect()}
+    got = {(r.subj, r.pred, r.obj, r.rel_type) for r in triples_view(doc_rows).collect()}
     assert {t[1] for t in got} <= {"imports"}
     expected = set()
     for repo, path, commit, lang, content in corpus_rows(30):
@@ -153,17 +177,10 @@ def test_p8_allowlist_restricts_whole_pipeline(spark):
                 mod, extract_mentions(lang, text, kinds, None)
             )
     assert got == expected and got
-    res.doc_rows.unpersist()
 
 
 def test_p8_jvm_mention_filter_matches_extraction_filter(spark):
     """mentions_df's JVM-side isin filter == filtering at extraction."""
-    from scrapontologies_spark.operators.extract import (
-        chunks_view,
-        extract_document_rows,
-        mentions_df,
-    )
-
     corpus = corpus_df(spark, 20)
     kinds = {"function", "class"}
 
@@ -179,11 +196,6 @@ def test_p8_jvm_mention_filter_matches_extraction_filter(spark):
 def test_emit_selection_schema_only_rows_identical(spark):
     """with_entities=False/with_triples=False must skip the fold and
     triple-set WORK but emit byte-identical schema/module rows."""
-    from scrapontologies_spark.operators.extract import (
-        doc_schemas_view,
-        extract_document_rows,
-    )
-
     corpus = corpus_df(spark, 20)
     full = extract_document_rows(corpus, CHUNK_BYTES, True, False)
     slim = extract_document_rows(
@@ -197,16 +209,18 @@ def test_emit_selection_schema_only_rows_identical(spark):
 
 
 def test_markdown_rows_produce_no_mentions(result):
-    _, res = result
-    assert res.mentions.filter("lang = 'markdown'").count() == 0
+    _, doc_rows, _ = result
+    mentions = mentions_df(chunks_view(doc_rows))
+    assert mentions.filter("lang = 'markdown'").count() == 0
 
 
 def test_entity_counts(result):
-    _, res = result
+    _, doc_rows, _ = result
     # one module entity per document + one entity per merged top-level key
     n_docs = len(corpus_rows(N_ROWS))
-    assert res.entities.filter("type = 'module'").count() == n_docs
-    assert res.entities.count() > n_docs
+    entities = _entities(doc_rows)
+    assert entities.filter("type = 'module'").count() == n_docs
+    assert entities.count() > n_docs
 
 
 def test_partitioning_invariance(spark):
@@ -222,9 +236,10 @@ def test_partitioning_invariance(spark):
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         try:
             corpus = corpus_df(spark, 30).repartition(parts)
-            res = run_pipeline(corpus, chunk_bytes=CHUNK_BYTES, with_schemas=False)
-            got = {(r.subj, r.pred, r.obj, r.rel_type) for r in res.triples.collect()}
-            res.doc_rows.unpersist()
+            triples = triples_view(
+                extract_document_rows(corpus, CHUNK_BYTES, with_schemas=False)
+            )
+            got = {(r.subj, r.pred, r.obj, r.rel_type) for r in triples.collect()}
             assert got == expected, f"divergence at shuffle.partitions={parts}"
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -233,37 +248,37 @@ def test_partitioning_invariance(spark):
 def test_emit_chunks_false_same_deliverables(result, spark):
     """The slim pass (no chunk rows) must produce byte-identical
     deliverables — triples, entities, global schema — to the full pass."""
-    corpus, full = result
-    slim = run_pipeline(corpus, chunk_bytes=CHUNK_BYTES, emit_chunks=False)
+    corpus, full, full_gschema_json = result
+    slim = extract_document_rows(corpus, CHUNK_BYTES, emit_chunks=False).persist()
     try:
-        assert slim.chunks.count() == 0
-        assert set(map(tuple, slim.triples.collect())) == set(
-            map(tuple, full.triples.collect())
+        assert chunks_view(slim).count() == 0
+        assert set(map(tuple, triples_view(slim).collect())) == set(
+            map(tuple, triples_view(full).collect())
         )
-        assert set(map(tuple, slim.entities.collect())) == set(
-            map(tuple, full.entities.collect())
+        assert set(map(tuple, _entities(slim).collect())) == set(
+            map(tuple, _entities(full).collect())
         )
-        assert slim.global_schema_json == full.global_schema_json
+        assert _global_schema_json(slim) == full_gschema_json
     finally:
-        slim.doc_rows.unpersist()
+        slim.unpersist()
 
 
-def test_pipeline_summary_matches_run_pipeline(result):
-    """The scaling bench's one-pass summary must report the same deliverable
-    counts and the same global schema as the staged pipeline."""
+def test_pipeline_summary_matches_views(result):
+    """The benches' one-pass summary must report the same deliverable
+    counts and the same global schema as the views of a fused pass."""
     from scrapontologies_spark.plans.pipeline import pipeline_summary
 
-    corpus, full = result
+    corpus, full, full_gschema_json = result
     counts, gschema_json = pipeline_summary(corpus, chunk_bytes=CHUNK_BYTES)
-    assert counts["triple"] == full.triples.count()
-    assert counts["entity"] + counts["module"] == full.entities.count()
-    assert gschema_json == full.global_schema_json
+    assert counts["triple"] == triples_view(full).count()
+    assert counts["entity"] + counts["module"] == _entities(full).count()
+    assert gschema_json == full_gschema_json
 
 
 def test_pipeline_summary_one_job_empty_and_null_keys(spark):
     """pipeline_summary is one Spark job (the kind counts ride the A5
     reduce as an observation), gives ({}, "{}") on an empty corpus, and
-    matches run_pipeline on NULL repo / path / content rows."""
+    matches the views of a fused pass on NULL repo / path / content rows."""
     from scrapontologies_spark.plans.pipeline import pipeline_summary
 
     schema = "repo string, path string, commit string, lang string, content string"
@@ -287,15 +302,15 @@ def test_pipeline_summary_one_job_empty_and_null_keys(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
-    full = run_pipeline(corpus, chunk_bytes=CHUNK_BYTES)
+    full = extract_document_rows(corpus, CHUNK_BYTES).persist()
     try:
-        assert counts["triple"] == full.triples.count()
-        assert counts["entity"] == full.doc_entities.count()
-        assert counts["module"] + counts["entity"] == full.entities.count()
-        assert counts["schema"] == full.doc_schemas.count() == 4
-        assert gschema_json == full.global_schema_json != "{}"
+        assert counts["triple"] == triples_view(full).count()
+        assert counts["entity"] == doc_entities_view(full).count()
+        assert counts["module"] + counts["entity"] == _entities(full).count()
+        assert counts["schema"] == doc_schemas_view(full).count() == 4
+        assert gschema_json == _global_schema_json(full) != "{}"
     finally:
-        full.doc_rows.unpersist()
+        full.unpersist()
 
 
 def test_content_invariant_catches_mixed_sha_rows(spark):
@@ -328,11 +343,6 @@ def test_content_invariant_catches_mixed_sha_rows(spark):
     assert verify_content_invariant(corpus, chunks_ok.limit(0)) == 1
     # a NULL repo or path is a real document identity (the kernel keeps
     # it): chunk rows that carry the right sha are not violations
-    from scrapontologies_spark.operators.extract import (
-        chunks_view,
-        extract_document_rows,
-    )
-
     null_keys = spark.createDataFrame(
         [(None, "b.py", "c", "python", "def g(): pass"), ("r", None, "c", "python", "x = 2")],
         corpus.schema,
@@ -347,13 +357,6 @@ def test_null_content_rows_do_not_abort_extraction(spark):
     NULL reads as the empty document — sha256(""), one empty chunk, a
     module row — and every other document extracts normally."""
     import hashlib
-
-    from scrapontologies_spark.operators.extract import (
-        chunks_view,
-        extract_document_rows,
-        module_entities_view,
-        triples_view,
-    )
 
     corpus = spark.createDataFrame(
         [

@@ -33,13 +33,8 @@ def test_resume_skips_and_matches(spark, corpus, tmp_path):
     from scrapontologies_spark.operators.extract import extract_document_rows
 
     # the 'extracted' stage's token carries extraction parameters ONLY
-    # (with_cc is downstream-only and lives in the cc/triples tokens)
-    cfg = {
-        "chunk_bytes": 512,
-        "allowed_kinds": None,
-        "allowed_terms": None,
-        "with_schemas": True,
-    }
+    # (the entities_prev state lives in the downstream tokens)
+    cfg = {"chunk_bytes": 512, "allowed_kinds": None, "allowed_terms": None}
     wh.run_stage(
         spark, "extracted", lambda: extract_document_rows(corpus, 512), config=cfg
     )
@@ -63,17 +58,6 @@ def test_rerun_everything_skipped(spark, corpus, tmp_path):
     assert {k: v.fingerprint for k, v in first.items()} == {
         k: v.fingerprint for k, v in second.items()
     }
-
-
-def test_flag_flip_invalidates_checkpoints(spark, corpus, tmp_path):
-    """with_schemas changes the 'extracted' rows themselves, so flipping it
-    between runs against the same warehouse must REBUILD, not serve the
-    stale checkpoint (which would yield an empty global schema)."""
-    root = str(tmp_path / "wh")
-    run_job(spark, corpus, root, chunk_bytes=512, with_schemas=False)
-    second = run_job(spark, corpus, root, chunk_bytes=512, with_schemas=True)
-    assert not second["extracted"].skipped
-    assert second["global_schema"].rows > 0
 
 
 def test_format_switch_orc_runs_and_resumes(spark, corpus, tmp_path):
@@ -137,40 +121,46 @@ def test_commit_spark_job_budget(spark, tmp_path):
 
 
 def test_salted_reconcile_job_stage_equivalence(spark, corpus, tmp_path):
-    """north_star skew mandate: the entity reconcile join runs salted in the
-    REAL job when entities_prev exists, and salted == plain on the job
-    stage's own fingerprint (order-independent modular sum of row hashes)."""
+    """north_star skew mandate: the REAL job reconciles against an
+    entities_prev table through the salted join, and its 'entities' stage
+    equals the plain full-outer reconcile(prev, new, salt=0) over the same
+    'extracted' rows."""
     from pyspark.sql import functions as F
 
-    seed_root = str(tmp_path / "seed")
-    run_job(spark, corpus, seed_root, chunk_bytes=512, with_cc=False,
-            with_schemas=False)
+    from scrapontologies_spark.operators.extract import (
+        extract_document_rows,
+        module_entities_view,
+        symbol_entities_view,
+    )
+    from scrapontologies_spark.operators.link import reconcile
+
+    def entities_of(doc_rows):
+        return (
+            module_entities_view(doc_rows)
+            .select("id", "type", "attributes")
+            .unionByName(symbol_entities_view(doc_rows))
+        )
+
     prev = (
-        Warehouse(seed_root)
-        .read_stage(spark, "entities")
+        entities_of(extract_document_rows(corpus, 512))
         .withColumn("attributes", F.lit('{"seen":"before"}'))
         .persist()
     )
-    prev.count()
+    n_prev = prev.count()
 
-    results = {}
-    for mode, s in [("salted", 8), ("plain", 0), ("default", None)]:
-        root = str(tmp_path / mode)
-        wh = Warehouse(root)
-        wh.run_stage(spark, "entities_prev", lambda: prev)
-        infos = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
-                        with_schemas=False, salt=s)
-        results[mode] = (infos["entities"].rows, infos["entities"].fingerprint)
-    # salted (explicit and default-on) and plain produce identical outputs
-    assert results["salted"] == results["plain"] == results["default"]
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.run_stage(spark, "entities_prev", lambda: prev)
+    infos = run_job(spark, corpus, wh.root, chunk_bytes=512)
+    plain = reconcile(prev, entities_of(wh.read_stage(spark, "extracted")), salt=0)
+    got = sorted(map(tuple, wh.read_stage(spark, "entities").collect()))
+    assert got == sorted(map(tuple, plain.collect()))
     # the reconcile really ran: merged rows beyond the seed's entity count
-    assert results["salted"][0] >= prev.count()
+    assert infos["entities"].rows == len(got) >= n_prev
     prev.unpersist()
-
 
 def test_metrics_lineage_rows(spark, corpus, tmp_path):
     root = str(tmp_path / "wh")
-    infos = run_job(spark, corpus, root, chunk_bytes=512, with_schemas=True)
+    infos = run_job(spark, corpus, root, chunk_bytes=512)
     m = Warehouse(root).metrics(spark)
     stages = {r.stage for r in m.collect()}
     assert stages == set(infos.keys())
@@ -183,7 +173,7 @@ def test_per_partition_lineage_consistent_with_metrics(spark, corpus, tmp_path):
     whose counts sum (and whose modular hash-sums combine) to the stage
     metrics row."""
     root = str(tmp_path / "wh")
-    infos = run_job(spark, corpus, root, chunk_bytes=512, with_schemas=True)
+    infos = run_job(spark, corpus, root, chunk_bytes=512)
     wh = Warehouse(root)
     lin = wh.lineage(spark).collect()
     by_stage: dict = {}
@@ -204,15 +194,13 @@ def test_config_mismatch_rebuilds_stage(spark, corpus, tmp_path):
     filter must rebuild, not serve the stale checkpoint (the resume marker
     carries a config token)."""
     root = str(tmp_path / "wh")
-    first = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
-                    with_schemas=False)
-    filtered = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
-                       with_schemas=False, allowed_kinds=frozenset({"import"}))
+    first = run_job(spark, corpus, root, chunk_bytes=512)
+    imports = frozenset({"import"})
+    filtered = run_job(spark, corpus, root, chunk_bytes=512, allowed_kinds=imports)
     assert not filtered["extracted"].skipped
     assert filtered["triples"].rows < first["triples"].rows
     # and an identical re-run of the filtered config IS skipped again
-    again = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
-                    with_schemas=False, allowed_kinds=frozenset({"import"}))
+    again = run_job(spark, corpus, root, chunk_bytes=512, allowed_kinds=imports)
     assert all(info.skipped for info in again.values())
     assert again["triples"].fingerprint == filtered["triples"].fingerprint
 
@@ -250,9 +238,8 @@ def test_job_cli_corpus_parquet_flag(spark, tmp_path):
     cpath = str(tmp_path / "corpus_pq")
     corpus.write.mode("overwrite").parquet(cpath)
     r1 = run_job(spark, spark.read.parquet(cpath), str(tmp_path / "wh_a"),
-                 chunk_bytes=512, with_cc=False, with_schemas=False)
-    r2 = run_job(spark, corpus, str(tmp_path / "wh_b"),
-                 chunk_bytes=512, with_cc=False, with_schemas=False)
+                 chunk_bytes=512)
+    r2 = run_job(spark, corpus, str(tmp_path / "wh_b"), chunk_bytes=512)
     assert {k: v.fingerprint for k, v in r1.items()} == {
         k: v.fingerprint for k, v in r2.items()
     }
@@ -265,8 +252,7 @@ def test_seeding_entities_prev_invalidates_entities_stage(spark, corpus, tmp_pat
     from the token, the second run would silently skip the merge.  The
     extraction stage, which does not depend on it, stays skipped."""
     root = str(tmp_path / "wh")
-    first = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
-                    with_schemas=False)
+    first = run_job(spark, corpus, root, chunk_bytes=512)
 
     from pyspark.sql import functions as F
 
@@ -278,26 +264,12 @@ def test_seeding_entities_prev_invalidates_entities_stage(spark, corpus, tmp_pat
     )
     wh.run_stage(spark, "entities_prev", lambda: prev)
 
-    second = run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
-                     with_schemas=False)
+    second = run_job(spark, corpus, root, chunk_bytes=512)
     assert second["extracted"].skipped          # extraction untouched
     assert not second["entities"].skipped       # reconcile actually ran
     assert not second["triples"].skipped
+    assert second["global_schema"].skipped      # schema chain does not read it
     assert second["entities"].fingerprint != first["entities"].fingerprint
-
-
-def test_cc_flip_rebuilds_triples_but_not_extraction(spark, corpus, tmp_path):
-    """with_cc changes only canonicalization and the final triples; flipping
-    it must NOT re-run the mapInPandas extraction (the 100 TB hot path) —
-    but must rebuild 'triples', whose rows it changes."""
-    root = str(tmp_path / "wh")
-    run_job(spark, corpus, root, chunk_bytes=512, with_cc=False,
-            with_schemas=False)
-    second = run_job(spark, corpus, root, chunk_bytes=512, with_cc=True,
-                     with_schemas=False)
-    assert second["extracted"].skipped
-    assert second["entities"].skipped
-    assert not second["triples"].skipped
 
 
 def test_aborted_rebuild_cannot_serve_half_rebuilt_data(spark, tmp_path):

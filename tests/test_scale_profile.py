@@ -195,29 +195,3 @@ def test_as_store_instance_passes_through(tmp_path):
     bst = BucketedBandStore("tbl", n_buckets=4)
     assert _as_store(bst, None) is bst
 
-
-# ---------------------------------------------------------------------------
-# run_job: corpus profile == default values on a small corpus (salt is a
-# physical knob; the profile only forces it on)
-# ---------------------------------------------------------------------------
-
-
-def test_run_job_corpus_profile_value_identical(spark, tmp_path):
-    from scrapontologies_spark.plans.job import run_job
-    from scrapontologies_spark.sources.corpus import corpus_df
-
-    corpus = corpus_df(spark, 20)
-    run_job(spark, corpus, str(tmp_path / "wh_default"), with_schemas=False)
-    run_job(spark, corpus, str(tmp_path / "wh_corpus"), with_schemas=False,
-            scale="corpus")
-    a = {
-        tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "wh_default" / "triples"))
-        .collect()
-    }
-    b = {
-        tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "wh_corpus" / "triples"))
-        .collect()
-    }
-    assert a == b and len(a) > 0

@@ -763,14 +763,14 @@ def test_job_cli_rejects_typos_and_missing_values():
 
     ap = _arg_parser()
     args = ap.parse_args(
-        ["/tmp/wh", "123", "--salt", "4", "--allowed-kinds", "function,class"]
+        ["/tmp/wh", "123", "--allowed-terms", "x", "--allowed-kinds", "function,class"]
     )
     assert args.warehouse_root == "/tmp/wh" and args.n_rows == 123
-    assert args.salt == 4 and args.allowed_kinds == "function,class"
+    assert args.allowed_terms == "x" and args.allowed_kinds == "function,class"
     with pytest.raises(SystemExit):
         ap.parse_args(["--allowed-kind", "function", "/tmp/wh"])  # typo
     with pytest.raises(SystemExit):
-        ap.parse_args(["--salt"])  # missing value
+        ap.parse_args(["--allowed-terms"])  # missing value
 
 
 def test_marker_counts_cross_engine_on_hostile_text(spark):
