@@ -108,14 +108,6 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _persistent_ids(spark) -> set:
-    # thin alias over the shared snapshot helper (operators.util) so the
-    # py4j iteration logic has exactly one home
-    from scrapontologies_spark.operators.util import persisted_rdd_ids
-
-    return persisted_rdd_ids(spark)
-
-
 def _release_new_persists(spark, keep_ids: set) -> None:
     """Unpersist RDDs persisted since ``keep_ids`` was snapshotted
     (operator-internal localCheckpoints).  Each timed query is a standalone
@@ -135,6 +127,7 @@ def main() -> None:
     sf = _sf_from_dir(sf_dir)
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from scrapontologies_spark.operators.util import persisted_rdd_ids
     from scrapontologies_spark.plans import driver_queries
     from scrapontologies_spark.plans.pipeline import pipeline_summary
     from scrapontologies_spark.session import build_session
@@ -177,7 +170,7 @@ def main() -> None:
     missing = [n for n in (*HEADLINE, *EXTRA_QUERIES) if n not in qmap]
     if missing:
         raise KeyError(f"bench queries missing from the registry: {missing}")
-    baseline_persists = _persistent_ids(spark)
+    baseline_persists = persisted_rdd_ids(spark)
 
     def _time_queries(names, store):
         for name in names:

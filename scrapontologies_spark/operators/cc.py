@@ -14,15 +14,21 @@ to truncate lineage; convergence = edge-set fingerprint (count + xxhash sum)
 stable — an O(1)-size driver check, no collect of the edge set.
 
 The code corpus's module-alias graph needs none of this: it is a disjoint
-union of stars, which :func:`module_alias_labels` labels in closed form
-(the KG job's ``alias_labels`` stage).  The rounds serve graphs of unknown
-shape — duplicate clustering and the dataset queries.
+union of stars, which :func:`module_alias_labels` labels in one closed-form
+pass with its preferred-canonical ids (the KG job's ``alias_labels``
+stage).  The rounds serve graphs of unknown shape — duplicate clustering
+and the dataset queries.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .util import persisted_rdd_ids, release_rdds
+
+# canonicalize_entities' largest component merged through one collect_list row
+_BATCH_CAP = 256
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -52,24 +58,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("u") != F.col("v")).distinct()
 
 
-def _persistent_rdd_ids(sc) -> set:
-    """Ids of RDDs currently holding persisted/localCheckpoint blocks
-    (JVM-side registry — the only handle that can release checkpoint
-    blocks; same access pattern as bench._persistent_ids)."""
-    it = sc._jsc.sc().getPersistentRDDs().keysIterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
-
-
-def _release_rdds(sc, rdd_ids: set) -> None:
-    m = sc._jsc.sc().getPersistentRDDs()
-    for rdd_id in rdd_ids:
-        if m.contains(rdd_id):
-            m.apply(rdd_id).unpersist(False)
-
-
 def _fingerprint(edges: DataFrame) -> tuple:
     # bit_xor is overflow-free (ANSI mode) and order-independent; edges are
     # distinct so xor-cancellation cannot collide consecutive iterations
@@ -81,9 +69,7 @@ def _fingerprint(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, checkpoint_every: int = 1
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """edges(u string, v string) → labels(node string, component string)
     with component = min node id of the connected component.
 
@@ -91,40 +77,26 @@ def connected_components(
     (no edges) are the identity mapping and are NOT emitted — callers
     coalesce(label, id).
     """
-    if checkpoint_every < 1:
-        # 0 would silently disable lineage truncation: each round embeds
-        # the previous round's plan ~4× (two unions, two join sides), so
-        # the unresolved plan grows 4^i and Catalyst analysis dies long
-        # before max_iter
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    sc = edges.sparkSession.sparkContext
+    spark = edges.sparkSession
     cur = edges.select("u", "v").filter(F.col("u") != F.col("v")).distinct()
     prev_fp = None
     prev_block_ids: set = set()
-    for i in range(max_iter):
+    for _ in range(max_iter):
         cur = _small_star(_large_star(cur))
-        if i % checkpoint_every == 0:
-            # LAZY checkpoint: the fingerprint aggregation below is the
-            # materializing action, so each round costs ONE Spark job
-            # (compute + checkpoint + convergence check together) instead
-            # of an eager-checkpoint job plus a fingerprint job.
-            before = _persistent_rdd_ids(sc)
-            cur = cur.localCheckpoint(eager=False)
-            fp = _fingerprint(cur)
-            # round i's blocks are live now, so round i-1's checkpoint is
-            # pure garbage — release it at the RDD level (unpersist() on
-            # the DataFrame cannot reach localCheckpoint blocks; left
-            # alone they accumulate one block set per round until a
-            # multi-minute full GC lands on an arbitrary later query —
-            # this repo's measured ~30 GB heap-growth failure mode).  The
-            # FINAL round's blocks stay live: the returned labels read
-            # them and a truncated lineage cannot recompute.
-            _release_rdds(sc, prev_block_ids)
-            prev_block_ids = _persistent_rdd_ids(sc) - before
-        else:
-            fp = _fingerprint(cur)
+        # LAZY checkpoint every round (an unchecked plan grows ~4× a round):
+        # the fingerprint aggregation below is the materializing action, so
+        # each round costs ONE Spark job (compute + checkpoint + convergence
+        # check together).
+        before = persisted_rdd_ids(spark)
+        cur = cur.localCheckpoint(eager=False)
+        fp = _fingerprint(cur)
+        # round i's blocks are live now, so round i-1's checkpoint is pure
+        # garbage — release it (left alone, one block set per round piles
+        # up until a multi-minute full GC: this repo's measured ~30 GB
+        # heap-growth failure mode).  The FINAL round's blocks stay live:
+        # the returned labels read them.
+        release_rdds(spark, prev_block_ids)
+        prev_block_ids = persisted_rdd_ids(spark) - before
         if fp == prev_fp:
             break
         prev_fp = fp
@@ -138,43 +110,6 @@ def connected_components(
     )
     return labels.unionByName(roots).groupBy("node").agg(
         F.min("component").alias("component")
-    )
-
-
-def prefer_real_canonical(
-    labels: DataFrame, alias_prefixes: tuple = ("lib::", "term::")
-) -> DataFrame:
-    """Re-pick each component's canonical id to prefer REAL entity nodes
-    over alias namespaces (lib::/term::): canonical = min member, but any
-    alias-prefixed member sorts after every real member ('~' > ASCII
-    letters).  A component with only alias members keeps its alias min.
-
-    Without this, a lib:: node (lexicographically < 'org...') would become
-    canonical and the rewrite would erase real module identity — observed
-    as a 2× triple loss in referential integrity.
-
-    Implemented as two conditional mins + coalesce, NOT a sentinel-prefixed
-    sort key: a '~' marker would mangle real ids that themselves start with
-    '~' (stripping their first character into a phantom node) and lose to
-    real ids whose first codepoint sorts above '~' (DEL, non-ASCII)."""
-    # lit(False) seed: with NO alias prefixes every member is "real" and
-    # the re-pick degrades to min-member (instead of `~None` raising)
-    is_alias = F.lit(False)
-    for p in alias_prefixes:
-        is_alias = is_alias | F.col("node").startswith(p)
-    best = (
-        labels.groupBy("component")
-        .agg(
-            F.min(F.when(~is_alias, F.col("node"))).alias("_real_min"),
-            F.min("node").alias("_all_min"),
-        )
-        .select(
-            "component",
-            F.coalesce("_real_min", "_all_min").alias("_canonical"),
-        )
-    )
-    return labels.join(best, "component").select(
-        "node", F.col("_canonical").alias("component")
     )
 
 
@@ -198,9 +133,7 @@ def canonicalize_triples(triples: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize_entities(
-    entities: DataFrame, labels: DataFrame, batch_cap: int = 256
-) -> DataFrame:
+def canonicalize_entities(entities: DataFrame, labels: DataFrame) -> DataFrame:
     """Merge entity rows that canonicalize to the same id: group by the
     component label (identity where unlabeled) and fold attributes with the
     A1 merge in ascending-id order — a deterministic order for the
@@ -208,7 +141,7 @@ def canonicalize_entities(
 
     Shape at scale, two-path by component size:
 
-    - components with ≤ ``batch_cap`` members (the overwhelming majority —
+    - components with ≤ ``_BATCH_CAP`` members (the overwhelming majority —
       alias stars are usually 2-row): the JVM groups members per component
       (collect_list is a map-side-combining aggregation) and ONE
       Arrow-batched scalar pandas UDF merges thousands of components per
@@ -216,8 +149,8 @@ def canonicalize_entities(
       form paid a pandas DataFrame construction per COMPONENT — ~0.2 ms ×
       200k tiny groups of pure overhead at sf1 (measured 42.9 s → 16.3 s
       isolated; job stage 44.3 → 11.5 s).
-    - GIANT components (hot alias stems — module_alias_edges warns a stem
-      like ``utils`` can alias one node per repo): streamed per-group
+    - GIANT components (hot alias stems — a stem like ``utils`` can alias
+      one module per repo, see :func:`module_alias_labels`): streamed per-group
       applyInPandas, because collect_list would buffer the whole
       component's payloads in one UnsafeRow (BufferHolder's 2 GB hard cap)
       and one Arrow batch would carry up to maxRecordsPerBatch such rows.
@@ -251,7 +184,7 @@ def canonicalize_entities(
             ]
         )
         # the merged row keeps the CANONICAL member's type when that node
-        # is in the group (prefer_real_canonical may pick a non-min id);
+        # is in the group (module_alias_labels may pick a non-min id);
         # min-id type is only the fallback for components whose canonical
         # node carries no entity row
         typ = next(
@@ -281,8 +214,8 @@ def canonicalize_entities(
 
     sizes = labeled.groupBy("component").agg(F.count("*").alias("_n"))
     sized = labeled.join(sizes, "component")
-    small = sized.filter(F.col("_n") <= batch_cap)
-    giant = sized.filter(F.col("_n") > batch_cap)
+    small = sized.filter(F.col("_n") <= _BATCH_CAP)
+    giant = sized.filter(F.col("_n") > _BATCH_CAP)
 
     grouped = small.groupBy("component").agg(
         F.collect_list(F.struct("id", "type", "attributes")).alias("_members")
@@ -300,37 +233,46 @@ def canonicalize_entities(
     return untouched.unionByName(merged_small).unionByName(merged_giant)
 
 
-def module_alias_edges(entities: DataFrame) -> DataFrame:
-    """Alias rule for the code corpus: an import target ``lib::<stem>``
-    aliases every module entity whose filename stem is <stem> (JVM-side
-    regexp on the module id).  Hot stems produce giant star components;
-    :func:`module_alias_labels` labels them without CC rounds."""
-    mods = entities.filter(F.col("type") == "module").select(
-        F.col("id").alias("u"),
-        F.concat(
-            F.lit("lib::"),
-            F.regexp_extract(F.col("id"), r"([A-Za-z0-9_]+)\.[A-Za-z0-9]+$", 1),
-        ).alias("v"),
-    )
-    return mods.filter(F.col("v") != "lib::")
-
-
 def module_alias_labels(entities: DataFrame) -> DataFrame:
-    """Component labels of the :func:`module_alias_edges` graph in closed
-    form: (u, v) ∪ (v, v) as (node, component), no CC rounds.
+    """Component labels (node, component) of the code corpus's alias
+    graph in one closed-form pass — no CC rounds.
 
-    Every edge's v = ``lib::<stem>`` is a function of its u, so each u has
-    exactly one neighbour; and every u matched ``\\.[A-Za-z0-9]+$`` — it
-    contains a '.', which no v does — so no node is both a u and a v.  The
-    graph is therefore a disjoint union of stars centred on the
-    ``lib::<stem>`` nodes, and each star's centre labels its component.
-    Same partition as ``connected_components(module_alias_edges(e))``
-    (component ids differ: the centre, not the min member), so after
-    :func:`prefer_real_canonical`, which depends only on the partition,
-    the two agree row for row."""
-    edges = module_alias_edges(entities)
-    return (
-        edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
-        .unionByName(edges.select(F.col("v").alias("node"), F.col("v").alias("component")))
+    Alias rule: an import target ``lib::<stem>`` aliases every module whose
+    basename is ``<stem>.<ext>`` (a basename with a '-' or a second '.',
+    e.g. ``api.d.ts``, has none).  Each module has one centre and no module
+    id (it contains a '.') is a centre, so the graph is a disjoint union of
+    stars centred on the ``lib::<stem>`` nodes: grouping modules by centre
+    IS the partition.  Hot stems (``utils``) make giant stars.
+
+    Canonical id: the min REAL member, so the rewrite never erases real
+    module identity behind an alias (once a 2× triple loss in referential
+    integrity); an all-alias (lib::/term::) star takes its min node, centre
+    included.  Conditional mins, not a sentinel sort key: a '~' marker
+    would mangle real ids starting with '~' and lose to ids sorting above
+    '~' (non-ASCII)."""
+    mods = (
+        entities.filter(F.col("type") == "module")
+        .select(
+            F.col("id").alias("node"),
+            F.concat(
+                F.lit("lib::"),
+                F.regexp_extract(
+                    F.col("id"), r"(?:^|/)([A-Za-z0-9_]+)\.[A-Za-z0-9]+$", 1
+                ),
+            ).alias("centre"),
+        )
+        .filter(F.col("centre") != "lib::")
         .distinct()
+    )
+    is_alias = F.col("node").startswith("lib::") | F.col("node").startswith("term::")
+    canon = mods.groupBy("centre").agg(
+        F.coalesce(
+            F.min(F.when(~is_alias, F.col("node"))),
+            F.least(F.min("node"), F.col("centre")),
+        ).alias("component")
+    )
+    return (
+        mods.join(canon, "centre")
+        .select("node", "component")
+        .unionByName(canon.select(F.col("centre").alias("node"), "component"))
     )

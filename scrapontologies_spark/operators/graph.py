@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import persisted_rdd_ids, release_rdds
+
 
 def pagerank(
     edges: DataFrame,
@@ -67,9 +69,7 @@ def pagerank(
     # ~30 GB heap-growth / full-GC failure mode.  The loop-invariant ew /
     # nodes checkpoints and the FINAL ranks checkpoint stay live (the
     # returned frame reads them; truncated lineage cannot recompute).
-    from .cc import _persistent_rdd_ids, _release_rdds
-
-    sc = edges.sparkSession.sparkContext
+    spark = edges.sparkSession
     prev_block_ids: set = set()
     ranks = nodes.withColumn("rank", F.lit(1.0))
     for i in range(iters):
@@ -90,8 +90,8 @@ def pagerank(
             )
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            before = _persistent_rdd_ids(sc)
+            before = persisted_rdd_ids(spark)
             ranks = ranks.localCheckpoint(eager=True)
-            _release_rdds(sc, prev_block_ids)
-            prev_block_ids = _persistent_rdd_ids(sc) - before
+            release_rdds(spark, prev_block_ids)
+            prev_block_ids = persisted_rdd_ids(spark) - before
     return ranks

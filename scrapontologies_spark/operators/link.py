@@ -3,14 +3,15 @@
 The reference's entity reconcile is a full outer join on ``Entity.id`` with
 attribute-level merge, executed by an LLM per UPDATE_ENTITIES_PROMPT rules
 1-4 (pdf_parser.py:310-339, prompts.py:230-250; SURVEY §2.3 J1, §2.11 M6).
-Here: a real full-outer DataFrame join; matched rows merge attributes with
-the A1 deep merge inside an Arrow-batched pandas UDF (exactly-once per pair
-— A1 is NOT idempotent on lists, so the join is the only place merge runs).
+Here: a full outer on ``id`` built from one salted left join plus one anti
+join; matched rows merge attributes with the A1 deep merge inside an
+Arrow-batched pandas UDF (exactly-once per pair — A1 is NOT idempotent on
+lists, so the join is the only place merge runs).
 
-Skew handling (BASELINE north_star): ``salted_join`` replicates the
-dimension side S ways and routes fact rows by a *deterministic* hash salt —
-never rand() (reruns must reproduce).  AQE skew-join stays on as the second
-line of defense (session.py).
+Skew handling (BASELINE north_star): every reconcile is salted —
+``salted_join`` replicates the dimension side 8 ways and routes fact rows
+by a *deterministic* hash salt, never rand() (reruns must reproduce).  AQE
+skew-join stays on as the second line of defense (session.py).
 """
 
 from __future__ import annotations
@@ -24,6 +25,9 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.semantics import canonical_json, merge_dicts_preferring_non_na
+
+# salted_join's slice count: the ×dim replication factor of the reconcile
+_SALT = 8
 
 
 @pandas_udf(T.StringType())
@@ -42,7 +46,7 @@ def _merge_attrs_udf(existing: pd.Series, new: pd.Series) -> pd.Series:
     return pd.Series([merge_one(a, b) for a, b in zip(existing, new)])
 
 
-def reconcile(existing: DataFrame, new: DataFrame, salt: int = 0) -> DataFrame:
+def reconcile(existing: DataFrame, new: DataFrame) -> DataFrame:
     """Full-outer reconcile of two entity tables (id, type, attributes).
 
     Rules (prompts.py:230-250): same id → A1-merge attributes (existing
@@ -55,13 +59,12 @@ def reconcile(existing: DataFrame, new: DataFrame, salt: int = 0) -> DataFrame:
     identical values (``merge_one`` returns the other side verbatim when
     one side is None/''), asserted by the plan test and the value oracle.
 
-    ``salt > 0`` — the BASELINE north_star skew path for the entity-linking
-    join: the full outer is decomposed into matched ∪ left-only ∪
-    right-only, with the matched inner join and the new-side anti join
-    running through :func:`salted_join` (new = fact, existing = dim ×salt),
-    so a hot entity id whose ``new`` rows all hash to one reducer spreads
-    across ``salt`` partitions.  Value-identical to the plain path
-    (equivalence-tested at the job stage).
+    Skew path (BASELINE north_star): matched and new-only rows come from
+    ONE :func:`salted_join` (new = fact, existing = dim ×_SALT), so a hot
+    id's ``new`` rows spread over ``_SALT`` reducers; existing-only rows
+    from a plain anti join (existing is dimension-shaped — no hot keys).
+    Equal to the plain full outer for every input, NULL and duplicate ids
+    included.
     """
     e = existing.select(
         F.col("id"),
@@ -73,19 +76,11 @@ def reconcile(existing: DataFrame, new: DataFrame, salt: int = 0) -> DataFrame:
         F.col("type").alias("_type_n"),
         F.col("attributes").alias("_attrs_n"),
     )
-    if salt > 0:
-        null_s = F.lit(None).cast("string")
-        matched = salted_join(n, e, "id", how="inner", salt=salt)
-        right_only = salted_join(
-            n, e.select("id"), "id", how="left_anti", salt=salt
-        ).withColumns({"_type_e": null_s, "_attrs_e": null_s})
-        # existing side is one row per id (dimension-shaped) — no hot keys
-        left_only = e.join(n.select("id"), "id", "left_anti").withColumns(
-            {"_type_n": null_s, "_attrs_n": null_s}
-        )
-        joined = matched.unionByName(right_only).unionByName(left_only)
-    else:
-        joined = e.join(n, "id", "full_outer")
+    null_s = F.lit(None).cast("string")
+    left_only = e.join(n.select("id"), "id", "left_anti").withColumns(
+        {"_type_n": null_s, "_attrs_n": null_s}
+    )
+    joined = salted_join(n, e, "id").unionByName(left_only)
     a, b = F.col("_attrs_e"), F.col("_attrs_n")
     a_absent = a.isNull() | (a == "")
     b_absent = b.isNull() | (b == "")
@@ -99,47 +94,27 @@ def reconcile(existing: DataFrame, new: DataFrame, salt: int = 0) -> DataFrame:
     return simple.unionByName(merged)
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    how: str = "inner",
-    salt: int = 8,
-) -> DataFrame:
-    """Equi-join with explicit key salting for hot keys (SURVEY §4).
+def salted_join(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
+    """Left equi-join with explicit key salting for hot keys (SURVEY §4).
 
     The fact side derives a deterministic salt from its whole-row hash;
-    the dim side is replicated ×salt via explode(sequence).  Result
-    columns = fact ⋈ dim minus the helper columns.  Use when one join key
+    the dim side is replicated ×_SALT via explode(sequence).  Result
+    columns = fact ⟕ dim minus the helper column.  Use when one join key
     (mega-repo, hot entity id) dominates; for small dims prefer
     F.broadcast instead.
 
-    Only fact-driven join types are valid: each fact row carries ONE salt,
-    so inner/left/semi/anti results are value-identical to the unsalted
-    join — but an unmatched dim key survives in salt-1 spurious replicas
-    under right/full_outer (each unmatched (key, salt) replica would emit
-    its own null-padded row), so those are rejected rather than silently
-    duplicating data.
+    Left (fact-driven) only: each fact row carries ONE salt, so it meets
+    every dim row of its key in exactly one slice — value-identical to the
+    unsalted left join (a right/full outer would emit _SALT null-padded
+    replicas per unmatched dim key).
     """
-    allowed = {
-        "inner", "left", "left_outer", "leftouter",
-        "semi", "left_semi", "leftsemi",
-        "anti", "left_anti", "leftanti",
-    }
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join: how={how!r} is not fact-driven; the ×{salt} dim "
-            "replication would emit spurious rows for unmatched dim keys. "
-            f"Use one of {sorted(allowed)} or an unsalted join."
-        )
     f = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.struct(*fact.columns)), F.lit(salt)).cast("int")
+        "_salt", F.pmod(F.xxhash64(F.struct(*fact.columns)), F.lit(_SALT)).cast("int")
     )
     d = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(_SALT - 1)))
     ).withColumn("_salt", F.col("_salt").cast("int"))
-    out = f.join(d, [key, "_salt"], how)
-    return out.drop("_salt")
+    return f.join(d, [key, "_salt"], "left").drop("_salt")
 
 
 def referential_integrity(triples: DataFrame, entities: DataFrame) -> DataFrame:

@@ -118,22 +118,26 @@ def persisted_rdd_ids(spark) -> set:
     return out
 
 
+def release_rdds(spark, rdd_ids) -> None:
+    """Unpersist the persistent RDDs among ``rdd_ids`` (non-blocking) —
+    the single home of the release loop.  RDD-level, because
+    ``DataFrame.unpersist`` cannot reach localCheckpoint blocks."""
+    m = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    for rdd_id in rdd_ids:
+        if m.contains(rdd_id):
+            m.apply(rdd_id).unpersist(False)
+
+
 def unpersist_rdds(spark, keep_ids: "frozenset | set" = frozenset()) -> None:
     """Unpersist every persistent RDD not in ``keep_ids`` (non-blocking).
 
-    The single home of the release loop shared by bench.py, sf1_bench and
-    cross_scale_check: operator-internal localCheckpoints are scoped to one
-    query execution, and a runner that executes many queries in one session
-    must drop them between queries — otherwise checkpoint blocks accumulate
-    until a multi-minute full GC lands on an arbitrary query (observed at
-    sf1: same query 8.5 s vs 107 s, identical code/data)."""
-    sc = spark.sparkContext._jsc.sc()
-    m = sc.getPersistentRDDs()
-    it = m.keysIterator()
-    while it.hasNext():
-        rdd_id = it.next()
-        if rdd_id not in keep_ids:
-            m.apply(rdd_id).unpersist(False)
+    Shared by bench.py, sf1_bench and cross_scale_check: operator-internal
+    localCheckpoints are scoped to one query execution, and a runner that
+    executes many queries in one session must drop them between queries —
+    otherwise checkpoint blocks accumulate until a multi-minute full GC
+    lands on an arbitrary query (observed at sf1: same query 8.5 s vs
+    107 s, identical code/data)."""
+    release_rdds(spark, persisted_rdd_ids(spark) - set(keep_ids))
 
 
 def gram_array(toks, n: int):

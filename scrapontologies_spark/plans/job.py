@@ -26,10 +26,11 @@ warehouse's committer thread while the next stage writes (sources/io.py).
 Shuffle layout per BASELINE north_star: explicit repartition(repo, lang)
 before the link stage; AQE + skew-join on (session.py); the deleted-ids /
 alias dimension sides broadcast; the entity reconcile against an
-``entities_prev`` table always runs salted (8 slices) — the
-incremental-merge case where a mega-repo's new entities can hash-skew the
-link join.  Salted == plain (operators/link.reconcile, equivalence-tested
-at the operator and at the job stage).
+``entities_prev`` table (operators/link.reconcile) is one salted left join
+(8 slices) plus one anti join — the incremental-merge case where a
+mega-repo's new entities can hash-skew the link join.  Its rows are
+checked against the pure-Python full outer (functions/semantics) at the
+operator and at the job stage.
 
 Usage (cluster — spark-submit takes a primary .py FILE, not a module):
     spark-submit --py-files scrapontologies_spark.zip \
@@ -53,7 +54,6 @@ from ..operators.cc import (
     canonicalize_entities,
     canonicalize_triples,
     module_alias_labels,
-    prefer_real_canonical,
 )
 from ..operators.extract import (
     doc_schemas_view,
@@ -153,15 +153,11 @@ def run_job(
             # read behind ent_cfg's token too)
             if prev_meta is not None:
                 existing = wh.read_stage(spark, "entities_prev")
-                return reconcile(existing, new, salt=8)
+                return reconcile(existing, new)
             return new
 
         entities = stage("entities", build_entities, ent_cfg)
-        labels = stage(
-            "alias_labels",
-            lambda: prefer_real_canonical(module_alias_labels(entities)),
-            ent_cfg,
-        )
+        labels = stage("alias_labels", lambda: module_alias_labels(entities), ent_cfg)
         return labels, stage(
             "entities_canonical",
             lambda: canonicalize_entities(entities, labels),

@@ -30,7 +30,9 @@ passing would muddy diagnosis), and exits nonzero if ANY step failed:
 
 In `--fast` mode step 1 runs only FAST_TESTS: the suites that pin every
 caller of the global-schema reduce, plus `run_job`'s stage DAG, resume and
-marker order (`tests/test_resumability.py`), which step 4 never runs.
+marker order (`tests/test_resumability.py`), which step 4 never runs, and
+the entity-linking operators behind the job's reconcile and alias labels
+(`tests/test_link_cc.py`), which step 5 exercises only in full mode.
 
 Usage:
   python scripts/run_all_checks.py            # everything (~25-35 min)
@@ -55,6 +57,7 @@ FAST_TESTS = [
     "tests/test_api_facade.py",
     "tests/test_ddl.py",
     "tests/test_resumability.py",
+    "tests/test_link_cc.py",
 ]
 
 

@@ -12,14 +12,13 @@ from pyspark.sql import functions as F
 from scrapontologies_spark.functions.semantics import (
     Entity,
     canonical_json,
+    merge_dicts_preferring_non_na,
     reconcile_entities,
 )
 from scrapontologies_spark.operators.cc import (
     canonicalize_entities,
-    prefer_real_canonical,
     canonicalize_triples,
     connected_components,
-    module_alias_edges,
     module_alias_labels,
 )
 from scrapontologies_spark.operators.link import (
@@ -64,42 +63,72 @@ def test_reconcile_empty_existing_copies_new(spark):
     assert len(got) == 1 and got[0].id == "x" and json.loads(got[0].attributes) == {"k": 1}
 
 
+def _full_outer_reconcile(existing, new):
+    """Pure-Python full outer on id (NULL never matches): the A1 merge
+    where both payloads are non-empty, else the existing payload unless it
+    is empty/NULL — the reconcile contract, row for row, duplicates on
+    both sides included."""
+    def absent(a):
+        return a is None or a == ""
+
+    def merged(e, n):
+        typ = e[1] if e[1] is not None else n[1]
+        if absent(e[2]) or absent(n[2]):
+            return (e[0], typ, n[2] if absent(e[2]) else e[2])
+        return (e[0], typ, canonical_json(
+            merge_dicts_preferring_non_na(json.loads(e[2]), json.loads(n[2]))
+        ))
+
+    out = []
+    for e in existing:
+        hits = [n for n in new if e[0] is not None and n[0] == e[0]]
+        out += [merged(e, n) for n in hits] or [merged(e, (e[0], None, None))]
+    e_ids = {e[0] for e in existing if e[0] is not None}
+    out += [merged((n[0], None, None), n) for n in new if n[0] not in e_ids]
+    return out
+
+
 def test_salted_reconcile_equals_plain(spark):
-    """reconcile(salt=8) == reconcile(salt=0) row for row: a hot id carried
-    by many new rows, both-sided rows (the merge UDF), one-sided rows on
-    either side, and rows whose attributes are empty or NULL on one or
-    both sides."""
-    existing = spark.createDataFrame(
-        [
-            ("hot", "object", '{"a":1}'),
-            ("both", "object", '{"x":[1]}'),
-            ("e_only", "object", '{"k":"v"}'),
-            ("e_empty", "object", ""),
-            ("empty_e", "object", ""),
-            ("empty_n", "object", '{"z":3}'),
-            ("null_e", "object", None),
-        ],
-        ENT_SCHEMA,
-    )
-    new = spark.createDataFrame(
-        [("hot", "object", f'{{"n":{i}}}') for i in range(64)]
-        + [
-            ("both", "function", '{"x":[2],"y":"NA"}'),
-            ("n_only", "object", '{"q":1}'),
-            ("n_null", "object", None),
-            ("empty_e", "object", '{"y":2}'),
-            ("empty_n", "object", ""),
-            ("null_e", "object", '{"w":0}'),
-        ],
-        ENT_SCHEMA,
-    )
-    salted = sorted(map(tuple, reconcile(existing, new, salt=8).collect()), key=str)
-    plain = sorted(map(tuple, reconcile(existing, new, salt=0).collect()), key=str)
-    assert salted == plain
-    assert sum(r[0] == "hot" for r in plain) == 64
-    assert {r[0] for r in plain} == {
+    """The salted reconcile == a pure-Python full outer row for row: a hot
+    id carried by many new rows, both-sided rows (the merge UDF),
+    one-sided rows on either side, rows whose attributes are empty or NULL
+    on one or both sides, NULL ids on both sides, and ids duplicated on
+    both sides (a full outer emits their cross product)."""
+    existing_rows = [
+        ("hot", "object", '{"a":1}'),
+        ("both", "object", '{"x":[1]}'),
+        ("e_only", "object", '{"k":"v"}'),
+        ("e_empty", "object", ""),
+        ("empty_e", "object", ""),
+        ("empty_n", "object", '{"z":3}'),
+        ("null_e", "object", None),
+        (None, "object", '{"nid":"e"}'),
+        ("dup", "object", '{"d":[1]}'),
+        ("dup", "object", '{"d":[2]}'),
+    ]
+    new_rows = [("hot", "object", f'{{"n":{i}}}') for i in range(64)] + [
+        ("both", "function", '{"x":[2],"y":"NA"}'),
+        ("n_only", "object", '{"q":1}'),
+        ("n_null", "object", None),
+        ("empty_e", "object", '{"y":2}'),
+        ("empty_n", "object", ""),
+        ("null_e", "object", '{"w":0}'),
+        (None, "object", '{"nid":"n"}'),
+        ("dup", "object", '{"d":[3]}'),
+        ("dup", "object", ""),
+    ]
+    got = reconcile(
+        spark.createDataFrame(existing_rows, ENT_SCHEMA),
+        spark.createDataFrame(new_rows, ENT_SCHEMA),
+    ).collect()
+    expected = _full_outer_reconcile(existing_rows, new_rows)
+    assert sorted(map(tuple, got), key=str) == sorted(expected, key=str)
+    assert sum(r[0] == "hot" for r in expected) == 64
+    assert sum(r[0] == "dup" for r in expected) == 4
+    assert sum(r[0] is None for r in expected) == 2
+    assert {r[0] for r in expected} == {
         "hot", "both", "e_only", "e_empty", "empty_e", "empty_n", "null_e",
-        "n_only", "n_null",
+        "n_only", "n_null", "dup", None,
     }
 
 
@@ -130,15 +159,20 @@ def test_pagerank_matches_python_power_iteration(spark):
 
 
 def test_salted_join_equals_plain_join(spark):
+    """salted_join == the plain left join row for row, unmatched fact keys
+    (null-padded) and unmatched dim keys (dropped) included."""
     fact = spark.createDataFrame(
-        [(i % 5, f"f{i}") for i in range(200)], "k int, payload string"
+        [(i % 7, f"f{i}") for i in range(200)], "k int, payload string"
     )
-    dim = spark.createDataFrame([(i, f"d{i}") for i in range(5)], "k int, name string")
-    plain = {(r.k, r.payload, r.name) for r in fact.join(dim, "k").collect()}
-    salted = {
-        (r.k, r.payload, r.name)
-        for r in salted_join(fact, dim, "k", salt=4).collect()
-    }
+    dim = spark.createDataFrame(
+        [(i, f"d{i}") for i in range(2, 9)], "k int, name string"
+    )
+    plain = sorted(
+        (r.k, r.payload, r.name) for r in fact.join(dim, "k", "left").collect()
+    )
+    salted = sorted(
+        (r.k, r.payload, r.name) for r in salted_join(fact, dim, "k").collect()
+    )
     assert salted == plain
 
 
@@ -188,6 +222,30 @@ def test_cc_giant_star_skew(spark):
     assert len(labels) == 501
 
 
+def _star_edges(entities):
+    """The alias rule as an edge list (module id, lib::<basename stem>),
+    the CC reference's input for module_alias_labels."""
+    stem = F.regexp_extract(
+        F.col("id"), r"(?:^|/)([A-Za-z0-9_]+)\.[A-Za-z0-9]+$", 1
+    )
+    return (
+        entities.filter(F.col("type") == "module")
+        .select(F.col("id").alias("u"), F.concat(F.lit("lib::"), stem).alias("v"))
+        .filter(F.col("v") != "lib::")
+    )
+
+
+def _preferred(members):
+    """Min real member, else (all aliases) min member."""
+    real = [m for m in members if not m.startswith(("lib::", "term::"))]
+    return min(real) if real else min(members)
+
+
+def _module_labels(spark, ids):
+    ents = spark.createDataFrame([(i, "module", "{}") for i in ids], ENT_SCHEMA)
+    return {r.node: r.component for r in module_alias_labels(ents).collect()}
+
+
 def test_canonicalize_and_integrity_end_to_end(spark):
     """Alias edges from import stems → CC → triple rewrite, on a small
     synthetic pipeline run."""
@@ -207,10 +265,10 @@ def test_canonicalize_and_integrity_end_to_end(spark):
         .select("id", "type", "attributes")
         .unionByName(symbol_entities_view(doc_rows))
     )
-    alias = module_alias_edges(entities)
+    alias = _star_edges(entities)
     assert alias.count() > 0
     raw_labels = connected_components(alias)
-    labels = prefer_real_canonical(raw_labels)
+    labels = module_alias_labels(entities)
     canon = canonicalize_triples(triples_view(doc_rows), labels)
 
     # raw CC contract: every node maps to its component min
@@ -225,10 +283,9 @@ def test_canonicalize_and_integrity_end_to_end(spark):
     # preferred-canonical contract: canonical = min REAL member when the
     # component has any non-alias node
     pref_map = {r.node: r.component for r in labels.collect()}
+    assert set(pref_map) == set(oracle)
     for n, root in oracle.items():
-        real = [m for m in comp_members[root] if not m.startswith(("lib::", "term::"))]
-        expect = min(real) if real else min(comp_members[root])
-        assert pref_map[n] == expect, n
+        assert pref_map[n] == _preferred(comp_members[root]), n
 
     # rewrite leaves no non-canonical members anywhere, and every canonical
     # module subject is a real entity id
@@ -262,42 +319,52 @@ def test_canonicalize_and_integrity_end_to_end(spark):
         ENT_SCHEMA,
     )
     ents = entities.unionByName(extra)
-    closed = set(prefer_real_canonical(module_alias_labels(ents)).collect())
-    reference = set(
-        prefer_real_canonical(connected_components(module_alias_edges(ents))).collect()
-    )
+    closed = set(module_alias_labels(ents).collect())
+    cc = {r.node: r.component for r in connected_components(_star_edges(ents)).collect()}
+    members: dict = {}
+    for n, c in cc.items():
+        members.setdefault(c, []).append(n)
+    reference = {(n, _preferred(members[c])) for n, c in cc.items()}
     assert closed == reference
     assert ("lib::x/core.py", "lib::core") in closed
     assert ("lib::utils", "lib::x/utils.py") not in closed
     doc_rows.unpersist()
 
 
-def test_prefer_real_canonical_alias_only_component(spark):
-    labels = spark.createDataFrame(
-        [("lib::b", "lib::a"), ("lib::a", "lib::a")], "node string, component string"
-    )
-    out = {r.node: r.component for r in prefer_real_canonical(labels).collect()}
-    assert out == {"lib::a": "lib::a", "lib::b": "lib::a"}
+def test_module_alias_labels_alias_only_component(spark):
+    """A star whose members all carry an alias prefix takes its min node,
+    the centre included."""
+    got = _module_labels(spark, ["lib::x/b.py", "term::y/b.py", "lib::a/c.py"])
+    assert got == {
+        "lib::x/b.py": "lib::b", "term::y/b.py": "lib::b", "lib::b": "lib::b",
+        "lib::a/c.py": "lib::a/c.py", "lib::c": "lib::a/c.py",
+    }
 
 
-def test_prefer_real_canonical_hostile_ids(spark):
+def test_module_alias_labels_hostile_ids(spark):
     """No sentinel-character trap: a real id starting with '~' must survive
-    intact as canonical, and a non-ASCII real id must still beat an alias
-    (the old '~'-prefixed sort key stripped the former's first character
-    and lost to the latter)."""
-    from scrapontologies_spark.operators.cc import prefer_real_canonical
+    intact as canonical, and a non-ASCII real id must still beat its lib::
+    centre (a '~'-prefixed sort key would strip the former's first
+    character and lose to the latter)."""
+    got = _module_labels(spark, ["~vendor/mod.py", "привет/privet.py"])
+    assert got == {
+        "~vendor/mod.py": "~vendor/mod.py", "lib::mod": "~vendor/mod.py",
+        "привет/privet.py": "привет/privet.py",
+        "lib::privet": "привет/privet.py",
+    }
 
-    labels = spark.createDataFrame(
-        [
-            ("~vendor/mod.py", "c1"), ("lib::vendor", "c1"),
-            ("привет/mod.py", "c2"), ("lib::privet", "c2"),
-        ],
-        "node string, component string",
-    )
-    got = {r.node: r.component for r in prefer_real_canonical(labels).collect()}
-    assert got["lib::vendor"] == "~vendor/mod.py"
-    assert got["~vendor/mod.py"] == "~vendor/mod.py"
-    assert got["lib::privet"] == "привет/mod.py"
+
+def test_module_alias_stem_is_the_whole_basename(spark):
+    """The stem is the whole basename minus one extension: `api.d.ts` and
+    `skip-first.py` have no stem, so unrelated modules never merge through
+    `lib::d` or `lib::first`, and canonicalization keeps all four ids."""
+    ids = ["a/types/index.d.ts", "b/src/api.d.ts", "c/skip-first.py", "d/first.py"]
+    assert _module_labels(spark, ids) == {
+        "d/first.py": "d/first.py", "lib::first": "d/first.py",
+    }
+    ents = spark.createDataFrame([(i, "module", "{}") for i in ids], ENT_SCHEMA)
+    canon = canonicalize_entities(ents, module_alias_labels(ents))
+    assert sorted(r.id for r in canon.collect()) == ids
 
 
 def test_canonicalize_entities_keeps_canonical_member_type(spark):
@@ -317,7 +384,7 @@ def test_canonicalize_entities_keeps_canonical_member_type(spark):
     assert (row.id, row.type) == ("b_mod", "module")
 
 
-def test_canonicalize_giant_component_paths_agree(spark):
+def test_canonicalize_giant_component_paths_agree(spark, monkeypatch):
     """A hot-stem giant star must take the streamed per-group path (the
     batched collect_list form would buffer the whole component in one
     UnsafeRow) and produce EXACTLY what the batched path produces when the
@@ -328,7 +395,7 @@ def test_canonicalize_giant_component_paths_agree(spark):
 
     from scrapontologies_spark.operators.cc import canonicalize_entities
 
-    n = 600  # > default batch_cap=256
+    n = 600  # > the default cap (256)
     ents = spark.range(n).select(
         F.concat(F.lit("org/repo"), F.col("id"), F.lit("/utils.py")).alias("id"),
         F.lit("module").alias("type"),
@@ -352,54 +419,20 @@ def test_canonicalize_giant_component_paths_agree(spark):
         )
     )
 
-    # batch_cap EXPLICIT, not the default: the test exists to pin the
-    # streamed per-group path, and a future default bump past 600 would
+    # cap set EXPLICITLY, not left at the default: the test exists to pin
+    # the streamed per-group path, and a future default bump past 600 would
     # silently turn this into batched==batched
-    via_split = canonicalize_entities(ents, labels, batch_cap=256)
-    via_batch = canonicalize_entities(ents, labels, batch_cap=10_000)
-    a = {(r.id, r.type, r.attributes) for r in via_split.collect()}
-    b = {(r.id, r.type, r.attributes) for r in via_batch.collect()}
+    from scrapontologies_spark.operators import cc
+
+    monkeypatch.setattr(cc, "_BATCH_CAP", 256)
+    a = {(r.id, r.type, r.attributes) for r in canonicalize_entities(ents, labels).collect()}
+    monkeypatch.setattr(cc, "_BATCH_CAP", 10_000)
+    b = {(r.id, r.type, r.attributes) for r in canonicalize_entities(ents, labels).collect()}
     assert a == b
     giant_row = {r for r in a if r[0] == "org/repo0/utils.py"}
     assert len(giant_row) == 1
     merged = json.loads(next(iter(giant_row))[2])
     assert set(merged) == {f"k{i}" for i in range(7)}  # all attrs folded
-
-
-def test_salted_join_rejects_dim_driven_hows(spark):
-    """right/full_outer would emit salt-1 spurious null-padded rows per
-    unmatched dim key (each dim replica matches nothing); salted_join must
-    reject them instead of silently duplicating data."""
-    from scrapontologies_spark.operators.link import salted_join
-
-    fact = spark.createDataFrame([("a", 1)], "id string, x int")
-    dim = spark.createDataFrame([("a", 2), ("b", 3)], "id string, y int")
-    for how in ("right", "full_outer", "outer", "full"):
-        with pytest.raises(ValueError):
-            salted_join(fact, dim, "id", how=how, salt=4)
-    # fact-driven joins stay value-identical to the unsalted join
-    out = salted_join(fact, dim, "id", how="left", salt=4)
-    assert [(r.id, r.x, r.y) for r in out.collect()] == [("a", 1, 2)]
-
-
-def test_connected_components_rejects_checkpoint_every_zero(spark):
-    """0 silently meant 'never truncate lineage' — the plan grows ~4^round
-    and Catalyst analysis explodes long before max_iter; reject it."""
-    edges = spark.createDataFrame([("a", "b")], "u string, v string")
-    with pytest.raises(ValueError):
-        connected_components(edges, checkpoint_every=0)
-
-
-def test_prefer_real_canonical_empty_prefixes_is_min_member(spark):
-    """With no alias namespaces every member is 'real': the re-pick must
-    degrade to min-member (a no-op on CC output), not raise on ~None."""
-    labels = spark.createDataFrame(
-        [("b", "a"), ("a", "a"), ("z", "a")], "node string, component string"
-    )
-    out = prefer_real_canonical(labels, alias_prefixes=())
-    assert {(r.node, r.component) for r in out.collect()} == {
-        ("a", "a"), ("b", "a"), ("z", "a")
-    }
 
 
 def test_cc_releases_superseded_round_checkpoints(spark):
@@ -408,16 +441,15 @@ def test_cc_releases_superseded_round_checkpoints(spark):
     accumulating one block set per round is this repo's measured ~30 GB
     heap-growth failure mode).  The FINAL round's blocks stay live: the
     returned labels read them."""
-    from scrapontologies_spark.operators.cc import _persistent_rdd_ids
+    from scrapontologies_spark.operators.util import persisted_rdd_ids
 
-    sc = spark.sparkContext
-    before = _persistent_rdd_ids(sc)
+    before = persisted_rdd_ids(spark)
     # a path graph needs several LS/SS rounds
     edges = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i+1:02d}") for i in range(40)], "u string, v string"
     )
     labels = connected_components(edges)
     assert labels.count() == 41
-    leaked = _persistent_rdd_ids(sc) - before
+    leaked = persisted_rdd_ids(spark) - before
     # at most the final round's checkpoint survives (it backs `labels`)
     assert len(leaked) <= 1, leaked

@@ -123,16 +123,23 @@ def test_commit_spark_job_budget(spark, tmp_path):
 def test_salted_reconcile_job_stage_equivalence(spark, corpus, tmp_path):
     """north_star skew mandate: the REAL job reconciles against an
     entities_prev table through the salted join, and its 'entities' stage
-    equals the plain full-outer reconcile(prev, new, salt=0) over the same
-    'extracted' rows."""
+    equals the pure-Python reconcile (semantics.reconcile_entities) over
+    the collected prev / new rows of the same 'extracted' (ids are unique
+    on each side)."""
+    import json
+
     from pyspark.sql import functions as F
 
+    from scrapontologies_spark.functions.semantics import (
+        Entity,
+        canonical_json,
+        reconcile_entities,
+    )
     from scrapontologies_spark.operators.extract import (
         extract_document_rows,
         module_entities_view,
         symbol_entities_view,
     )
-    from scrapontologies_spark.operators.link import reconcile
 
     def entities_of(doc_rows):
         return (
@@ -140,6 +147,12 @@ def test_salted_reconcile_job_stage_equivalence(spark, corpus, tmp_path):
             .select("id", "type", "attributes")
             .unionByName(symbol_entities_view(doc_rows))
         )
+
+    def as_entities(df):
+        return [
+            Entity(r.id, r.type, json.loads(r.attributes) if r.attributes else {})
+            for r in df.collect()
+        ]
 
     prev = (
         entities_of(extract_document_rows(corpus, 512))
@@ -151,9 +164,16 @@ def test_salted_reconcile_job_stage_equivalence(spark, corpus, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"))
     wh.run_stage(spark, "entities_prev", lambda: prev)
     infos = run_job(spark, corpus, wh.root, chunk_bytes=512)
-    plain = reconcile(prev, entities_of(wh.read_stage(spark, "extracted")), salt=0)
+    prev_ents = as_entities(prev)
+    new_ents = as_entities(entities_of(wh.read_stage(spark, "extracted")))
+    assert len({e.id for e in prev_ents}) == len(prev_ents)
+    assert len({e.id for e in new_ents}) == len(new_ents)
+    expected = sorted(
+        (e.id, e.type, canonical_json(e.attributes))
+        for e in reconcile_entities(prev_ents, new_ents)
+    )
     got = sorted(map(tuple, wh.read_stage(spark, "entities").collect()))
-    assert got == sorted(map(tuple, plain.collect()))
+    assert got == expected
     # the reconcile really ran: merged rows beyond the seed's entity count
     assert infos["entities"].rows == len(got) >= n_prev
     prev.unpersist()
