@@ -18,6 +18,10 @@ union of stars, which :func:`module_alias_labels` labels in one closed-form
 pass with its preferred-canonical ids (the KG job's ``alias_labels``
 stage).  The rounds serve graphs of unknown shape — duplicate clustering
 and the dataset queries.
+
+:func:`canonicalize_entities` folds each component's entity rows into one
+with a single streamed pass (one ``mapInPandas`` over rows sorted by
+component and id), whatever the component's size: no size split, no cap.
 """
 
 from __future__ import annotations
@@ -27,8 +31,8 @@ from pyspark.sql import functions as F
 
 from .util import persisted_rdd_ids, release_rdds
 
-# canonicalize_entities' largest component merged through one collect_list row
-_BATCH_CAP = 256
+# rounds before connected_components gives up (O(log n) rounds converge)
+_MAX_ROUNDS = 50
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -69,7 +73,7 @@ def _fingerprint(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(u string, v string) → labels(node string, component string)
     with component = min node id of the connected component.
 
@@ -81,7 +85,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     cur = edges.select("u", "v").filter(F.col("u") != F.col("v")).distinct()
     prev_fp = None
     prev_block_ids: set = set()
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         cur = _small_star(_large_star(cur))
         # LAZY checkpoint every round (an unchecked plan grows ~4× a round):
         # the fingerprint aggregation below is the materializing action, so
@@ -101,7 +105,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             break
         prev_fp = fp
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError(f"connected_components did not converge in {_MAX_ROUNDS} rounds")
     # After convergence every edge is (node, root): u's min-neighbor is the
     # component root.  Roots map to themselves.
     labels = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
@@ -139,31 +143,19 @@ def canonicalize_entities(entities: DataFrame, labels: DataFrame) -> DataFrame:
     A1 merge in ascending-id order — a deterministic order for the
     order-sensitive merge (SURVEY §2.4 A1).
 
-    Shape at scale, two-path by component size:
-
-    - components with ≤ ``_BATCH_CAP`` members (the overwhelming majority —
-      alias stars are usually 2-row): the JVM groups members per component
-      (collect_list is a map-side-combining aggregation) and ONE
-      Arrow-batched scalar pandas UDF merges thousands of components per
-      batch in a plain-Python loop.  The round-2 applyInPandas-per-group
-      form paid a pandas DataFrame construction per COMPONENT — ~0.2 ms ×
-      200k tiny groups of pure overhead at sf1 (measured 42.9 s → 16.3 s
-      isolated; job stage 44.3 → 11.5 s).
-    - GIANT components (hot alias stems — a stem like ``utils`` can alias
-      one module per repo, see :func:`module_alias_labels`): streamed per-group
-      applyInPandas, because collect_list would buffer the whole
-      component's payloads in one UnsafeRow (BufferHolder's 2 GB hard cap)
-      and one Arrow batch would carry up to maxRecordsPerBatch such rows.
-      Rare by construction, so the per-group overhead is irrelevant here.
-
-    Both paths run the same fold; equality is pinned by
-    tests/test_link_cc.py::test_canonicalize_giant_component_paths_agree."""
-    import json as _json
+    One streamed fold for every component size: the labeled rows are
+    hash-partitioned on ``component`` and sorted on (component, id), and
+    one ``mapInPandas`` walks each partition's runs of equal component,
+    keeping only the running merge.  A giant component (a hot alias stem
+    like ``utils``, see :func:`module_alias_labels`) never sits in one row
+    or one pandas group, so it has no size cap.  ``repartition``, not
+    ``rebalance``: AQE may split a skewed rebalance partition, which would
+    cut a run in two."""
+    import json
 
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    from ..functions.semantics import canonical_json, combine_entities_data
+    from ..functions.semantics import canonical_json, merge_into_owned
 
     lab = labels.select(F.col("node").alias("id"), F.col("component"))
     # Scale split: only entities that actually carry a label go through the
@@ -171,66 +163,41 @@ def canonicalize_entities(entities: DataFrame, labels: DataFrame) -> DataFrame:
     # the entity universe); everything else passes through JVM-side.  The
     # label side is broadcast when small; AQE decides otherwise.
     labeled = entities.join(lab, "id", "inner")
-    untouched = entities.join(lab.select("id"), "id", "left_anti").select(
-        "id", "type", "attributes"
+    cols = ["id", "type", "attributes"]
+    untouched = entities.join(lab.select("id"), "id", "left_anti").select(*cols)
+
+    def close(run):
+        return run[0], run[1], canonical_json(run[2])
+
+    def fold_runs(batches):
+        # the open run: [component, type, merged attributes, canonical seen].
+        # Its type is the min-id row's until the CANONICAL member's row
+        # (id == component) turns up — module_alias_labels may pick a
+        # non-min id.  A run can straddle Arrow batches, so it is carried
+        # across them and emitted after the last one.
+        run = None
+        for pdf in batches:
+            done = []
+            for comp, eid, typ, attrs in zip(*(pdf[c] for c in pdf.columns)):
+                if run is None or comp != run[0]:
+                    if run is not None:
+                        done.append(close(run))
+                    run = [comp, typ, {}, eid == comp]
+                elif eid == comp and not run[3]:
+                    run[1], run[3] = typ, True
+                merge_into_owned(run[2], json.loads(attrs or "{}"))
+            if done:
+                yield pd.DataFrame(done, columns=cols)
+        if run is not None:
+            yield pd.DataFrame([close(run)], columns=cols)
+
+    merged = (
+        labeled.select("component", "id", "type", "attributes")
+        .repartition("component")
+        .sortWithinPartitions("component", "id")
+        .mapInPandas(fold_runs, schema="id string, type string, attributes string")
     )
-
-    def _fold(mem_sorted, cid):
-        """The shared A1 fold over ascending-id member dicts."""
-        merged = combine_entities_data(
-            [
-                _json.loads(m["attributes"]) if m["attributes"] else {}
-                for m in mem_sorted
-            ]
-        )
-        # the merged row keeps the CANONICAL member's type when that node
-        # is in the group (module_alias_labels may pick a non-min id);
-        # min-id type is only the fallback for components whose canonical
-        # node carries no entity row
-        typ = next(
-            (m["type"] for m in mem_sorted if m["id"] == cid),
-            mem_sorted[0]["type"],
-        )
-        return cid, typ, canonical_json(merged)
-
-    # no type hints: Series->DataFrame inference is unsupported for
-    # multi-arg struct-returning scalar UDFs; positional pandas_udf works
-    def merge_members(cid, members):
-        # sorted() is stable, matching the old sort_values semantics
-        out = [
-            _fold(sorted(mem, key=lambda m: m["id"]), c)
-            for c, mem in zip(cid, members)
-        ]
-        return pd.DataFrame(out, columns=["id", "type", "attributes"])
-
-    merge_members = pandas_udf(
-        merge_members, "struct<id:string,type:string,attributes:string>"
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("id")
-        row = _fold(pdf.to_dict("records"), pdf["component"].iloc[0])
-        return pd.DataFrame([row], columns=["id", "type", "attributes"])
-
-    sizes = labeled.groupBy("component").agg(F.count("*").alias("_n"))
-    sized = labeled.join(sizes, "component")
-    small = sized.filter(F.col("_n") <= _BATCH_CAP)
-    giant = sized.filter(F.col("_n") > _BATCH_CAP)
-
-    grouped = small.groupBy("component").agg(
-        F.collect_list(F.struct("id", "type", "attributes")).alias("_members")
-    )
-    merged_small = grouped.select(
-        merge_members(F.col("component"), F.col("_members")).alias("_m")
-    ).select("_m.id", "_m.type", "_m.attributes")
-    merged_giant = (
-        giant.select("component", "id", "type", "attributes")
-        .groupBy("component")
-        .applyInPandas(
-            merge_group, schema="id string, type string, attributes string"
-        )
-    )
-    return untouched.unionByName(merged_small).unionByName(merged_giant)
+    return untouched.unionByName(merged)
 
 
 def module_alias_labels(entities: DataFrame) -> DataFrame:

@@ -13,9 +13,8 @@ Scale shape per iteration:
   plans align), then groupBy(dst) with map-side partial sums;
 - the rank vector is one row per node (tiny next to edges); out-degrees
   are computed ONCE before the loop;
-- lineage is truncated every ``checkpoint_every`` rounds (localCheckpoint)
-  exactly like operators/cc.py, so 20-iteration runs don't accumulate a
-  20-deep plan.
+- lineage is truncated every 4 rounds (localCheckpoint) exactly like
+  operators/cc.py, so 20-iteration runs don't accumulate a 20-deep plan.
 
 Dangling nodes (no out-edges) follow the "no redistribution" variant:
 their mass leaves the system, matching the straightforward SQL oracle.
@@ -28,24 +27,22 @@ from pyspark.sql import functions as F
 
 from .util import persisted_rdd_ids, release_rdds
 
+_DAMPING = 0.85
+_CHECKPOINT_EVERY = 4
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 5,
-    damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    checkpoint_every: int = 4,
-) -> DataFrame:
+
+def pagerank(edges: DataFrame, iters: int = 5) -> DataFrame:
     """Fixed-iteration PageRank: ``rank_{k+1}(n) = (1-d) + d * Σ
-    rank_k(m)/outdeg(m)`` over in-edges m→n, rank_0 = 1.0 for every node.
+    rank_k(m)/outdeg(m)`` over in-edges m→n with d = 0.85, rank_0 = 1.0
+    for every node.
 
-    Returns (node, rank) for every node appearing as src or dst.  Duplicate
-    edges are counted once (distinct) — parallel edges would double-count
-    contributions nondeterministically vs the oracle.
+    Returns (node, rank) for every node appearing as src or dst of
+    ``edges(src, dst)``.  Duplicate edges are counted once (distinct) —
+    parallel edges would double-count contributions nondeterministically
+    vs the oracle.
     """
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
     )
@@ -84,12 +81,12 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
+                    F.lit(1.0 - _DAMPING)
+                    + F.lit(_DAMPING) * F.coalesce("in_sum", F.lit(0.0))
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < iters:
             before = persisted_rdd_ids(spark)
             ranks = ranks.localCheckpoint(eager=True)
             release_rdds(spark, prev_block_ids)

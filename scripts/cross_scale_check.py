@@ -5,11 +5,14 @@ driver's sf0.01 gate.
 
 Usage: python scripts/cross_scale_check.py <sf_dir> <cores> [query ...]
 (no query names = the full registry)
+
+Each query's line ends with its Spark and DuckDB wall seconds.
 """
 from __future__ import annotations
 
 import sys
 import os
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -57,6 +60,7 @@ def main() -> int:
     baseline_persists = persisted_rdd_ids(spark)
     failed = []
     for name in names:
+        t0 = time.perf_counter()
         try:
             # inside the try: a query whose table the dir doesn't carry
             # (PATH_NOT_FOUND on the Spark side, missing view on the DuckDB
@@ -66,15 +70,21 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 — report, keep checking
             unpersist_rdds(spark, baseline_persists)
             failed.append(name)
-            print(f"{name}: FAIL — {type(e).__name__}: {str(e).splitlines()[0][:200]}")
+            print(
+                f"{name}: FAIL — {type(e).__name__}: {str(e).splitlines()[0][:200]}"
+                f" [spark {time.perf_counter() - t0:.1f}s]"
+            )
             continue
+        spark_s = time.perf_counter() - t0
         unpersist_rdds(spark, baseline_persists)
         sql = omap.get(name)
         if sql is None:
-            print(f"{name}: rows-only ({len(sp)})")
+            print(f"{name}: rows-only ({len(sp)}) [spark {spark_s:.1f}s]")
             continue
+        t0 = time.perf_counter()
         try:
             du = con.execute(sql).fetchdf()
+            duck_s = time.perf_counter() - t0
             cols = sorted(sp.columns)
             a = sp.reindex(cols, axis=1).sort_values(cols).reset_index(drop=True)
             b = du.reindex(cols, axis=1).sort_values(cols).reset_index(drop=True)
@@ -89,10 +99,13 @@ def main() -> int:
                     a[c] = a[c].astype("datetime64[us]")
                     b[c] = b[c].astype("datetime64[us]")
             pd.testing.assert_frame_equal(a, b, check_dtype=False, atol=1e-6)
-            print(f"{name}: OK ({len(sp)} rows)")
+            print(f"{name}: OK ({len(sp)} rows) [spark {spark_s:.1f}s, duckdb {duck_s:.1f}s]")
         except Exception as e:  # noqa: BLE001 — report, keep checking
             failed.append(name)
-            print(f"{name}: FAIL — {e}")
+            print(
+                f"{name}: FAIL — {e}"
+                f" [spark {spark_s:.1f}s, duckdb {time.perf_counter() - t0:.1f}s]"
+            )
     spark.stop()
     print(f"\n{len(names) - len(failed)}/{len(names)} OK at {sf_dir} local[{cores}]")
     return 1 if failed else 0

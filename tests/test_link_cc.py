@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from scrapontologies_spark.functions.semantics import (
     Entity,
     canonical_json,
+    combine_entities_data,
     merge_dicts_preferring_non_na,
     reconcile_entities,
 )
@@ -384,55 +385,86 @@ def test_canonicalize_entities_keeps_canonical_member_type(spark):
     assert (row.id, row.type) == ("b_mod", "module")
 
 
-def test_canonicalize_giant_component_paths_agree(spark, monkeypatch):
-    """A hot-stem giant star must take the streamed per-group path (the
-    batched collect_list form would buffer the whole component in one
-    UnsafeRow) and produce EXACTLY what the batched path produces when the
-    cap is raised above the component size."""
-    import json
+def _python_fold(entity_rows, label_rows):
+    """canonicalize_entities in plain Python: per component, the A1 fold of
+    the members' attributes in ascending-id order; the type is the
+    canonical member's, else (no row for the canonical id) the min-id
+    member's.  Unlabeled rows pass through."""
+    component = dict(label_rows)
+    members: dict = {}
+    out = []
+    for row in entity_rows:
+        if row[0] in component:
+            members.setdefault(component[row[0]], []).append(row)
+        else:
+            out.append(row)
+    for cid, rows in members.items():
+        rows = sorted(rows, key=lambda r: r[0])
+        typ = next((r[1] for r in rows if r[0] == cid), rows[0][1])
+        merged = combine_entities_data([json.loads(r[2] or "{}") for r in rows])
+        out.append((cid, typ, canonical_json(merged)))
+    return out
 
-    from pyspark.sql import functions as F
 
-    from scrapontologies_spark.operators.cc import canonicalize_entities
+def test_canonicalize_entities_matches_python_fold(spark):
+    """The streamed fold == the plain-Python fold row for row, with 7-row
+    Arrow batches so component runs straddle batches: a 600-member star
+    whose list attributes pin the ascending-id fold order, two 2-member
+    components (one with a non-min canonical id), a component whose
+    canonical id has no entity row, NULL and '' attributes, non-ASCII and
+    '~' ids, and an unlabeled pass-through row."""
+    star = [
+        (f"org/repo{i:03d}/utils.py", f"t{i % 3}",
+         canonical_json({f"k{i % 7}": f"v{i}", "l": [i]}))
+        for i in range(600)
+    ]
+    entity_rows = star + [
+        ("a", "t", '{"x":1}'),
+        ("b", "u", None),
+        ("c", "alias", '{"y":[1],"z":"NA"}'),
+        ("d", "module", '{"y":[2],"z":"keep"}'),
+        ("x1", "first", ""),
+        ("x2", "second", '{"w":2}'),
+        ("~vendor/mod.py", "module", '{"m":"tilde"}'),
+        ("привет/mod.py", "module", '{"m":"privet","n":[0]}'),
+        ("solo", "lone", '{"s":1}'),
+    ]
+    label_rows = [(r[0], "org/repo000/utils.py") for r in star] + [
+        ("a", "a"), ("b", "a"),
+        ("c", "d"), ("d", "d"),
+        ("x0", "x0"), ("x1", "x0"), ("x2", "x0"),
+        ("lib::mod", "~vendor/mod.py"), ("~vendor/mod.py", "~vendor/mod.py"),
+        ("привет/mod.py", "~vendor/mod.py"),
+    ]
+    ents = spark.createDataFrame(entity_rows, ENT_SCHEMA)
+    labels = spark.createDataFrame(label_rows, "node string, component string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = canonicalize_entities(ents, labels).collect()
+    finally:
+        spark.conf.set(key, saved)
+    expected = _python_fold(entity_rows, label_rows)
+    assert sorted(map(tuple, got)) == sorted(expected)
+    assert len(got) == 6
+    [giant] = [r for r in got if r.id == "org/repo000/utils.py"]
+    assert json.loads(giant.attributes)["l"] == list(range(600))
 
-    n = 600  # > the default cap (256)
-    ents = spark.range(n).select(
-        F.concat(F.lit("org/repo"), F.col("id"), F.lit("/utils.py")).alias("id"),
-        F.lit("module").alias("type"),
-        F.concat(F.lit('{"k'), F.col("id") % 7, F.lit('": "v"}')).alias(
-            "attributes"
-        ),
+
+def test_canonicalize_entities_is_one_map_in_pandas(spark):
+    """One Python stage for every component size: a single MapInPandas,
+    no scalar pandas UDF and no per-group applyInPandas."""
+    ents = spark.createDataFrame([("a", "t", "{}"), ("b", "t", "{}")], ENT_SCHEMA)
+    labels = spark.createDataFrame(
+        [("a", "a"), ("b", "a")], "node string, component string"
     )
-    # one giant component: every node labels to the same canonical, plus a
-    # small 2-node component to exercise both paths in one call
-    labels = ents.select(
-        F.col("id").alias("node"), F.lit("org/repo0/utils.py").alias("component")
+    plan = (
+        canonicalize_entities(ents, labels)
+        ._jdf.queryExecution().executedPlan().toString()
     )
-    small_ents = spark.createDataFrame(
-        [("a", "t", '{"x": 1}'), ("b", "t", '{"y": 2}')],
-        "id string, type string, attributes string",
-    )
-    ents = ents.unionByName(small_ents)
-    labels = labels.unionByName(
-        spark.createDataFrame(
-            [("a", "a"), ("b", "a")], "node string, component string"
-        )
-    )
-
-    # cap set EXPLICITLY, not left at the default: the test exists to pin
-    # the streamed per-group path, and a future default bump past 600 would
-    # silently turn this into batched==batched
-    from scrapontologies_spark.operators import cc
-
-    monkeypatch.setattr(cc, "_BATCH_CAP", 256)
-    a = {(r.id, r.type, r.attributes) for r in canonicalize_entities(ents, labels).collect()}
-    monkeypatch.setattr(cc, "_BATCH_CAP", 10_000)
-    b = {(r.id, r.type, r.attributes) for r in canonicalize_entities(ents, labels).collect()}
-    assert a == b
-    giant_row = {r for r in a if r[0] == "org/repo0/utils.py"}
-    assert len(giant_row) == 1
-    merged = json.loads(next(iter(giant_row))[2])
-    assert set(merged) == {f"k{i}" for i in range(7)}  # all attrs folded
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "FlatMapGroupsInPandas" not in plan
 
 
 def test_cc_releases_superseded_round_checkpoints(spark):
