@@ -9,6 +9,11 @@ pure Python with only stdlib deps.  We AST-extract their source from the
 reference file at test time and exec them into an isolated namespace.  No
 reference code is copied into this repository; the oracle executes the
 reference's own bytes.
+
+The oracle loads on first use, not at import.  Tests that need it are marked
+``skipif(not REFERENCE_PDF_PARSER.is_file())``, so they skip where the
+reference checkout is absent and run unchanged where it is present.  A present
+reference that lacks one of the oracle functions still raises RuntimeError.
 """
 
 from __future__ import annotations
