@@ -195,7 +195,6 @@ def ngram_jaccard_pairs(
     num_hashes: int = 8,
     band_size: int = 2,
     max_shingle_df: int | None = None,
-    reuse_shingles: bool = True,
     max_bucket_df: "int | None" = None,
     scale: "str | ScaleProfile | None" = None,
 ) -> DataFrame:
@@ -221,14 +220,6 @@ def ngram_jaccard_pairs(
     frequency, forwarded to lsh_candidate_pairs — the guard against a
     boilerplate-heavy corpus turning one band bucket quadratic.
 
-    ``reuse_shingles`` (default on): the shingle table feeds 4-5 plan
-    subtrees (signatures, both sides of the intersection join, sizes);
-    localCheckpoint materializes it once to executor storage instead of
-    re-running the explode+distinct per subtree — ~2× at sf0.1.  Non-
-    reliable storage: on a cluster where executor loss mid-query must be
-    survivable without a stage re-run, pass False (plan recompute +
-    exchange reuse still apply).
-
     ``scale``: profile filling ``max_shingle_df``/``max_bucket_df`` when
     left at None (profiles.CORPUS → both 10⁴ per the BENCH_SCALING rule).
     """
@@ -245,8 +236,11 @@ def ngram_jaccard_pairs(
         )
         # heavy hitters are few by construction — broadcast the anti side
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    if reuse_shingles:
-        sh = sh.localCheckpoint(eager=False)
+    # the shingle table feeds 4-5 plan subtrees (signatures, both sides of
+    # the intersection join, sizes): materialize it once to executor
+    # storage instead of re-running the explode+distinct per subtree (~2×
+    # at sf0.1)
+    sh = sh.localCheckpoint(eager=False)
     if isinstance(candidates, str):
         if candidates != "lsh":
             raise ValueError(f"unknown candidates mode: {candidates!r}")
@@ -461,9 +455,12 @@ def embedding_near_dup_pairs(
     ``lsh_tables=0`` (exact): full self-join — the small-scale oracle path.
     ``lsh_tables>0`` (scale path): only pairs sharing a sign-LSH bucket in
     at least one of the tables are scored, replacing the O(n²) pair space
-    with bucket-colliding candidates (same recall/cost trade as
-    similarity.cosine_topk_lsh).  Arithmetic is sequential float64
-    (zip_with + aggregate), DuckDB-checkable to 1e-6.
+    with bucket-colliding candidates from similarity._sign_lsh_pairs (seeds
+    ``neardup{t}``, key prefixes ``{t}#``) — the generator
+    similarity.cosine_topk_lsh uses, so the same recall/cost trade.
+    Scoring is similarity._cosine: sequential float64 (zip_with +
+    aggregate), DuckDB-checkable to 1e-6; a zero-norm or corrupted
+    (NULL/NaN/Inf) vector scores NULL, which fails the threshold.
 
     ``max_bucket_df`` (lsh path): drops sign-LSH buckets hotter than the
     cap before the self-join (util.drop_hot_buckets) — the guard against a
@@ -475,80 +472,31 @@ def embedding_near_dup_pairs(
     (profiles.CORPUS → 10⁴); only meaningful on the lsh path.
     """
     max_bucket_df = pick(max_bucket_df, resolve_profile(scale).max_bucket_df)
-    from .similarity import (
-        _bucket_keys_pdf,
-        _dot,
-        _norm,
-        _pos_sets,
-        _vector_dim,
-    )
+    from .similarity import _cosine, _normed, _sign_lsh_pairs
 
-    # per-row norms precomputed before the pair join: each pair pays one
-    # dot-product fold, not three (bitwise-identical cosine)
     # spread the scored side across cores: the O(n²·d) pair compute must not
     # inherit a single-split scan partitioning (see util.spread — explicit
     # count because AQE coalesces by shuffle bytes, blind to downstream
     # quadratic work)
     sp = spread(embeddings, id_col)
-    a = sp.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        _norm(F.col(vec_col)).alias("na"),
-    )
-    # b AND the bucket-key pass below also read the spread frame: the
-    # O(tables·planes·dim) per-row Arrow work and the norm folds would
-    # otherwise serialize on a single-split scan partitioning
-    b = sp.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        _norm(F.col(vec_col)).alias("nb"),
-    )
+    a = _normed(sp, id_col, vec_col, "id_a", "a")
+    b = _normed(sp, id_col, vec_col, "id_b", "b")
     if lsh_tables > 0:
-        # ALL tables' bucket keys in ONE narrow Arrow pass + a JVM explode
-        # (same single-pass shape as similarity.cosine_topk_lsh) — instead
-        # of lsh_tables unions that each rescan the input and each trigger
-        # their own _vector_dim action.
-        dim = _vector_dim(embeddings, vec_col)
-        keys = _bucket_keys_pdf(
-            _pos_sets([f"neardup{t}" for t in range(lsh_tables)], lsh_planes, dim),
+        cand = _sign_lsh_pairs(
+            embeddings,
+            [f"neardup{t}" for t in range(lsh_tables)],
             [f"{t}#" for t in range(lsh_tables)],
-            dim,
-        )
-        buckets = drop_hot_buckets(
-            sp.select(
-                F.col(id_col).alias("vec_id"),
-                F.explode(keys(F.col(vec_col))).alias("bucket"),
-            ),
-            ("bucket",),
+            lsh_planes,
+            id_col,
+            vec_col,
             max_bucket_df,
             bucket_metrics,
-        )
-        cand = (
-            buckets.alias("x")
-            .join(buckets.alias("y"), "bucket")
-            .select(
-                F.col("x.vec_id").alias("id_a"), F.col("y.vec_id").alias("id_b")
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .distinct()
-        )
+        ).toDF("id_a", "id_b")
         pairs = cand.join(a, "id_a").join(b, "id_b")
     else:
         pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    # try_divide: a zero-norm embedding has no defined cosine — NULL (which
-    # the >= threshold filter drops) instead of an ANSI DIVIDE_BY_ZERO
-    # aborting the whole job on the first degenerate row
-    from .similarity import nan_to_null
-
-    # nan_to_null: NaN >= threshold is TRUE in Spark SQL (NaN sorts above
-    # all numbers), so a corrupted NaN/Inf vector would otherwise be
-    # declared a near-duplicate of everything it buckets with; NULL fails
-    # the threshold like the zero-norm case
-    cos = nan_to_null(
-        F.try_divide(_dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb"))
-    ).alias("cos_raw")
     return (
-        pairs.select("id_a", "id_b", cos)
+        pairs.select("id_a", "id_b", _cosine("a", "b").alias("cos_raw"))
         .filter(F.col("cos_raw") >= threshold)
         .select("id_a", "id_b", F.round("cos_raw", 6).alias("cosine"))
     )

@@ -338,30 +338,14 @@ def doc_schemas_view(doc_rows: DataFrame) -> DataFrame:
     )
 
 
-def mentions_df(
-    chunks: DataFrame, allowed_kinds=None, allowed_terms=None
-) -> DataFrame:
+def mentions_df(chunks: DataFrame) -> DataFrame:
     """Chunk rows → one row per mention (JVM-side from_json + explode).
-
-    ``allowed_kinds``/``allowed_terms`` apply the P8 allowlist as a
-    JVM-side ``filter(col.isin(...))`` AFTER the explode — for restricting
-    an already-extracted chunk table without re-running the Python pass
-    (same predicate semantics as extract_mentions' at-extraction filter).
-    """
-    m = (
-        chunks.select(
-            "repo",
-            "path",
-            "lang",
-            "chunk_id",
-            F.explode(F.from_json("mentions_json", MENTION_STRUCT)).alias("m"),
-        )
-        .select("repo", "path", "lang", "chunk_id", "m.kind", "m.name", "m.owner")
-    )
-    if allowed_kinds is not None:
-        m = m.filter(F.col("kind").isin(*sorted(allowed_kinds)))
-    if allowed_terms is not None:
-        m = m.filter(
-            (F.col("kind") != "term") | F.col("name").isin(*sorted(allowed_terms))
-        )
-    return m
+    The P8 allowlist applies at extraction (extract_document_rows'
+    ``allowed_kinds``/``allowed_terms``), not here."""
+    return chunks.select(
+        "repo",
+        "path",
+        "lang",
+        "chunk_id",
+        F.explode(F.from_json("mentions_json", MENTION_STRUCT)).alias("m"),
+    ).select("repo", "path", "lang", "chunk_id", "m.kind", "m.name", "m.owner")

@@ -15,7 +15,7 @@ SEQUENTIALLY along the dimension axis while vectorizing across rows:
 ``acc = acc + A[:, i] * B[:, i]`` performs, per row, the exact IEEE-754
 operation sequence of the left fold ``((0+a₁b₁)+a₂b₂)+…`` — so results are
 bit-identical to the interpreted form and stay DuckDB-checkable to 1e-6.
-The HOF expression builders are kept as the zero-Python fallback and as
+The HOF expression builders (_dot, _norm) are the pair-scoring path and
 the executable specification the SQL oracles mirror.
 """
 
@@ -29,14 +29,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, StringType
+from pyspark.sql.types import ArrayType, StringType
 from pyspark.sql.window import Window
 
 from ..profiles import ScaleProfile, pick, resolve_profile
 from .util import drop_hot_buckets, spread
 
 
-def _dot_hof(a, b):
+# Per-PAIR scoring stays on the interpreted HOF form: candidate pairs
+# outnumber rows by orders of magnitude, and shipping both 64-float vectors
+# per pair through Arrow costs more than the fold saves (measured at sf0.1
+# with an Arrow twin of the fold: LSH top-k 6.5 s → 10.9 s, embedding
+# near-dup 2.3 s → 7.0 s — rejected).  Per-ROW work (bucket keys) uses the
+# Arrow path — see _bucket_keys_pdf.
+def _dot(a, b):
     """Interpreted-HOF dot product — the executable spec of the fold order."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -45,7 +51,7 @@ def _dot_hof(a, b):
     )
 
 
-def _norm_hof(a):
+def _norm(a):
     return F.sqrt(
         F.aggregate(
             F.transform(a, lambda x: x.cast("double") * x.cast("double")),
@@ -64,18 +70,18 @@ def _stack(xs: "pd.Series") -> "np.ndarray":
     return np.stack(xs.to_numpy()).astype(np.float64)
 
 
-# Per-PAIR scoring stays on the interpreted HOF form: candidate pairs
-# outnumber rows by orders of magnitude, and shipping both 64-float vectors
-# per pair through Arrow costs more than the fold saves (measured at sf0.1
-# with an Arrow twin of the fold: LSH top-k 6.5 s → 10.9 s, embedding
-# near-dup 2.3 s → 7.0 s — rejected).  Per-ROW work (bucket keys) uses the
-# Arrow path — see _bucket_keys_pdf.
-def _dot(a, b):
-    return _dot_hof(a, b)
-
-
-def _norm(a):
-    return _norm_hof(a)
+def _normed(
+    df: DataFrame, id_col: str, vec_col: str, as_id: str, tag: str
+) -> DataFrame:
+    """(``as_id``, ``{tag}vec``, ``{tag}norm``) rows — the norm is computed
+    once per row before any pair join, so each pair pays one dot-product
+    fold instead of three (bitwise-identical cosine: the same expression
+    computes both norms either way)."""
+    return df.select(
+        F.col(id_col).alias(as_id),
+        F.col(vec_col).alias(f"{tag}vec"),
+        _norm(F.col(vec_col)).alias(f"{tag}norm"),
+    )
 
 
 def nan_to_null(c):
@@ -89,8 +95,9 @@ def nan_to_null(c):
     return F.nanvl(c, F.lit(None).cast("double"))
 
 
-def _cosine(a_vec, b_vec, a_norm, b_norm):
-    """dot/(‖a‖·‖b‖) via try_divide: a zero-norm (all-zero or empty)
+def _cosine(a: str, b: str):
+    """Cosine of the ``_normed`` columns tagged ``a`` and ``b``:
+    dot/(‖a‖·‖b‖) via try_divide: a zero-norm (all-zero or empty)
     embedding has no defined cosine, and under Spark 4's default ANSI mode
     a plain division would abort the whole job with DIVIDE_BY_ZERO on the
     first such row.  NULL instead — callers drop NULL scores (no defined
@@ -100,7 +107,27 @@ def _cosine(a_vec, b_vec, a_norm, b_norm):
     explicitly); NaN from NaN/Inf components maps to NULL via
     :func:`nan_to_null`, so every corrupted-row shape lands on the same
     NULL contract."""
-    return nan_to_null(F.try_divide(_dot(a_vec, b_vec), a_norm * b_norm))
+    return nan_to_null(
+        F.try_divide(
+            _dot(F.col(f"{a}vec"), F.col(f"{b}vec")),
+            F.col(f"{a}norm") * F.col(f"{b}norm"),
+        )
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best (query_id, neighbor_id, cosine) rows, ranked
+    deterministically by (-cosine, neighbor id).  Every corrupted-row shape
+    (zero-norm, NULL embedding, NULL element, NaN/Inf component) lands on
+    NULL via _cosine — non-finite rows are outside similarity."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.filter(F.col("cosine").isNotNull())
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def cosine_topk_bruteforce(
@@ -114,45 +141,16 @@ def cosine_topk_bruteforce(
     schema).  Broadcast the (small) query side; rank deterministically by
     (-similarity, neighbor id).  Returns (query_id, neighbor_id, cosine,
     rank)."""
-    # precompute each row's norm ONCE before the join: the pair loop then
-    # pays one dot-product fold instead of three (bitwise-identical result —
-    # cos = dot / (na * nb) with na/nb computed by the same expression)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
-    )
+    q = _normed(queries, id_col, vec_col, "query_id", "q")
     # spread the big side across cores: the O(n·q·d) scoring must not
     # inherit a single-split scan partitioning (util.spread)
-    e = spread(embeddings, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        _norm(F.col(vec_col)).alias("nnorm"),
-    )
+    e = _normed(spread(embeddings, id_col), id_col, vec_col, "neighbor_id", "n")
     scored = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine(
-                F.col("qvec"), F.col("nvec"), F.col("qnorm"), F.col("nnorm")
-            ).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", _cosine("q", "n").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.filter(
-            # every corrupted-row shape (zero-norm, NULL embedding, NULL
-            # element, NaN/Inf component) lands on NULL via _cosine —
-            # non-finite rows are outside similarity
-            F.col("cosine").isNotNull()
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 
 def _plane_signs(seed: str, p: int, dim: int) -> list:
@@ -297,13 +295,9 @@ def ivf_centroids(
     standing in for a k-means codebook the way the gazetteer stands in for
     the LLM.  Returns (cell, cvec, cnorm); cell = the centroid's vector id."""
     return (
-        embeddings.select(
-            F.col(id_col).alias("cell"),
-            F.col(vec_col).alias("cvec"),
-            _norm(F.col(vec_col)).alias("cnorm"),
-            F.md5(
-                F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}"))
-            ).alias("_r"),
+        _normed(embeddings, id_col, vec_col, "cell", "c")
+        .withColumn(
+            "_r", F.md5(F.concat(F.col("cell").cast("string"), F.lit(f"#{seed}")))
         )
         .orderBy("_r")
         .limit(k_cells)
@@ -320,17 +314,9 @@ def ivf_assign(
     """Assign every vector to its max-cosine centroid (ties → smallest cell
     id).  Centroids broadcast (k_cells rows); assignment is one narrow
     scored pass + a per-vector top-1 window.  Returns (vec_id, cell)."""
-    v = spread(embeddings, id_col).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vvec"),
-        _norm(F.col(vec_col)).alias("vnorm"),
-    )
+    v = _normed(spread(embeddings, id_col), id_col, vec_col, "vec_id", "v")
     scored = v.crossJoin(F.broadcast(centroids)).select(
-        "vec_id",
-        "cell",
-        _cosine(
-            F.col("vvec"), F.col("cvec"), F.col("vnorm"), F.col("cnorm")
-        ).alias("_cos"),
+        "vec_id", "cell", _cosine("v", "c").alias("_cos")
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("_cos").desc(), F.col("cell").asc())
     return (
@@ -363,17 +349,9 @@ def cosine_topk_ivf(
     """
     cents = ivf_centroids(embeddings, k_cells, id_col, vec_col, seed)
     assign = ivf_assign(embeddings, cents, id_col, vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
-    )
+    q = _normed(queries, id_col, vec_col, "query_id", "q")
     qscore = q.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cell",
-        _cosine(
-            F.col("qvec"), F.col("cvec"), F.col("qnorm"), F.col("cnorm")
-        ).alias("_cos"),
+        "query_id", "cell", _cosine("q", "c").alias("_cos")
     )
     wq = Window.partitionBy("query_id").orderBy(
         F.col("_cos").desc(), F.col("cell").asc()
@@ -389,34 +367,57 @@ def cosine_topk_ivf(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .distinct()
     )
-    e_n = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        _norm(F.col(vec_col)).alias("nnorm"),
-    )
     scored = (
         cand.join(q, "query_id")
-        .join(e_n, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine(
-                F.col("qvec"), F.col("nvec"), F.col("qnorm"), F.col("nnorm")
-            ).alias("cosine"),
-        )
+        .join(_normed(embeddings, id_col, vec_col, "neighbor_id", "n"), "neighbor_id")
+        .select("query_id", "neighbor_id", _cosine("q", "n").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    return _topk(scored, k)
+
+
+def _sign_lsh_pairs(
+    embeddings: DataFrame,
+    seeds: list,
+    prefixes: list,
+    n_planes: int,
+    id_col: str,
+    vec_col: str,
+    max_bucket_df: "int | None",
+    bucket_metrics: "dict | None",
+) -> DataFrame:
+    """The sign-LSH candidate generator of cosine_topk_lsh and
+    dedup.embedding_near_dup_pairs: distinct unordered id pairs (a, b),
+    a < b, that share a bucket in ANY table t — table t's planes come from
+    ``seeds[t]`` and its keys carry ``prefixes[t]``, so equal sign bits in
+    different tables never collide.
+
+    ALL tables' keys come from ONE Arrow UDF call per row (the shared
+    full-vector sum is reused by every half-sum projection inside the UDF)
+    plus a JVM explode to (row, table-key) pairs — instead of one union
+    branch per table that each rescan the input.  The physical plan still
+    runs that pass once per side of the self-join: the UDF output is not
+    reused across it.  The input is spread first: the tables × planes
+    projection sums are the heavy narrow work.  Buckets hotter than
+    ``max_bucket_df`` are dropped before the self-join
+    (util.drop_hot_buckets; ``bucket_metrics`` receives the counts)."""
+    dim = _vector_dim(embeddings, vec_col)
+    keys = _bucket_keys_pdf(_pos_sets(seeds, n_planes, dim), prefixes, dim)
+    buckets = drop_hot_buckets(
+        spread(embeddings, id_col).select(
+            F.col(id_col).alias("_bid"),
+            F.explode(keys(F.col(vec_col))).alias("bucket"),
+        ),
+        ("bucket",),
+        max_bucket_df,
+        bucket_metrics,
     )
+    left = buckets.select(F.col("_bid").alias("a"), "bucket")
+    right = buckets.select(F.col("_bid").alias("b"), "bucket")
     return (
-        scored.filter(
-            # every corrupted-row shape (zero-norm, NULL embedding, NULL
-            # element, NaN/Inf component) lands on NULL via _cosine —
-            # non-finite rows are outside similarity
-            F.col("cosine").isNotNull()
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        left.join(right, "bucket")
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+        .distinct()
     )
 
 
@@ -437,10 +438,12 @@ def cosine_topk_lsh(
     (query_id, neighbor_id, cosine, rank); recall < 1 by construction —
     compare against cosine_topk_bruteforce to measure it.
 
-    Scale shape: candidate generation is n_tables narrow bucket hashes +
-    same-bucket self-joins on short string keys; the distance computation
-    touches candidates only.  Tuning n_planes trades bucket size (compute)
-    against recall.  On clustered data sign collisions are irreducible
+    Scale shape: candidates come from the shared generator
+    :func:`_sign_lsh_pairs` (seeds ``lsh{t}``, key prefixes ``{t}|``) —
+    one narrow pass for all tables' bucket keys + a same-bucket self-join
+    on short string keys; the distance computation touches candidates
+    only.  Tuning n_planes trades bucket size (compute) against recall.
+    On clustered data sign collisions are irreducible
     (BENCH_SCALING.md) — ``max_bucket_df`` is the guard: buckets hotter
     than the cap are dropped before the self-join (util.drop_hot_buckets),
     bounding any bucket's contribution to cap² candidate rows; a query
@@ -450,30 +453,16 @@ def cosine_topk_lsh(
     counts when provided.  ``scale``: profile filling ``max_bucket_df``
     when left at None (profiles.CORPUS → 10⁴)."""
     max_bucket_df = pick(max_bucket_df, resolve_profile(scale).max_bucket_df)
-    # All tables' buckets in ONE narrow pass (explode of a per-row array)
-    # instead of n_tables unions that each rescan the input.  Spread first:
-    # the n_tables × n_planes projection sums are the heavy narrow work.
-    embeddings = spread(embeddings, id_col)
-    dim = _vector_dim(embeddings, vec_col)
-    # ONE Arrow batch pass computes all n_tables bucket keys per row (the
-    # shared full-vector sum is reused by every half-sum projection inside
-    # the UDF), then a JVM explode fans out to (row, table-key) pairs.
-    keys = _bucket_keys_pdf(
-        _pos_sets([f"lsh{t}" for t in range(n_tables)], n_planes, dim),
+    pairs = _sign_lsh_pairs(
+        embeddings,
+        [f"lsh{t}" for t in range(n_tables)],
         [f"{t}|" for t in range(n_tables)],
-        dim,
-    )
-    buckets = drop_hot_buckets(
-        embeddings.select(
-            F.col(id_col).alias("_bid"),
-            F.explode(keys(F.col(vec_col))).alias("bucket"),
-        ),
-        ("bucket",),
+        n_planes,
+        id_col,
+        vec_col,
         max_bucket_df,
         bucket_metrics,
     )
-    left = buckets.select(F.col("_bid").alias("query_id"), "bucket")
-    right = buckets.select(F.col("_bid").alias("neighbor_id"), "bucket")
     # unconditional explicit repartition (not util.spread): the distinct's
     # static partition count reads as spark.sql.shuffle.partitions, but AQE
     # still coalesces the small candidate rows at runtime — blind to the
@@ -484,34 +473,14 @@ def cosine_topk_lsh(
     # float multiplies and the norm product commute), so the mirrored row
     # carries the identical value at half the distinct volume and half the
     # O(d) scoring work of emitting both directions.
-    cand = (
-        left.join(right, "bucket")
-        .filter(F.col("query_id") < F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-        .repartition(n_parts, F.col("query_id"), F.col("neighbor_id"))
+    cand = pairs.toDF("query_id", "neighbor_id").repartition(
+        n_parts, F.col("query_id"), F.col("neighbor_id")
     )
-    # norms precomputed per row, not per candidate pair (see bruteforce)
-    e_q = embeddings.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
-    )
-    e_n = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        _norm(F.col(vec_col)).alias("nnorm"),
-    )
+    embeddings = spread(embeddings, id_col)
     half = (
-        cand.join(e_q, "query_id")
-        .join(e_n, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine(
-                F.col("qvec"), F.col("nvec"), F.col("qnorm"), F.col("nnorm")
-            ).alias("cosine"),
-        )
+        cand.join(_normed(embeddings, id_col, vec_col, "query_id", "q"), "query_id")
+        .join(_normed(embeddings, id_col, vec_col, "neighbor_id", "n"), "neighbor_id")
+        .select("query_id", "neighbor_id", _cosine("q", "n").alias("cosine"))
     )
     # mirror row-locally (explode of a 2-struct array) in the SAME pass:
     # a union of two references to `half` would either recompute the
@@ -531,19 +500,7 @@ def cosine_topk_lsh(
             )
         ).alias("_x")
     ).select("_x.query_id", "_x.neighbor_id", "_x.cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.filter(
-            # every corrupted-row shape (zero-norm, NULL embedding, NULL
-            # element, NaN/Inf component) lands on NULL via _cosine —
-            # non-finite rows are outside similarity
-            F.col("cosine").isNotNull()
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 
 def sign_lsh_union_recall(mean_cos: float, n_planes: int, n_tables: int) -> float:

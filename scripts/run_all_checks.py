@@ -32,7 +32,12 @@ In `--fast` mode step 1 runs only FAST_TESTS: the suites that pin every
 caller of the global-schema reduce, plus `run_job`'s stage DAG, resume and
 marker order (`tests/test_resumability.py`), which step 4 never runs, and
 the entity-linking operators behind the job's reconcile and alias labels
-(`tests/test_link_cc.py`), which step 5 exercises only in full mode.
+(`tests/test_link_cc.py`), which step 5 exercises only in full mode, and
+the embedding operators' unit tests (`tests/test_training_data_ops.py`:
+brute-force, LSH and IVF top-k, exact and LSH near-dup, the bucket-key
+UDF's NULL/ragged/NaN rows, the hot-bucket guards, zero norms and the
+shared sign-LSH candidate generator), which the oracle sweeps check only
+end to end.
 
 Usage:
   python scripts/run_all_checks.py            # everything (~25-35 min)
@@ -58,6 +63,25 @@ FAST_TESTS = [
     "tests/test_ddl.py",
     "tests/test_resumability.py",
     "tests/test_link_cc.py",
+    *(
+        f"tests/test_training_data_ops.py::{t}"
+        for t in (
+            "test_cosine_topk_bruteforce",
+            "test_lsh_topk_recall",
+            "test_lsh_topk_recall_clustered",
+            "test_ivf_topk_recall_clustered",
+            "test_ivf_topk_recall_and_candidate_bound",
+            "test_embedding_near_dup_exact_vs_numpy",
+            "test_embedding_near_dup_lsh_subset_of_exact",
+            "test_lsh_ops_tolerate_empty_embeddings",
+            "test_bucket_udf_null_and_ragged_rows",
+            "test_bucket_udf_nan_matches_sql_semantics",
+            "test_embedding_near_dup_hot_bucket_guard",
+            "test_cosine_topk_lsh_hot_bucket_guard",
+            "test_zero_norm_embeddings_do_not_abort_cosine_ops",
+            "test_sign_lsh_pairs_matches_python_reference",
+        )
+    ),
 ]
 
 

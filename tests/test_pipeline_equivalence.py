@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from scrapontologies_spark.functions.code_gazetteer import (
     document_payload,
@@ -180,17 +181,20 @@ def test_p8_allowlist_restricts_whole_pipeline(spark):
 
 
 def test_p8_jvm_mention_filter_matches_extraction_filter(spark):
-    """mentions_df's JVM-side isin filter == filtering at extraction."""
+    """Filtering kinds at extraction == the unfiltered mentions filtered
+    JVM-side in the test (a test-side reference of the P8 allowlist)."""
     corpus = corpus_df(spark, 20)
     kinds = {"function", "class"}
 
-    def chunks(**allow):
-        return chunks_view(extract_document_rows(corpus, CHUNK_BYTES, **allow))
+    def mentions(**allow):
+        return mentions_df(
+            chunks_view(extract_document_rows(corpus, CHUNK_BYTES, **allow))
+        )
 
-    jvm = mentions_df(chunks(), allowed_kinds=kinds)
-    at_ext = mentions_df(chunks(allowed_kinds=kinds))
-    assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, at_ext.collect()))
-    assert jvm.count() > 0
+    want = mentions().filter(F.col("kind").isin(*sorted(kinds)))
+    at_ext = mentions(allowed_kinds=kinds)
+    assert sorted(map(tuple, want.collect())) == sorted(map(tuple, at_ext.collect()))
+    assert want.count() > 0
 
 
 def test_emit_selection_schema_only_rows_identical(spark):
@@ -316,7 +320,6 @@ def test_pipeline_summary_one_job_empty_and_null_keys(spark):
 def test_content_invariant_catches_mixed_sha_rows(spark):
     """A document with one corrupted-sha chunk row alongside correct ones
     must be flagged — an exists-one-matching-row check would pass it."""
-    from pyspark.sql import functions as F
 
     from scrapontologies_spark.plans.pipeline import verify_content_invariant
 

@@ -924,6 +924,87 @@ def test_embedding_near_dup_hot_bucket_guard(spark, hot_emb):
     assert loose == base
 
 
+def _sign_lsh_keys_ref(vec, seeds, prefixes, n_planes):
+    """Pure-Python bucket keys of one vector, one per table: the half-sum
+    projection 2·Σ_{w=+1} x_i − Σ x_i accumulated left to right, NaN
+    taking the '1' bit."""
+    dim = len(vec)
+    total = 0.0
+    for v in vec:
+        total += v
+    keys = []
+    for seed, prefix in zip(seeds, prefixes):
+        key = prefix
+        for p in range(n_planes):
+            acc = 0.0
+            for i, w in enumerate(similarity._plane_signs(seed, p, dim)):
+                if w > 0:
+                    acc += vec[i]
+            proj = 2.0 * acc - total
+            key += "1" if math.isnan(proj) or proj >= 0.0 else "0"
+        keys.append(key)
+    return keys
+
+
+def test_sign_lsh_pairs_matches_python_reference(spark):
+    """The shared sign-LSH candidate generator == a pure-Python reference:
+    per-table keys from _plane_signs, hot buckets dropped, unordered pairs
+    (a < b) sharing any remaining bucket.  The fixture has a pair that
+    collides only in table 1, equal sign bits across tables (so the table
+    prefix matters), a NULL and a ragged row (no keys), and 5 clones whose
+    buckets exceed the cap."""
+    from collections import defaultdict
+
+    seeds, prefixes, n_planes, cap = ["neardup0", "neardup1"], ["0#", "1#"], 4, 4
+    rng = np.random.RandomState(2)
+    rows = [(i, [float(np.float32(v)) for v in rng.randn(4)]) for i in range(16)]
+    rows += [(30 + j, [1.0, 2.0, 3.0, 4.0]) for j in range(5)]
+    # the ragged row goes last: the dim probe reads the first non-NULL row
+    rows += [(40, None), (41, [1.0, 2.0, 3.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    metrics: dict = {}
+    got = {
+        (r.a, r.b)
+        for r in similarity._sign_lsh_pairs(
+            df, seeds, prefixes, n_planes, "vec_id", "embedding", cap, metrics
+        ).collect()
+    }
+
+    keys = {
+        vid: _sign_lsh_keys_ref(vec, seeds, prefixes, n_planes)
+        for vid, vec in rows
+        if vec is not None and len(vec) == 4
+    }
+
+    def ref_pairs(keys):
+        members = defaultdict(list)
+        for vid, ks in keys.items():
+            for k in ks:
+                members[k].append(vid)
+        hot = {k: len(ids) for k, ids in members.items() if len(ids) > cap}
+        pairs = {
+            (a, b)
+            for k, ids in members.items()
+            if k not in hot
+            for a in ids
+            for b in ids
+            if a < b
+        }
+        return pairs, hot
+
+    want, hot = ref_pairs(keys)
+    assert got == want
+    assert metrics == {
+        "hot_buckets": len(hot),
+        "hot_bucket_rows": sum(hot.values()),
+    }
+    # the fixture exercises what it claims
+    assert any(keys[a][0] != keys[b][0] and keys[a][1] == keys[b][1] for a, b in want)
+    assert f"0#{keys[30][0][2:]}" in hot and not any(a >= 30 for a, _ in want)
+    assert all(40 not in p and 41 not in p for p in got)
+    assert ref_pairs({v: [k[2:] for k in ks] for v, ks in keys.items()})[0] != want
+
+
 def test_cosine_topk_lsh_hot_bucket_guard(spark, hot_emb):
     base = similarity.cosine_topk_lsh(hot_emb, k=3)
     base_rows = {(r.query_id, r.neighbor_id) for r in base.collect()}
