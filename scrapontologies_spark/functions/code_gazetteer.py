@@ -748,15 +748,7 @@ def _mask_block_spans(text: str, lang: str) -> str:
                     i = k + 1
                     break
                 j = k + 1
-    if not spans:
-        return text
-    out, last = [], 0
-    for s, e in spans:
-        out.append(text[last:s])
-        out.append("".join("\n" if ch == "\n" else " " for ch in text[s:e]))
-        last = e
-    out.append(text[last:])
-    return "".join(out)
+    return _blank(text, spans)
 
 
 _MASKED_LANGS = frozenset(
@@ -879,8 +871,7 @@ def _line_calls(line: str):
     if '"' in line or "'" in line or "`" in line:
         spans = [(m.start(), m.end()) for m in _STRING_SPAN.finditer(line)]
         for m in _CALL.finditer(line):
-            pos = m.start(1)
-            if any(s <= pos < e for s, e in spans):
+            if _in_spans(spans, m.start(1)):
                 continue
             yield m
     else:
@@ -1163,15 +1154,8 @@ def _docker_mentions(text: str) -> List[Dict[str, str]]:
             rows.append((m.start(), {"kind": "class", "name": stage, "owner": ""}))
         stages.append((m.start(), stage))
     for m in _DOCKER_ARGENV.finditer(text):
-        owner = ""
-        for pos, stage in stages:
-            if pos < m.start():
-                owner = stage
-            else:
-                break
-        kind = "method" if owner else "function"
-        rows.append((m.start(), {"kind": kind, "name": m.group(2), "owner": owner}))
-    return [r for _, r in sorted(rows, key=lambda t: t[0])]
+        rows.append((m.start(), _member(m.group(2), _preceding(stages, m.start()))))
+    return _by_start(rows)
 
 
 # Makefile ontology: `include x.mk` → import (stem), col-0 variable
@@ -1209,16 +1193,7 @@ def _make_mentions(text: str) -> List[Dict[str, str]]:
         end = len(text) if e is None else e.start()
         spans.append((m.end(), end))
         i = end + 1
-    if spans:
-        buf, last = [], 0
-        for s, e in spans:
-            buf.append(text[last:s])
-            buf.append("".join("\n" if c == "\n" else " " for c in text[s:e]))
-            last = e
-        buf.append(text[last:])
-        masked = "".join(buf)
-    else:
-        masked = text
+    masked = _blank(text, spans)
     rows: List[Tuple[int, Dict[str, str]]] = []
     for m in _MAKE_INCLUDE.finditer(masked):
         stem = m.group(1).rsplit("/", 1)[-1].split(".", 1)[0]
@@ -1237,7 +1212,7 @@ def _make_mentions(text: str) -> List[Dict[str, str]]:
                     "override", "vpath"):
             continue
         rows.append((m.start(), {"kind": "function", "name": name, "owner": ""}))
-    return [r for _, r in sorted(rows, key=lambda t: t[0])]
+    return _by_start(rows)
 
 
 def _json_mentions(text: str) -> List[Dict[str, str]]:
@@ -1353,10 +1328,7 @@ def _python_mentions(text: str) -> List[Dict[str, str]]:
                 )
             else:
                 owner = stack[-1][1] if stack and stack[-1][2] else ""
-                kind = "method" if owner else "function"
-                decls.append(
-                    (start, {"kind": kind, "name": name, "owner": owner})
-                )
+                decls.append((start, _member(name, owner)))
             stack.append((indent, name, skind == "class"))
             # decl lines yield no calls (default-arg / same-line-lambda
             # calls skipped — the pre-wave-7 policy, unchanged)
@@ -1376,8 +1348,7 @@ def _python_mentions(text: str) -> List[Dict[str, str]]:
             if name in _KEYWORDS:
                 continue
             calls.append({"kind": "call", "name": name, "owner": owner})
-    decls.sort(key=lambda t: t[0])
-    return [d for _, d in decls] + calls
+    return _by_start(decls) + calls
 
 
 def extract_mentions(
@@ -1427,17 +1398,7 @@ def extract_mentions(
                 decls.append(
                     (m.start(), {"kind": "function", "name": m.group(1), "owner": ""})
                 )
-        # extent-aware owner attribution, like java's (wave 6) — wave 7
-        # extended it here: "nearest preceding class" handed every
-        # method-shaped member AFTER a class closed (object-literal
-        # methods, a later object's field arrows) to that stale class.
-        # An extent truncated by the chunk boundary runs to chunk end.
-        class_extents = []
-        for m in _JS_CLASS.finditer(text):
-            brace = text.find("{", m.end())
-            end = _brace_span(text, brace) if brace != -1 else len(text)
-            class_extents.append((m.start(), m.group(1), end))
-        class_extents.sort()
+        class_extents = _extents(_JS_CLASS, text)
         for start, name, _e in class_extents:
             decls.append((start, {"kind": "class", "name": name, "owner": ""}))
         for m in _TS_NOMINAL.finditer(text):
@@ -1449,16 +1410,9 @@ def extract_mentions(
                 name = m.group(2)
                 if name in _JS_METHOD_SKIP:
                     continue
-                # innermost ENCLOSING class; ownerless (object literal /
-                # continuation chunk) → function fallback
-                enclosing = [c for c in class_extents
-                             if c[0] < m.start() < c[2]]
-                owner = enclosing[-1][1] if enclosing else ""
-                kind = "method" if owner else "function"
-                decls.append(
-                    (m.start(), {"kind": kind, "name": name, "owner": owner})
-                )
-        out.extend(d for _, d in sorted(decls, key=lambda t: t[0]))
+                owner = _enclosing(class_extents, m.start())
+                decls.append((m.start(), _member(name, owner)))
+        out.extend(_by_start(decls))
         out.extend(
             _calls_tracked(text, _JS_DECL_UPDATE, _JS_DECL_SKIP,
                            _KEYWORDS | _JS_KEYWORDS,
@@ -1473,9 +1427,7 @@ def extract_mentions(
             for ml in _GO_IMPORT_ENTRY.finditer(block):
                 out.append({"kind": "import", "name": ml.group(1), "owner": ""})
         for m in _GO_FUNC.finditer(text):
-            recv, name = m.group(1), m.group(2)
-            kind = "method" if recv else "function"
-            out.append({"kind": kind, "name": name, "owner": recv or ""})
+            out.append(_member(m.group(2), m.group(1) or ""))
         for m in _GO_TYPE.finditer(text):
             out.append({"kind": "class", "name": m.group(1), "owner": ""})
         # interface bodies: method-set prototypes become method mentions
@@ -1511,32 +1463,13 @@ def extract_mentions(
     elif lang == "java":
         for m in _JAVA_IMPORT.finditer(text):
             out.append({"kind": "import", "name": m.group(1), "owner": ""})
-        # extent-aware owner attribution: a method belongs to the INNERMOST
-        # class whose brace extent still encloses it — "nearest preceding
-        # declaration" kept owning methods by a nested class after that
-        # class had closed (`class Outer { class Inner {…} void b() {} }`
-        # handed b to Inner — round-5 wave-6 probe).  An extent truncated
-        # by the chunk boundary runs to the end of the chunk (the shared
-        # cross-chunk-container envelope).
-        class_extents = []
-        for m in _JAVA_CLASS.finditer(text):
-            brace = text.find("{", m.end())
-            end = _brace_span(text, brace) if brace != -1 else len(text)
-            class_extents.append((m.start(), m.group(1), end))
-        class_extents.sort()
+        class_extents = _extents(_JAVA_CLASS, text)
         for _, cname, _e in class_extents:
             out.append({"kind": "class", "name": cname, "owner": ""})
         for pat in (_JAVA_METHOD, _JAVA_PROTO, _JAVA_FIELD_LAMBDA):
             for m in pat.finditer(text):
-                enclosing = [c for c in class_extents
-                             if c[0] < m.start() < c[2]]
-                owner = enclosing[-1][1] if enclosing else ""
-                # ownerless (class declared in an earlier chunk): fall back
-                # to 'function' like python/rust/ruby do — a kind='method'
-                # with owner '' would emit a has_method triple from the
-                # dangling node '<repo>/<path>::'
-                kind = "method" if owner else "function"
-                out.append({"kind": kind, "name": m.group(1), "owner": owner})
+                owner = _enclosing(class_extents, m.start())
+                out.append(_member(m.group(1), owner))
         out.extend(
             _calls_tracked(text, _JAVA_DECL_UPDATE, _JAVA_DECL_SKIP, _KEYWORDS)
         )
@@ -1559,15 +1492,9 @@ def extract_mentions(
             + [(m.start(), m.group(1)) for m in _RUST_TRAIT_OWNER.finditer(text)]
         )
         for m in _RUST_FN.finditer(text):
-            indent, name = m.group(1), m.group(2)
-            owner = ""
-            if indent:
-                preceding = [c for c in impl_spans if c[0] < m.start()]
-                if preceding:
-                    owner = preceding[-1][1]
-            kind = "method" if owner else "function"
-            decls.append((m.start(), {"kind": kind, "name": name, "owner": owner}))
-        out.extend(d for _, d in sorted(decls, key=lambda t: t[0]))
+            owner = _preceding(impl_spans, m.start()) if m.group(1) else ""
+            decls.append((m.start(), _member(m.group(2), owner)))
+        out.extend(_by_start(decls))
         enum_spans = [
             (m.end(), _brace_span(text, m.end() - 1))
             for m in _RUST_ENUM_OPEN.finditer(text)
@@ -1584,15 +1511,9 @@ def extract_mentions(
         for start, name in class_spans:
             decls.append((start, {"kind": "class", "name": name, "owner": ""}))
         for m in _RB_DEF.finditer(text):
-            indent, name = m.group(1), m.group(2)
-            owner = ""
-            if indent:
-                preceding = [c for c in class_spans if c[0] < m.start()]
-                if preceding:
-                    owner = preceding[-1][1]
-            kind = "method" if owner else "function"
-            decls.append((m.start(), {"kind": kind, "name": name, "owner": owner}))
-        out.extend(d for _, d in sorted(decls, key=lambda t: t[0]))
+            owner = _preceding(class_spans, m.start()) if m.group(1) else ""
+            decls.append((m.start(), _member(m.group(2), owner)))
+        out.extend(_by_start(decls))
         out.extend(
             _calls_tracked(text, _RB_DECL_UPDATE, _RB_DECL_SKIP,
                            _KEYWORDS | _RB_KEYWORDS)
@@ -1602,19 +1523,9 @@ def extract_mentions(
         for m in _C_INCLUDE.finditer(text):
             stem = m.group(1).rsplit("/", 1)[-1].split(".", 1)[0]
             decls.append((m.start(), {"kind": "import", "name": stem, "owner": ""}))
-        # class brace extents (wave 7, the java/js treatment): inline
-        # member ownership was "nearest preceding class", which handed
-        # every indented function AFTER a class closed (anonymous-
-        # namespace helpers, a later struct's members) to that stale
-        # class.  _C_CLASS's match ends at ':' (base clause) or '{'.
-        class_extents = []
-        for m in _C_CLASS.finditer(text):
-            decls.append((m.start(), {"kind": "class", "name": m.group(1), "owner": ""}))
-            open_idx = (m.end() - 1 if text[m.end() - 1] == "{"
-                        else text.find("{", m.end()))
-            end = _brace_span(text, open_idx) if open_idx != -1 else len(text)
-            class_extents.append((m.start(), m.group(1), end))
-        class_extents.sort()
+        class_extents = _extents(_C_CLASS, text)
+        for start, name, _e in class_extents:
+            decls.append((start, {"kind": "class", "name": name, "owner": ""}))
         for m in _C_TYPEDEF_FNPTR.finditer(text):
             decls.append(
                 (m.start(), {"kind": "class", "name": m.group(1), "owner": ""})
@@ -1625,21 +1536,13 @@ def extract_mentions(
                  {"kind": "function", "name": m.group(1), "owner": ""})
             )
         for m in _C_TYPEDEF.finditer(text):
-            depth, i, n = 1, m.end(), len(text)
-            while i < n and depth:
-                c = text[i]
-                if c == "{":
-                    depth += 1
-                elif c == "}":
-                    depth -= 1
-                i += 1
-            if depth == 0:
-                tail = _C_TYPEDEF_TAIL.match(text, i)
-                if tail:
-                    decls.append(
-                        (m.start(),
-                         {"kind": "class", "name": tail.group(1), "owner": ""})
-                    )
+            # a body the chunk boundary truncated ends at len(text): no tail
+            tail = _C_TYPEDEF_TAIL.match(text, _brace_span(text, m.end() - 1))
+            if tail:
+                decls.append(
+                    (m.start(),
+                     {"kind": "class", "name": tail.group(1), "owner": ""})
+                )
         fn_spans = []
         proto_spans = []
         # constructors first (wave 7) — no return type, so _C_FN/_C_PROTO
@@ -1684,7 +1587,7 @@ def extract_mentions(
             # a ctor rule above already owns this span (the multi-line
             # type run lets _C_FN re-match an inline ctor whose preceding
             # line supplies token text — e.g. an access specifier)
-            if any(s <= m.start(3) < e for s, e in ctor_spans):
+            if _in_spans(ctor_spans, m.start(3)):
                 continue
             owner = qual or ""
             # member-ness = indent of the NAME's own line, not the match
@@ -1695,15 +1598,9 @@ def extract_mentions(
             # specifier owner '' (found by the round-5 C++ probe batch)
             ls = text.rfind("\n", 0, m.start(3)) + 1
             if not owner and text[ls] in " \t":
-                # inline member definition: owner = innermost class whose
-                # brace extent encloses the NAME (wave 7 — was "nearest
-                # preceding class", which outlived the class's body)
-                enclosing = [c for c in class_extents
-                             if c[0] < m.start(3) < c[2]]
-                if enclosing:
-                    owner = enclosing[-1][1]
-            kind = "method" if owner else "function"
-            decls.append((m.start(), {"kind": kind, "name": name, "owner": owner}))
+                # inline member definition: the class enclosing the NAME
+                owner = _enclosing(class_extents, m.start(3))
+            decls.append((m.start(), _member(name, owner)))
             fn_spans.append((m.start(), m.end(), name))
         proto_spans.extend(
             (m.start(), m.end()) for m in _C_PROTO.finditer(text)
@@ -1714,23 +1611,13 @@ def extract_mentions(
                 # phantom call but emit no mention — same policy as _C_PROTO
                 proto_spans.append((m.start(), m.end()))
                 continue
-            owner = m.group(1) or ""
-            if not owner:
-                # innermost enclosing class extent — see the _C_FN lookup
-                enclosing = [c for c in class_extents
-                             if c[0] < m.start() < c[2]]
-                if enclosing:
-                    owner = enclosing[-1][1]
-            kind = "method" if owner else "function"
-            decls.append(
-                (m.start(),
-                 {"kind": kind, "name": "~" + m.group(2), "owner": owner})
-            )
+            owner = m.group(1) or _enclosing(class_extents, m.start())
+            decls.append((m.start(), _member("~" + m.group(2), owner)))
             fn_spans.append((m.start(), m.end(), "~" + m.group(2)))
         # owner attribution in _calls_c walks fn_spans in order and
         # assumes ascending starts — destructor spans were appended last
         fn_spans.sort()
-        out.extend(d for _, d in sorted(decls, key=lambda t: t[0]))
+        out.extend(_by_start(decls))
         out.extend(_calls_c(text, fn_spans, proto_spans))
     elif lang == "json":
         out.extend(_json_mentions(text))
@@ -1756,18 +1643,18 @@ def extract_mentions(
         for start, name in section_spans:
             decls.append((start, {"kind": "class", "name": name, "owner": ""}))
         for m in _TOML_KEY.finditer(text):
-            preceding = [s for s in section_spans if s[0] < m.start()]
-            if preceding:
+            section = _preceding(section_spans, m.start())
+            if section:
                 decls.append(
                     (m.start(), {"kind": "method", "name": m.group(1),
-                                 "owner": preceding[-1][1]})
+                                 "owner": section})
                 )
             else:
                 # top-level key before any [section]
                 decls.append(
                     (m.start(), {"kind": "class", "name": m.group(1), "owner": ""})
                 )
-        out.extend(d for _, d in sorted(decls, key=lambda t: t[0]))
+        out.extend(_by_start(decls))
     elif lang == "shell":
         decls = []
         for m in _SH_SOURCE.finditer(text):
@@ -1781,7 +1668,7 @@ def extract_mentions(
                 (m.start(), {"kind": "function",
                              "name": m.group(1) or m.group(2), "owner": ""})
             )
-        out.extend(d for _, d in sorted(decls, key=lambda t: t[0]))
+        out.extend(_by_start(decls))
         # no call extraction: in shell every bare word is a command
         # invocation and $(...)/test(...) shapes defeat the _CALL heuristic
         # — a declared gap, not a silent one
@@ -1825,7 +1712,7 @@ def _calls(
     for line in text.split("\n"):
         start = pos
         pos += len(line) + 1
-        if skip_spans and any(s <= start < e for s, e in skip_spans):
+        if skip_spans and _in_spans(skip_spans, start):
             continue
         if _COMMENT_LINE.match(line):
             continue
@@ -1875,7 +1762,7 @@ def _calls_tracked(
     for line in text.split("\n"):
         start = pos
         pos += len(line) + 1
-        if skip_spans and any(s <= start < e for s, e in skip_spans):
+        if skip_spans and _in_spans(skip_spans, start):
             continue
         if comment.match(line):
             continue
@@ -1913,10 +1800,92 @@ def _brace_span(text: str, open_idx: int) -> int:
     return len(text)
 
 
+# --- scope rules: one home per rule the grammars share ----------------------
+
+
+def _blank(text: str, spans: "List[Tuple[int, int]]") -> str:
+    """``text`` with every ascending, disjoint ``[s, e)`` span blanked to
+    spaces, newlines kept: offsets and line structure survive, so later
+    passes see the same positions.  ``text`` itself when nothing is
+    blanked (chunk_text_masked tests that identity)."""
+    if not spans:
+        return text
+    out, last = [], 0
+    for s, e in spans:
+        out.append(text[last:s])
+        out.append("".join("\n" if ch == "\n" else " " for ch in text[s:e]))
+        last = e
+    out.append(text[last:])
+    return "".join(out)
+
+
+def _by_start(decls: "List[Tuple[int, Dict[str, str]]]") -> List[Dict[str, str]]:
+    """The mentions of ``(start, mention)`` pairs in document order; the
+    sort is stable, so mentions at one offset keep their emission order."""
+    return [d for _, d in sorted(decls, key=lambda t: t[0])]
+
+
+def _extents(pattern: "re.Pattern", text: str) -> "List[Tuple[int, str, int]]":
+    """Sorted ``(start, name, end)`` brace extents of ``pattern``'s
+    containers (name = group 1); the body opens at the first '{' at or
+    after the match's last character (`class A {`, C's `struct S : B {`).
+    A body the chunk boundary truncates runs to chunk end (the shared
+    cross-chunk-container envelope)."""
+    out = []
+    for m in pattern.finditer(text):
+        brace = text.find("{", m.end() - 1)
+        end = _brace_span(text, brace) if brace != -1 else len(text)
+        out.append((m.start(), m.group(1), end))
+    out.sort()
+    return out
+
+
+def _enclosing(extents: "List[Tuple[int, str, int]]", pos: int) -> str:
+    """Name of the innermost extent that strictly encloses ``pos``, else
+    ''.  Extent-aware, not "nearest preceding class", which handed every
+    member after a class's closing brace to that stale class: java's
+    `class Outer { class Inner {…} void b() {} }` gave b to Inner, and
+    object-literal methods after a JS class or anonymous-namespace
+    helpers after a C++ struct became its methods."""
+    owner = ""
+    for start, name, end in extents:
+        if start >= pos:
+            break
+        if pos < end:
+            owner = name
+    return owner
+
+
+def _preceding(spans: "List[tuple]", pos: int) -> str:
+    """Last field (the container name) of the last start-sorted span that
+    starts before ``pos``, else '' — the owner rule of containers with no
+    parsed extent: rust impl/trait and ruby class headers, toml sections,
+    docker stages, C definitions for the calls after them."""
+    owner = ""
+    for span in spans:
+        if span[0] >= pos:
+            break
+        owner = span[-1]
+    return owner
+
+
+def _in_spans(spans: "List[Tuple[int, int]]", pos: int) -> bool:
+    """Whether ``pos`` falls inside any ``[s, e)`` span."""
+    return any(s <= pos < e for s, e in spans)
+
+
+def _member(name: str, owner: str) -> Dict[str, str]:
+    """A callable declaration: a method of ``owner``, or a function when
+    it has none (its class lies in an earlier chunk, it sits in an object
+    literal or at module level).  A kind='method' row with owner '' would
+    emit a has_method triple from the dangling node '<repo>/<path>::'."""
+    return {"kind": "method" if owner else "function", "name": name, "owner": owner}
+
+
 def _calls_c(
     text: str,
     fn_spans: "List[Tuple[int, int, str]]",
-    proto_spans: "List[Tuple[int, int]] | None" = None,
+    proto_spans: "List[Tuple[int, int]]",
 ) -> List[Dict[str, str]]:
     """Span-based call extraction for C/C++: a definition's signature may
     span lines (brace-on-next-line convention), so line-based owner
@@ -1927,7 +1896,7 @@ def _calls_c(
     chunk ('' = file scope).  Comment-start lines and single-line string
     literals are excluded like the line-based extractors
     (`// pool_free(p) cleanup` and `puts("use free(p)")` are not calls)."""
-    skip_spans = []
+    skip_spans = [(s, e) for s, e, _ in fn_spans] + proto_spans
     pos = 0
     for line in text.split("\n"):
         if _COMMENT_LINE.match(line):
@@ -1941,22 +1910,14 @@ def _calls_c(
     calls: List[Dict[str, str]] = []
     for m in _CALL.finditer(text):
         pos = m.start()
-        if any(s <= pos < e for s, e, _ in fn_spans):
-            continue
-        if proto_spans and any(s <= pos < e for s, e in proto_spans):
-            continue
-        if any(s <= pos < e for s, e in skip_spans):
+        if _in_spans(skip_spans, pos):
             continue
         name = m.group(1)
         if name in _KEYWORDS or name in _C_KEYWORDS:
             continue
-        owner = ""
-        for s, _e, fname in fn_spans:
-            if s < pos:
-                owner = fname
-            else:
-                break
-        calls.append({"kind": "call", "name": name, "owner": owner})
+        calls.append(
+            {"kind": "call", "name": name, "owner": _preceding(fn_spans, pos)}
+        )
     return calls
 
 

@@ -36,17 +36,6 @@ def _hash_fraction(id_col: Column, salt: str) -> Column:
     return h.cast("double") / F.lit(float(_BUCKETS))
 
 
-def sample_deterministic(
-    df: DataFrame,
-    rate: float,
-    id_col: str = "doc_id",
-    salt: str = "sample",
-) -> DataFrame:
-    """Keep each row iff hash_fraction(id) < rate.  Deterministic,
-    partitioning-independent, rerun-stable."""
-    return df.filter(_hash_fraction(F.col(id_col), salt) < rate)
-
-
 def pack_sequences(
     df: DataFrame,
     capacity: int,

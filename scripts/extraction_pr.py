@@ -7,11 +7,17 @@ way real projects are (decorators, receivers, abstract methods, modern
 module syntax, comments/strings containing keywords); their declaration
 inventory is hand-labeled in tests/fixtures_realworld/labels.py,
 independent of the grammars.  This script routes each file through the
-SAME ext→lang map the real-file front door uses, runs the extraction
-kernel, and reports per-language precision/recall over deduped
-(group, name) declarations plus owner accuracy on the matched callables.
+SAME ext→lang map the real-file front door uses and reports per-language
+precision/recall over deduped (group, name) declarations plus owner
+accuracy on the matched callables, twice:
 
-Usage: python scripts/extraction_pr.py            # markdown table
+- whole file: ``extract_mentions`` on the file's full text;
+- production path: what ``extract_document_rows`` runs per document,
+  ``chunk_text_masked(text, lang, 1024)`` then ``extract_mentions`` on
+  each chunk's masked text.  A member whose class header lies in an
+  earlier chunk loses its owner here.
+
+Usage: python scripts/extraction_pr.py            # the two markdown tables
        python scripts/extraction_pr.py --details  # + per-file misses
 """
 from __future__ import annotations
@@ -28,9 +34,15 @@ GROUP = {"function": "callable", "method": "callable",
          "class": "type", "import": "import"}
 
 
-def measure():
+def measure(chunk_bytes: "int | None" = None):
+    """Per-language counts over the fixture tree: whole-file extraction
+    when ``chunk_bytes`` is None, else the production path at that chunk
+    size."""
     from fixtures_realworld.labels import LABELS, OWNERS
-    from scrapontologies_spark.functions.code_gazetteer import extract_mentions
+    from scrapontologies_spark.functions.code_gazetteer import (
+        chunk_text_masked,
+        extract_mentions,
+    )
     from scrapontologies_spark.sources.files import EXT_LANG
 
     root = os.path.join(REPO, "tests", "fixtures_realworld", "files")
@@ -45,7 +57,12 @@ def measure():
         lang = EXT_LANG.get(ext, "text")
         with open(path, encoding="utf-8") as fh:
             text = fh.read()
-        mentions = extract_mentions(lang, text)
+        if chunk_bytes is None:
+            mentions = extract_mentions(lang, text)
+        else:
+            mentions = [m for _cid, _orig, ext in
+                        chunk_text_masked(text, lang, chunk_bytes)
+                        for m in extract_mentions(lang, ext)]
         pred = {(GROUP[m["kind"]], m["name"])
                 for m in mentions if m["kind"] in GROUP}
         owners = {m["name"]: m["owner"] for m in mentions
@@ -63,8 +80,9 @@ def measure():
     return per_lang, details
 
 
-def main() -> int:
-    per_lang, details = measure()
+def report(title: str, chunk_bytes: "int | None") -> None:
+    per_lang, details = measure(chunk_bytes)
+    print(f"\n### {title}\n")
     print("| lang | gold | P | R | owner acc |")
     print("|---|---|---|---|---|")
     tot = {"tp": 0, "fp": 0, "fn": 0, "own_ok": 0, "own_all": 0}
@@ -87,6 +105,11 @@ def main() -> int:
                 print("  missed:", missed)
             if extra:
                 print("  extra: ", extra)
+
+
+def main() -> int:
+    report("whole file (extract_mentions)", None)
+    report("production path (chunk_text_masked, chunk_bytes=1024)", 1024)
     return 0
 
 

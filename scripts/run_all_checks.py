@@ -37,7 +37,12 @@ the embedding operators' unit tests (`tests/test_training_data_ops.py`:
 brute-force, LSH and IVF top-k, exact and LSH near-dup, the bucket-key
 UDF's NULL/ragged/NaN rows, the hot-bucket guards, zero norms and the
 shared sign-LSH candidate generator), which the oracle sweeps check only
-end to end.
+end to end, and the grammar kernel on the production path
+(`tests/test_extraction_real_files.py`: pinned per-language digests of
+every vendored real file's chunks, masks and mentions;
+`tests/test_extraction_pr.py`: declaration P/R on the hand-labeled
+fixture tree, whole-file and chunked), which step 4 checks only against
+its own replay of the same grammar functions.
 
 Usage:
   python scripts/run_all_checks.py            # everything (~25-35 min)
@@ -63,6 +68,8 @@ FAST_TESTS = [
     "tests/test_ddl.py",
     "tests/test_resumability.py",
     "tests/test_link_cc.py",
+    "tests/test_extraction_real_files.py",
+    "tests/test_extraction_pr.py",
     *(
         f"tests/test_training_data_ops.py::{t}"
         for t in (

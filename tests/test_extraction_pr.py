@@ -4,9 +4,15 @@ The measurement itself lives in scripts/extraction_pr.py (it prints the
 BENCH_SCALING.md table); this test pins the thresholds so an envelope
 regression on any language fails the suite, not just the next manual
 measurement run.  Labels are hand-written (tests/fixtures_realworld/
-labels.py) independent of the grammars; at round-5 HEAD every language
-measures P = R = 1.0 on this tree (184 labeled declarations after the
-wave-6 shapes), with owner attribution 60/60.
+labels.py) independent of the grammars; every language measures
+P = R = 1.0 on this tree (211 labeled declarations), with owner
+attribution 70/70 whole-file.
+
+The production path (``chunk_text_masked`` at 1024 bytes, then
+``extract_mentions`` per chunk) is held to the same P/R floors.  Its
+owner attribution is reported by the script, not asserted: it reads
+69/70, because ``native/shapes.h``'s ``~ShapeBuffer`` lands in a later
+chunk than its class header and is extracted ownerless.
 """
 
 from __future__ import annotations
@@ -31,9 +37,7 @@ FLOORS = {
 }
 
 
-def test_per_language_precision_recall():
-    per_lang, details = extraction_pr.measure()
-    assert set(FLOORS) <= set(per_lang)
+def _below_floor(per_lang):
     problems = []
     for lang, floor in FLOORS.items():
         s = per_lang[lang]
@@ -41,6 +45,20 @@ def test_per_language_precision_recall():
         r = s["tp"] / (s["tp"] + s["fn"]) if s["tp"] + s["fn"] else 1.0
         if p < floor or r < floor:
             problems.append((lang, p, r))
+    return problems
+
+
+def test_per_language_precision_recall():
+    per_lang, details = extraction_pr.measure()
+    assert set(FLOORS) <= set(per_lang)
+    problems = _below_floor(per_lang)
+    assert not problems, (problems, details)
+
+
+def test_production_path_precision_recall():
+    per_lang, details = extraction_pr.measure(chunk_bytes=1024)
+    assert set(FLOORS) <= set(per_lang)
+    problems = _below_floor(per_lang)
     assert not problems, (problems, details)
 
 
