@@ -109,41 +109,6 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def band_key_rows(
-    sigs: DataFrame, num_hashes: int = 8, band_size: int = 2
-) -> DataFrame:
-    """(doc_id, band_idx, band_key) rows from a MinHash signature table —
-    one narrow pass: per-row array of (band_idx, band_key) structs,
-    exploded — instead of n_bands unions that each recompute the signature
-    aggregation subplan.  Shared by the batch candidate join and the
-    streaming near-dup store.
-
-    ``band_size`` must divide ``num_hashes``: a remainder would silently
-    leave the trailing signature components un-banded — their MinHash
-    aggregation cost paid for zero recall."""
-    if num_hashes % band_size != 0:
-        raise ValueError(
-            f"band_size={band_size} must divide num_hashes={num_hashes}: "
-            f"sig_{(num_hashes // band_size) * band_size}.."
-            f"sig_{num_hashes - 1} would be computed but never banded"
-        )
-    n_bands = num_hashes // band_size
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.col(f"sig_{b * band_size + j}") for j in range(band_size)]
-                )
-            ).alias("band_key"),
-        )
-        for b in range(n_bands)
-    ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("_b")
-    ).select("doc_id", "_b.band_idx", "_b.band_key")
-
-
 def lsh_candidate_pairs(
     sigs: DataFrame,
     num_hashes: int = 8,
@@ -153,20 +118,46 @@ def lsh_candidate_pairs(
     scale: "str | ScaleProfile | None" = None,
 ) -> DataFrame:
     """Band the signature and self-join on (band_idx, band_key): docs
-    sharing any band become candidate pairs (a < b).  The join key is a
-    32-char md5 — bucket-join, never all-pairs; but a band key shared by n
-    docs still contributes n² candidate rows, so ``max_bucket_df`` (the
-    hot-bucket analog of ``max_shingle_df``) drops band buckets hotter
-    than the cap from the candidate space (util.drop_hot_buckets — pairs
-    colliding only there are missed, exactly like dropping a band;
-    ``bucket_metrics`` receives the dropped-bucket counts).
+    sharing any band become candidate pairs (a < b).  The bands come from
+    one narrow pass — a per-row array of (band_idx, band_key) structs,
+    exploded — instead of n_bands unions that each recompute the signature
+    aggregation subplan.  The join key is a 32-char md5 — bucket-join,
+    never all-pairs; but a band key shared by n docs still contributes n²
+    candidate rows, so ``max_bucket_df`` (the hot-bucket analog of
+    ``max_shingle_df``) drops band buckets hotter than the cap from the
+    candidate space (util.drop_hot_buckets — pairs colliding only there
+    are missed, exactly like dropping a band; ``bucket_metrics`` receives
+    the dropped-bucket counts).
+
+    ``band_size`` must divide ``num_hashes``: a remainder would silently
+    leave the trailing signature components un-banded — their MinHash
+    aggregation cost paid for zero recall.
 
     ``scale``: a profiles.ScaleProfile (or preset name) filling any knob
     left at None — ``scale="corpus"`` engages the BENCH_SCALING sizing-rule
     cap without the caller naming it."""
+    if num_hashes % band_size != 0:
+        raise ValueError(
+            f"band_size={band_size} must divide num_hashes={num_hashes}: "
+            f"sig_{(num_hashes // band_size) * band_size}.."
+            f"sig_{num_hashes - 1} would be computed but never banded"
+        )
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.md5(
+                F.concat_ws(
+                    "|", *[F.col(f"sig_{b * band_size + j}") for j in range(band_size)]
+                )
+            ).alias("band_key"),
+        )
+        for b in range(num_hashes // band_size)
+    ]
     max_bucket_df = pick(max_bucket_df, resolve_profile(scale).max_bucket_df)
     bands = drop_hot_buckets(
-        band_key_rows(sigs, num_hashes, band_size),
+        sigs.select(
+            "doc_id", F.explode(F.array(*band_structs)).alias("_b")
+        ).select("doc_id", "_b.band_idx", "_b.band_key"),
         ("band_idx", "band_key"),
         max_bucket_df,
         bucket_metrics,

@@ -1,8 +1,7 @@
 """Event-stream batch operators for the training-data pipeline.
 
 Gap-based sessionization — the canonical stateful event op a 100 TB
-pipeline needs (and the batch twin of streaming/incremental's stateful
-path).  Shuffle shape: ONE hash partition by user_id serves both the
+pipeline needs.  Shuffle shape: ONE hash partition by user_id serves both the
 window (lag) and the session aggregation — Catalyst reuses the exchange,
 so sessionize costs a single shuffle.
 

@@ -9,9 +9,10 @@ Exactly-once comes from the checkpoint + idempotent file sink; no
 watermarks are needed (no event-time aggregation — per-document outputs
 depend on one input row only).
 
-Cross-document stages (reconcile, CC, global schema) stay periodic batch
-jobs over the accumulated tables — the standard lambda split for KG
-construction; the streaming layer only keeps the extraction frontier hot.
+Cross-document stages (dedup, reconcile, CC, global schema) stay periodic
+batch jobs over the accumulated tables — the standard lambda split for KG
+construction; this module is the whole streaming layer, and it only keeps
+the extraction frontier hot.
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.extract import extract_document_rows, triples_view
 from ..sources.corpus import CORPUS_SCHEMA
@@ -37,48 +37,6 @@ def stream_corpus(
     if max_files_per_trigger is not None:  # 0/None distinguishable
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(input_dir)
-
-
-def dedup_stream(
-    docs_stream: DataFrame,
-    text_col: str = "text",
-    ts_col: Optional[str] = None,
-    watermark: Optional[str] = None,
-) -> DataFrame:
-    """Streaming exact dedup: first-arrival-wins on md5(text) across
-    micro-batches (the incremental twin of operators/dedup.exact_dedup —
-    a doc whose content hash was EVER emitted is never emitted again,
-    state persists in the checkpoint across restarts).
-
-    Without a watermark the seen-hash state grows with the distinct-content
-    count — fine for availableNow catch-up runs and bounded backfills;
-    pass (ts_col, watermark e.g. '48 hours') in continuous deployments to
-    bound state via dropDuplicatesWithinWatermark: duplicates arriving
-    within the window are still suppressed, older state is reclaimed.
-
-    Scale shape: state key is the 32-char hash (never the text), the
-    exchange is the same hash(content_hash) shuffle the batch groupBy uses.
-    Within one micro-batch the surviving row among simultaneous duplicates
-    is arrival-order-dependent (Spark semantics); cross-batch suppression
-    is exact."""
-    out = docs_stream.withColumn("content_hash", F.md5(F.col(text_col)))
-    if ts_col is not None and watermark is None:
-        # symmetric validation: a caller supplying the event-time column
-        # expects the bounded-state path — silently ignoring it would run
-        # global dropDuplicates with state growing until the store OOMs,
-        # the exact failure the watermark exists to prevent
-        raise ValueError(
-            "ts_col without watermark: pass watermark (e.g. '48 hours') "
-            "for bounded state, or omit ts_col for the unbounded "
-            "availableNow/backfill mode"
-        )
-    if watermark is not None:
-        if ts_col is None:
-            raise ValueError("watermark requires ts_col")
-        return out.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            ["content_hash"]
-        )
-    return out.dropDuplicates(["content_hash"])
 
 
 def run_incremental_triples(

@@ -42,7 +42,12 @@ end to end, and the grammar kernel on the production path
 every vendored real file's chunks, masks and mentions;
 `tests/test_extraction_pr.py`: declaration P/R on the hand-labeled
 fixture tree, whole-file and chunked), which step 4 checks only against
-its own replay of the same grammar functions.
+its own replay of the same grammar functions, and the incremental
+Structured Streaming ingest (`tests/test_streaming.py`: two availableNow
+micro-batches with a checkpoint restart equal the batch triples), the one
+streaming path, which no other step runs, and every package module's
+import (`tests/test_package_imports.py`), which catches a dangling import
+in a module no other step reaches.
 
 Usage:
   python scripts/run_all_checks.py            # everything (~25-35 min)
@@ -70,6 +75,8 @@ FAST_TESTS = [
     "tests/test_link_cc.py",
     "tests/test_extraction_real_files.py",
     "tests/test_extraction_pr.py",
+    "tests/test_streaming.py",
+    "tests/test_package_imports.py",
     *(
         f"tests/test_training_data_ops.py::{t}"
         for t in (

@@ -1,17 +1,13 @@
 """Scale profiles (VERDICT r04 "Next round" #2): the 100 TB guards become
 one ``scale="corpus"`` knob instead of 3+ per-operator defaults the user
-must know to flip.  Asserts the three contract properties:
+must know to flip.  Asserts the two contract properties:
 
 - **engaged**: the profile actually fills the guard knobs (drop metrics
   fire on a degenerate corpus exactly as the explicit knob does);
 - **unchanged values**: on benign/small data the corpus profile is
   value-identical to the unguarded default (caps sized for 100 TB never
   fire at test scale), and an explicitly passed knob always beats the
-  profile;
-- **bucketed store**: under the corpus profile a string store_dir must
-  name a catalog table (→ BucketedBandStore, whose store-side
-  no-Exchange plan is asserted in test_streaming_neardup); a path string
-  raises instead of silently selecting the full-probe parquet layout.
+  profile.
 """
 
 from __future__ import annotations
@@ -22,11 +18,6 @@ import pytest
 
 from scrapontologies_spark import profiles
 from scrapontologies_spark.operators import dedup, similarity
-from scrapontologies_spark.streaming.neardup import (
-    BucketedBandStore,
-    ParquetBandStore,
-    _as_store,
-)
 
 
 # ---------------------------------------------------------------------------
@@ -166,32 +157,3 @@ def test_corpus_profile_value_identical_on_small_data(spark, docs, embeddings):
         ).collect()
     }
     assert got_e == base_e
-
-
-# ---------------------------------------------------------------------------
-# streaming band-store selection
-# ---------------------------------------------------------------------------
-
-
-def test_as_store_default_keeps_parquet_layout(tmp_path):
-    st = _as_store(str(tmp_path / "bands"))
-    assert isinstance(st, ParquetBandStore)
-
-
-def test_as_store_corpus_selects_bucketed_table():
-    st = _as_store("band_store", "corpus")
-    assert isinstance(st, BucketedBandStore)
-    assert st.n_buckets == profiles.CORPUS.band_store_buckets
-
-
-def test_as_store_corpus_rejects_path(tmp_path):
-    with pytest.raises(ValueError, match="bucketed band store"):
-        _as_store(str(tmp_path / "bands"), "corpus")
-
-
-def test_as_store_instance_passes_through(tmp_path):
-    inst = ParquetBandStore(str(tmp_path / "bands"))
-    assert _as_store(inst, "corpus") is inst
-    bst = BucketedBandStore("tbl", n_buckets=4)
-    assert _as_store(bst, None) is bst
-

@@ -20,154 +20,6 @@ def _expected(rows):
     return out
 
 
-def test_streaming_sessionize_closed_sessions_match_batch(spark, tmp_path):
-    """Stateful streaming sessionization: with the full event set in one
-    availableNow run, every CLOSED session (all but each user's final,
-    still-open one) must match the batch sessionize operator exactly —
-    same numbering, bounds, counts, and value sums."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from scrapontologies_spark.operators.events import sessionize
-    from scrapontologies_spark.streaming.sessions import sessionize_stream
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    in_dir = str(tmp_path / "ev")
-    ckpt = str(tmp_path / "ckpt_sess")
-    events.write.mode("overwrite").parquet(in_dir)
-
-    stream = spark.readStream.schema(events.schema).parquet(in_dir)
-    q = (
-        sessionize_stream(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.session_idx): (
-            r.session_start, r.session_end, r.n_events, r.total_value
-        )
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-
-    batch = sessionize(events, gap_minutes=30)
-    last = batch.groupBy("user_id").agg(F.max("session_idx").alias("_last"))
-    closed = batch.join(last, "user_id").filter(
-        F.col("session_idx") < F.col("_last")
-    )
-    expected = {
-        (r.user_id, r.session_idx): (
-            r.session_start, r.session_end, r.n_events, r.total_value
-        )
-        for r in closed.collect()
-    }
-    assert set(got) == set(expected) and len(got) > 0
-    for k, (s, e, n, v) in expected.items():
-        gs, ge, gn, gv = got[k]
-        assert (gs, ge, gn) == (s, e, n), k
-        assert gv == pytest.approx(v, abs=1e-6), k
-
-
-def test_streaming_sessionize_state_survives_restart(spark, tmp_path):
-    """Session state must persist in the checkpoint across availableNow
-    restarts: events split time-wise into two arrivals yield the same
-    closed sessions as one batch — including sessions spanning the split."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from scrapontologies_spark.operators.events import sessionize
-    from scrapontologies_spark.streaming.sessions import sessionize_stream
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cutoff = lo + (hi - lo) / 2
-    in_dir = str(tmp_path / "ev2")
-    out_dir = str(tmp_path / "sess_out2")
-    ckpt = str(tmp_path / "ckpt_sess2")
-
-    def run_round():
-        # file sink (memory sink cannot recover from a checkpoint)
-        stream = spark.readStream.schema(events.schema).parquet(in_dir)
-        q = (
-            sessionize_stream(stream, gap_minutes=30)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    events.filter(F.col("ts") < cutoff).write.mode("overwrite").parquet(in_dir)
-    run_round()
-    events.filter(F.col("ts") >= cutoff).write.mode("append").parquet(in_dir)
-    run_round()
-    got = {
-        (r.user_id, r.session_idx): (r.session_start, r.session_end, r.n_events)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-
-    batch = sessionize(events, gap_minutes=30)
-    last = batch.groupBy("user_id").agg(F.max("session_idx").alias("_last"))
-    expected = {
-        (r.user_id, r.session_idx): (r.session_start, r.session_end, r.n_events)
-        for r in batch.join(last, "user_id")
-        .filter(F.col("session_idx") < F.col("_last"))
-        .collect()
-    }
-    assert got == expected and len(got) > 0
-
-
-def test_dedup_stream_cross_batch_suppression(spark, tmp_path):
-    """Streaming exact dedup: one emission per distinct content across
-    micro-batches and restarts; batch-2 rows whose hash was emitted in
-    batch 1 are suppressed by the checkpointed state."""
-    from scrapontologies_spark.streaming.incremental import dedup_stream
-
-    in_dir = str(tmp_path / "din")
-    out_dir = str(tmp_path / "dout")
-    ckpt = str(tmp_path / "dckpt")
-    schema = "doc_id long, text string"
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(in_dir)
-        q = (
-            dedup_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1: 3 distinct texts, one internal duplicate
-    spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma"), (3, "alpha beta"), (4, "delta")], schema
-    ).write.mode("append").parquet(in_dir)
-    drain()
-    out1 = spark.read.parquet(out_dir).collect()
-    assert len(out1) == 3  # one row per distinct hash
-    assert {r.text for r in out1} == {"alpha beta", "gamma", "delta"}
-
-    # batch 2 (restart from checkpoint): one repeat, one new
-    spark.createDataFrame([(5, "gamma"), (6, "epsilon")], schema).write.mode(
-        "append"
-    ).parquet(in_dir)
-    drain()
-    out2 = spark.read.parquet(out_dir).collect()
-    assert len(out2) == 4  # 'gamma' suppressed by persisted state
-    assert {r.text for r in out2} == {"alpha beta", "gamma", "delta", "epsilon"}
-    new = [r for r in out2 if r.text == "epsilon"]
-    assert len(new) == 1 and new[0].doc_id == 6
-
-
 def test_incremental_equals_batch(spark, tmp_path):
     rows = corpus_rows(N)
     in_dir = str(tmp_path / "in")
@@ -202,159 +54,3 @@ def test_incremental_equals_batch(spark, tmp_path):
     # no duplicate emission across restarts: row count == distinct count
     df = spark.read.parquet(out_dir)
     assert df.count() == df.distinct().count()
-
-
-def test_streaming_sessionize_late_events(spark, tmp_path):
-    """Cross-batch disorder: a late event within gap of the open session
-    MERGES (extending session_start backward, never session_end < start);
-    an event before start − gap is emitted as a sentinel idx-0 session
-    instead of being silently dropped."""
-    from datetime import datetime
-
-    from scrapontologies_spark.streaming.sessions import sessionize_stream
-
-    schema = "user_id long, event_id long, ts timestamp, value double"
-    in_dir = str(tmp_path / "ev_late")
-    ckpt = str(tmp_path / "ckpt_late")
-
-    def arrive(rows, fname):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-
-    out_dir = str(tmp_path / "out_late")
-
-    def drain(name):
-        # file sink (memory sink cannot recover from a checkpoint)
-        stream = spark.readStream.schema(schema).parquet(in_dir)
-        q = (
-            sessionize_stream(stream, gap_minutes=30)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        return spark.read.parquet(out_dir).collect()
-
-    t = lambda hhmm: datetime.strptime(f"2024-01-01 {hhmm}:00", "%Y-%m-%d %H:%M:%S")
-    arrive([(1, 1, t("10:00"), 1.0), (1, 2, t("10:10"), 1.0)], "a")
-    assert drain("late_run1") == []  # session still open
-
-    # batch 2: one too-late (08:00), one mergeable-late (09:55), one closer
-    arrive(
-        [(1, 3, t("08:00"), 5.0), (1, 4, t("09:55"), 1.0), (1, 5, t("11:30"), 1.0)],
-        "b",
-    )
-    rows = {
-        (r.user_id, r.session_idx): (
-            r.session_start, r.session_end, r.n_events, r.total_value
-        )
-        for r in drain("late_run2")
-    }
-    # sentinel idx-0 single-event session for the too-late event
-    assert rows[(1, 0)] == (t("08:00"), t("08:00"), 1, 5.0)
-    # the mergeable-late event extended session 1 backward; end >= start
-    assert rows[(1, 1)] == (t("09:55"), t("10:10"), 3, 3.0)
-    assert set(rows) == {(1, 0), (1, 1)}
-
-
-def test_streaming_sessionize_null_ts_not_a_poison_pill(spark, tmp_path):
-    """One NULL-timestamp event must be DROPPED at the group boundary, not
-    enter state as epoch -2^63 ns and crash every restart of the query
-    with OutOfBoundsDatetime on emit."""
-    from datetime import datetime
-
-    from scrapontologies_spark.streaming.sessions import sessionize_stream
-
-    rows = [
-        (7, datetime(2024, 1, 1, 10, 0), 1, 1.0),
-        (7, None, 2, 5.0),                       # the poison pill
-        (7, datetime(2024, 1, 1, 12, 0), 3, 2.0),  # > gap: closes session 1
-    ]
-    events = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, value double"
-    )
-    in_dir, ckpt = str(tmp_path / "ev_null"), str(tmp_path / "ckpt_null")
-    events.write.mode("overwrite").parquet(in_dir)
-    q = (
-        sessionize_stream(
-            spark.readStream.schema(events.schema).parquet(in_dir),
-            gap_minutes=30,
-        )
-        .writeStream.format("memory")
-        .queryName("sess_null_out")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.table("sess_null_out").collect()
-    assert len(got) == 1
-    assert (got[0].n_events, got[0].total_value) == (1, 1.0)
-
-
-def test_stream_round_matches_spark_half_up():
-    """total_value rounds HALF_UP on the decimal repr (F.round semantics);
-    Python's builtin round() is half-even on the binary value and diverges
-    at boundary sums — the batch/stream parity the module doc claims."""
-    from scrapontologies_spark.streaming.sessions import _round6
-
-    assert _round6(0.1234565) == 0.123457   # builtin round gives 0.123456
-    assert _round6(2.675) == 2.675          # 6-dp no-op
-    assert round(0.1234565, 6) == 0.123456  # the divergence being fixed
-
-
-def test_stream_sessionize_timeout_plumbing_runs(spark, tmp_path):
-    """state_timeout_minutes switches to ProcessingTimeTimeout and sets a
-    per-group timeout duration; in an availableNow run timeouts need not
-    fire, but the mode + setTimeoutDuration plumbing must execute cleanly
-    and closed sessions still emit."""
-    from datetime import datetime
-
-    from scrapontologies_spark.streaming.sessions import sessionize_stream
-
-    rows = [
-        (5, datetime(2024, 1, 1, 10, 0), 1, 1.0),
-        (5, datetime(2024, 1, 1, 12, 0), 2, 2.0),
-    ]
-    events = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, value double"
-    )
-    in_dir, ckpt = str(tmp_path / "ev_to"), str(tmp_path / "ckpt_to")
-    events.write.mode("overwrite").parquet(in_dir)
-    q = (
-        sessionize_stream(
-            spark.readStream.schema(events.schema).parquet(in_dir),
-            gap_minutes=30,
-            state_timeout_minutes=60,
-        )
-        .writeStream.format("memory")
-        .queryName("sess_to_out")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.table("sess_to_out").collect()
-    assert len(got) == 1 and got[0].n_events == 1
-
-
-def test_dedup_stream_rejects_ts_col_without_watermark(spark):
-    """Supplying the event-time column without a watermark must fail fast
-    — silently ignoring it would run unbounded-state dropDuplicates, the
-    exact failure the watermark exists to prevent."""
-    import pytest
-
-    from scrapontologies_spark.streaming.incremental import dedup_stream
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .selectExpr("CAST(value AS STRING) AS text", "timestamp AS ts")
-    )
-    with pytest.raises(ValueError):
-        dedup_stream(stream, ts_col="ts")
