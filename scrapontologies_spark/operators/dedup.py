@@ -16,9 +16,10 @@ Scale design:
 - SimHash: per-token hash → per-bit majority vote as ``bits`` aggregate
   expressions over ONE row per token (no bit explode), sums combining
   map-side.
-- n-gram Jaccard defaults to the LSH candidate pair space (never all
-  pairs sharing a shingle); the exhaustive path requires an explicit
-  shingle document-frequency cap.
+- n-gram Jaccard is exact over the LSH candidate pair space (never all
+  pairs sharing a shingle); MinHash bands and sign-LSH buckets share one
+  bucket self-join (util.bucket_pairs) and one hot-key guard
+  (util.drop_hot_buckets).
 - verification joins bring text together ONLY for candidate pairs.
 """
 
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..profiles import ScaleProfile, pick, resolve_profile
-from .util import drop_hot_buckets, gram_array, spread
+from .util import bucket_pairs, drop_hot_buckets, gram_array, spread
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -121,13 +122,13 @@ def lsh_candidate_pairs(
     sharing any band become candidate pairs (a < b).  The bands come from
     one narrow pass — a per-row array of (band_idx, band_key) structs,
     exploded — instead of n_bands unions that each recompute the signature
-    aggregation subplan.  The join key is a 32-char md5 — bucket-join,
-    never all-pairs; but a band key shared by n docs still contributes n²
-    candidate rows, so ``max_bucket_df`` (the hot-bucket analog of
-    ``max_shingle_df``) drops band buckets hotter than the cap from the
-    candidate space (util.drop_hot_buckets — pairs colliding only there
-    are missed, exactly like dropping a band; ``bucket_metrics`` receives
-    the dropped-bucket counts).
+    aggregation subplan.  The self-join is util.bucket_pairs on a 32-char
+    md5 key — bucket-join, never all-pairs; but a band key shared by n docs
+    still contributes n² candidate rows, so ``max_bucket_df`` (the
+    hot-bucket analog of ``max_shingle_df``) drops band buckets hotter than
+    the cap from the candidate space (pairs colliding only there are
+    missed, exactly like dropping a band; ``bucket_metrics`` receives the
+    dropped-bucket counts).
 
     ``band_size`` must divide ``num_hashes``: a remainder would silently
     leave the trailing signature components un-banded — their MinHash
@@ -154,26 +155,12 @@ def lsh_candidate_pairs(
         for b in range(num_hashes // band_size)
     ]
     max_bucket_df = pick(max_bucket_df, resolve_profile(scale).max_bucket_df)
-    bands = drop_hot_buckets(
-        sigs.select(
-            "doc_id", F.explode(F.array(*band_structs)).alias("_b")
-        ).select("doc_id", "_b.band_idx", "_b.band_key"),
-        ("band_idx", "band_key"),
-        max_bucket_df,
-        bucket_metrics,
-    )
-    left = bands.select(
-        F.col("band_idx"), F.col("band_key"), F.col("doc_id").alias("doc_a")
-    )
-    right = bands.select(
-        F.col("band_idx"), F.col("band_key"), F.col("doc_id").alias("doc_b")
-    )
-    return (
-        left.join(right, ["band_idx", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    bands = sigs.select(
+        "doc_id", F.explode(F.array(*band_structs)).alias("_b")
+    ).select("doc_id", "_b.band_idx", "_b.band_key")
+    return bucket_pairs(
+        bands, ("band_idx", "band_key"), "doc_id", max_bucket_df, bucket_metrics
+    ).toDF("doc_a", "doc_b")
 
 
 def ngram_jaccard_pairs(
@@ -182,33 +169,28 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
-    candidates: "DataFrame | str | None" = "lsh",
     num_hashes: int = 8,
     band_size: int = 2,
     max_shingle_df: int | None = None,
     max_bucket_df: "int | None" = None,
     scale: "str | ScaleProfile | None" = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs.  Returns
+    """Exact n-gram Jaccard over MinHash+LSH candidate pairs.  Returns
     (doc_a, doc_b, jaccard ≥ threshold), doc_a < doc_b.
 
-    ``candidates`` selects the pair space:
-    - ``"lsh"`` (DEFAULT — the 100 TB path): MinHash+LSH candidate pairs
-      built from the SAME shingle set (``num_hashes``/``band_size``);
-      Jaccard is then computed exactly, but only for bucket-colliding
-      pairs.  Deterministic (md5 buckets), so the approximation is still
-      value-checkable against a SQL oracle embedding the same bands.
-    - ``None``: exhaustive — every pair sharing ≥1 shingle.  A shingle
-      shared by n docs makes that join group O(n²): ONLY safe when
-      ``max_shingle_df`` caps the shingle document frequency (shingles in
-      more than ``max_shingle_df`` docs are dropped from the Jaccard space
-      entirely — intersections AND sizes — so stop-phrase shingles cannot
-      blow up the join; values then reflect the capped space) or the
-      corpus is known small.
-    - a DataFrame of (doc_a, doc_b): caller-supplied candidate pairs.
+    The candidates are lsh_candidate_pairs built from the SAME shingle set
+    (``num_hashes``/``band_size``); Jaccard is then computed exactly, but
+    only for bucket-colliding pairs — never all pairs sharing a shingle.
+    Deterministic (md5 buckets), so the approximation is still
+    value-checkable against a SQL oracle embedding the same bands.
 
-    ``max_bucket_df`` (lsh mode): cap on LSH band-bucket document
-    frequency, forwarded to lsh_candidate_pairs — the guard against a
+    ``max_shingle_df``: shingles in more than ``max_shingle_df`` docs are
+    dropped (util.drop_hot_buckets) before signatures, intersections AND
+    sizes, so stop-phrase shingles carry no weight; values then reflect
+    the capped space.
+
+    ``max_bucket_df``: cap on LSH band-bucket document frequency,
+    forwarded to lsh_candidate_pairs — the guard against a
     boilerplate-heavy corpus turning one band bucket quadratic.
 
     ``scale``: profile filling ``max_shingle_df``/``max_bucket_df`` when
@@ -217,54 +199,34 @@ def ngram_jaccard_pairs(
     prof = resolve_profile(scale)
     max_shingle_df = pick(max_shingle_df, prof.max_shingle_df)
     max_bucket_df = pick(max_bucket_df, prof.max_bucket_df)
-    sh = shingles(df, text_col, id_col, k)
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_shingle_df)
-            .select("shingle")
-        )
-        # heavy hitters are few by construction — broadcast the anti side
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
+    sh = drop_hot_buckets(
+        shingles(df, text_col, id_col, k), ("shingle",), max_shingle_df
+    )
     # the shingle table feeds 4-5 plan subtrees (signatures, both sides of
     # the intersection join, sizes): materialize it once to executor
     # storage instead of re-running the explode+distinct per subtree (~2×
     # at sf0.1)
     sh = sh.localCheckpoint(eager=False)
-    if isinstance(candidates, str):
-        if candidates != "lsh":
-            raise ValueError(f"unknown candidates mode: {candidates!r}")
-        candidates = lsh_candidate_pairs(
-            minhash_signatures(sh, num_hashes),
-            num_hashes,
-            band_size,
-            max_bucket_df=max_bucket_df,
-        )
+    candidates = lsh_candidate_pairs(
+        minhash_signatures(sh, num_hashes),
+        num_hashes,
+        band_size,
+        max_bucket_df=max_bucket_df,
+    )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    if candidates is None:
-        a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("n_inter"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle").alias("sh_a"))
+    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle").alias("sh_b"))
+    inter = (
+        candidates.alias("c")
+        .join(a.alias("x"), F.col("c.doc_a") == F.col("x.doc_a"))
+        .join(
+            b.alias("y"),
+            (F.col("c.doc_b") == F.col("y.doc_b"))
+            & (F.col("x.sh_a") == F.col("y.sh_b")),
         )
-    else:
-        a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle").alias("sh_a"))
-        b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle").alias("sh_b"))
-        inter = (
-            candidates.alias("c")
-            .join(a.alias("x"), F.col("c.doc_a") == F.col("x.doc_a"))
-            .join(
-                b.alias("y"),
-                (F.col("c.doc_b") == F.col("y.doc_b"))
-                & (F.col("x.sh_a") == F.col("y.sh_b")),
-            )
-            .groupBy(F.col("c.doc_a"), F.col("c.doc_b"))
-            .agg(F.count("*").alias("n_inter"))
-        )
+        .groupBy(F.col("c.doc_a"), F.col("c.doc_b"))
+        .agg(F.count("*").alias("n_inter"))
+    )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (

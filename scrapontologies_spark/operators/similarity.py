@@ -33,7 +33,7 @@ from pyspark.sql.types import ArrayType, StringType
 from pyspark.sql.window import Window
 
 from ..profiles import ScaleProfile, pick, resolve_profile
-from .util import drop_hot_buckets, spread
+from .util import bucket_pairs, spread
 
 
 # Per-PAIR scoring stays on the interpreted HOF form: candidate pairs
@@ -394,30 +394,24 @@ def _sign_lsh_pairs(
     ALL tables' keys come from ONE Arrow UDF call per row (the shared
     full-vector sum is reused by every half-sum projection inside the UDF)
     plus a JVM explode to (row, table-key) pairs — instead of one union
-    branch per table that each rescan the input.  The physical plan still
-    runs that pass once per side of the self-join: the UDF output is not
-    reused across it.  The input is spread first: the tables × planes
-    projection sums are the heavy narrow work.  Buckets hotter than
-    ``max_bucket_df`` are dropped before the self-join
-    (util.drop_hot_buckets; ``bucket_metrics`` receives the counts)."""
+    branch per table that each rescan the input.  The input is spread
+    first: the tables × planes projection sums are the heavy narrow work.
+    The self-join, hot-bucket drop (``max_bucket_df``; ``bucket_metrics``
+    receives the counts) and ``a < b`` distinct are util.bucket_pairs.
+    Under a sort-merge bucket join the keying runs once: the other side
+    reads its shuffle as a ``ReusedExchange``.  Only when AQE broadcasts
+    one side of a small join does the plan key each side separately."""
     dim = _vector_dim(embeddings, vec_col)
     keys = _bucket_keys_pdf(_pos_sets(seeds, n_planes, dim), prefixes, dim)
-    buckets = drop_hot_buckets(
+    return bucket_pairs(
         spread(embeddings, id_col).select(
             F.col(id_col).alias("_bid"),
             F.explode(keys(F.col(vec_col))).alias("bucket"),
         ),
         ("bucket",),
+        "_bid",
         max_bucket_df,
         bucket_metrics,
-    )
-    left = buckets.select(F.col("_bid").alias("a"), "bucket")
-    right = buckets.select(F.col("_bid").alias("b"), "bucket")
-    return (
-        left.join(right, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
     )
 
 

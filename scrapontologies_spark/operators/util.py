@@ -60,8 +60,9 @@ def drop_hot_buckets(
     max_bucket_df: "int | None",
     metrics: "dict | None" = None,
 ) -> DataFrame:
-    """Hot-bucket guard for LSH bucket self-joins (the ``max_shingle_df``
-    analog for band/bucket keys).
+    """The one hot-key guard: drop every key whose document frequency
+    exceeds ``max_bucket_df`` (LSH band/sign buckets in :func:`bucket_pairs`,
+    shingles in ``dedup.ngram_jaccard_pairs``' ``max_shingle_df``).
 
     A bucket key shared by n rows yields O(n²) candidate rows in the
     self-join BEFORE any distinct — on adversarial data (a million
@@ -79,20 +80,14 @@ def drop_hot_buckets(
     bucket keys) and ``hot_bucket_rows`` (rows they carried) — the logged
     drop metric; computing it costs one extra small aggregation job, so it
     is opt-in.  ``max_bucket_df=None`` returns ``buckets`` unchanged.
-
-    When the cap engages, ``buckets`` is localCheckpointed (lazy) first:
-    its derivation (for LSH bands, the MinHash aggregation — the heavy
-    step) otherwise re-runs for the hot-key count, the anti-join probe,
-    each side of the caller's self-join, and the optional metrics job.
-    Same materialize-once rationale and release path as the shingle table
-    in ``dedup.ngram_jaccard_pairs`` (bench/_release_new_persists).
     """
     if max_bucket_df is None:
         return buckets
-    if max_bucket_df < 1:
-        raise ValueError(f"max_bucket_df must be >= 1, got {max_bucket_df}")
-    buckets = buckets.localCheckpoint(eager=False)
     keys = list(key_cols)
+    if max_bucket_df < 1:
+        raise ValueError(
+            f"document-frequency cap on {keys} must be >= 1, got {max_bucket_df}"
+        )
     hot = (
         buckets.groupBy(*keys)
         .agg(F.count("*").alias("_df"))
@@ -106,6 +101,43 @@ def drop_hot_buckets(
         metrics["hot_buckets"] = int(row["n"])
         metrics["hot_bucket_rows"] = int(row["rows"])
     return buckets.join(F.broadcast(hot.select(*keys)), keys, "left_anti")
+
+
+def bucket_pairs(
+    keyed: DataFrame,
+    key_cols: "tuple[str, ...] | list[str]",
+    id_col: str,
+    max_bucket_df: "int | None",
+    metrics: "dict | None" = None,
+) -> DataFrame:
+    """The one LSH bucket self-join: distinct unordered id pairs (a, b),
+    a < b, of ``keyed`` rows sharing every ``key_cols`` value — the
+    candidate generator under ``dedup.lsh_candidate_pairs`` (MinHash bands)
+    and ``similarity._sign_lsh_pairs`` (sign-LSH buckets).  Multi-table
+    keys must carry their table in the key (a band index, a ``{t}|``
+    prefix), so the self-join over the union of tables distributes over it
+    and equal keys of different tables never pair.
+
+    Hot buckets are dropped first (:func:`drop_hot_buckets`).  When that
+    cap is set, ``keyed`` is localCheckpointed (lazy) first: its
+    derivation (the MinHash aggregation, the bucket-key UDF) otherwise
+    re-runs for the hot-key count, the anti-join probe, each side of the
+    self-join and the optional metrics job.  Same materialize-once
+    rationale and release path as the shingle table in
+    ``dedup.ngram_jaccard_pairs`` (bench/_release_new_persists).  Both join
+    sides are the one frame, so a sort-merge join reads the other side's
+    shuffle as a ``ReusedExchange``."""
+    if max_bucket_df is not None:
+        keyed = keyed.localCheckpoint(eager=False)
+    keyed = drop_hot_buckets(keyed, key_cols, max_bucket_df, metrics)
+    left, right = keyed.alias("_l"), keyed.alias("_r")
+    a, b = F.col(f"_l.{id_col}"), F.col(f"_r.{id_col}")
+    return (
+        left.join(right, list(key_cols))
+        .filter(a < b)
+        .select(a.alias("a"), b.alias("b"))
+        .distinct()
+    )
 
 
 def persisted_rdd_ids(spark) -> set:

@@ -36,7 +36,13 @@ the entity-linking operators behind the job's reconcile and alias labels
 the embedding operators' unit tests (`tests/test_training_data_ops.py`:
 brute-force, LSH and IVF top-k, exact and LSH near-dup, the bucket-key
 UDF's NULL/ragged/NaN rows, the hot-bucket guards, zero norms and the
-shared sign-LSH candidate generator), which the oracle sweeps check only
+shared sign-LSH candidate generator) and their MinHash side
+(`tests/test_training_data_ops.py`: LSH band recall, n-gram Jaccard over
+LSH candidates against a pure-Python oracle with and without the shingle
+cap, the band hot-bucket guard, the band-size check, and the plan test
+that pins one keyed shuffle under both families' bucket self-join
+`util.bucket_pairs`; `tests/test_scale_profile.py`: every scale-profile
+knob on the near-dup operators), which the oracle sweeps check only
 end to end, and the grammar kernel on the production path
 (`tests/test_extraction_real_files.py`: pinned per-language digests of
 every vendored real file's chunks, masks and mentions;
@@ -77,6 +83,7 @@ FAST_TESTS = [
     "tests/test_extraction_pr.py",
     "tests/test_streaming.py",
     "tests/test_package_imports.py",
+    "tests/test_scale_profile.py",
     *(
         f"tests/test_training_data_ops.py::{t}"
         for t in (
@@ -94,6 +101,15 @@ FAST_TESTS = [
             "test_cosine_topk_lsh_hot_bucket_guard",
             "test_zero_norm_embeddings_do_not_abort_cosine_ops",
             "test_sign_lsh_pairs_matches_python_reference",
+            "test_lsh_candidates_superset_of_high_jaccard",
+            "test_ngram_jaccard_default_lsh_path",
+            "test_ngram_jaccard_shingle_df_cap",
+            "test_ngram_jaccard_rejects_zero_shingle_cap",
+            "test_hot_bucket_guard_noop_when_under_cap",
+            "test_hot_bucket_guard_bounds_candidates",
+            "test_ngram_jaccard_forwards_bucket_cap",
+            "test_band_size_must_divide_num_hashes",
+            "test_bucket_pairs_reuse_one_keyed_exchange",
         )
     ),
 ]

@@ -94,14 +94,9 @@ def test_lsh_candidates_superset_of_high_jaccard(spark, docs, docs_pd):
                 assert (a, b) in cands, f"missed near-dup pair ({a},{b}) j={j}"
 
 
-def test_ngram_jaccard_pairs_exhaustive(spark, docs, docs_pd):
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.ngram_jaccard_pairs(
-            docs, threshold=0.2, candidates=None
-        ).collect()
-    }
-    sh_map = {row.doc_id: _shingles(row.text) for _, row in docs_pd.iterrows()}
+def _jaccard_oracle(sh_map: dict, threshold: float) -> dict:
+    """Pure-Python Jaccard of every doc pair sharing a shingle, at or
+    above ``threshold``."""
     ids = sorted(sh_map)
     expected = {}
     for i, a in enumerate(ids):
@@ -109,33 +104,32 @@ def test_ngram_jaccard_pairs_exhaustive(spark, docs, docs_pd):
             sa, sb = sh_map[a], sh_map[b]
             if sa and sb and (sa & sb):
                 j = len(sa & sb) / len(sa | sb)
-                if j >= 0.2:
+                if j >= threshold:
                     expected[(a, b)] = j
-    assert set(got) == set(expected)
+    return expected
+
+
+def _assert_lsh_jaccard(got: dict, expected: dict) -> None:
+    """LSH-candidate Jaccard vs the all-pairs oracle: a subset with
+    identical values, holding every high-similarity pair (j ≥ 0.9 — the
+    banding guarantee direction)."""
+    assert got and set(got) <= set(expected)
+    for pair, j in got.items():
+        assert j == pytest.approx(expected[pair], abs=1e-12)
     for pair, j in expected.items():
-        assert got[pair] == pytest.approx(j, abs=1e-12)
+        if j >= 0.9:
+            assert pair in got, f"LSH missed near-dup {pair} j={j}"
 
 
 def test_ngram_jaccard_default_lsh_path(spark, docs, docs_pd):
-    """DEFAULT = LSH candidate space: output ⊆ exhaustive with identical
-    jaccard values, and every high-similarity pair (j ≥ 0.9 — the banding
-    guarantee direction) is present."""
-    exhaustive = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.ngram_jaccard_pairs(
-            docs, threshold=0.2, candidates=None
-        ).collect()
-    }
+    """Jaccard over the LSH candidate space == the pure-Python Jaccard of
+    every pair it returns, and no high-similarity pair is missed."""
+    sh_map = {row.doc_id: _shingles(row.text) for _, row in docs_pd.iterrows()}
     got = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in dedup.ngram_jaccard_pairs(docs, threshold=0.2).collect()
     }
-    assert set(got) <= set(exhaustive)
-    for pair, j in got.items():
-        assert j == pytest.approx(exhaustive[pair], abs=1e-12)
-    for pair, j in exhaustive.items():
-        if j >= 0.9:
-            assert pair in got, f"LSH default missed near-dup {pair} j={j}"
+    _assert_lsh_jaccard(got, _jaccard_oracle(sh_map, 0.2))
 
 
 def test_ngram_jaccard_shingle_df_cap(spark, docs, docs_pd):
@@ -148,24 +142,20 @@ def test_ngram_jaccard_shingle_df_cap(spark, docs, docs_pd):
         for g in s:
             df_count[g] = df_count.get(g, 0) + 1
     capped = {d: {g for g in s if df_count[g] <= cap} for d, s in sh_map.items()}
-    ids = sorted(capped)
-    expected = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            sa, sb = capped[a], capped[b]
-            if sa and sb and (sa & sb):
-                j = len(sa & sb) / len(sa | sb)
-                if j >= 0.2:
-                    expected[(a, b)] = j
     got = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in dedup.ngram_jaccard_pairs(
-            docs, threshold=0.2, candidates=None, max_shingle_df=cap
+            docs, threshold=0.2, max_shingle_df=cap
         ).collect()
     }
-    assert set(got) == set(expected)
-    for pair, j in expected.items():
-        assert got[pair] == pytest.approx(j, abs=1e-12)
+    _assert_lsh_jaccard(got, _jaccard_oracle(capped, 0.2))
+
+
+def test_ngram_jaccard_rejects_zero_shingle_cap(spark, docs):
+    """A cap below 1 would drop every shingle and return no pairs: it is
+    rejected like the bucket cap."""
+    with pytest.raises(ValueError, match=r"\['shingle'\] must be >= 1, got 0"):
+        dedup.ngram_jaccard_pairs(docs, max_shingle_df=0)
 
 
 def test_minhash_estimate_sane_vs_exact(spark, docs, docs_pd):
@@ -1003,6 +993,57 @@ def test_sign_lsh_pairs_matches_python_reference(spark):
     assert f"0#{keys[30][0][2:]}" in hot and not any(a >= 30 for a, _ in want)
     assert all(40 not in p and 41 not in p for p in got)
     assert ref_pairs({v: [k[2:] for k in ks] for v, ks in keys.items()})[0] != want
+
+
+def test_bucket_pairs_reuse_one_keyed_exchange(spark, tmp_path):
+    """util.bucket_pairs joins one keyed frame with itself, so under a
+    sort-merge join (the shape large inputs take) the second side reads
+    the first side's bucket shuffle as a ReusedExchange: the sign-LSH
+    keying UDF runs once (one ArrowEvalPython), and the MinHash band
+    derivation is not re-run either.  The inputs are uncached parquet
+    scans, as in the registry queries: a scan of the persisted fixtures'
+    paths would read their cache, whose two query stages AQE does not
+    reuse."""
+
+    def scan(name):
+        path = str(tmp_path / name)
+        spark.read.parquet(f"{SF}/{name}.parquet").write.parquet(path)
+        return spark.read.parquet(path)
+
+    docs, emb = scan("documents"), scan("embeddings")
+
+    def final_plan(df):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    def reused(plan, key):
+        return [
+            ln for ln in plan.splitlines()
+            if "ReusedExchange" in ln and f"hashpartitioning({key}#" in ln
+        ]
+
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        sign = final_plan(
+            similarity._sign_lsh_pairs(
+                emb, ["lsh0", "lsh1"], ["0|", "1|"], 4, "vec_id", "embedding",
+                None, None,
+            )
+        )
+        bands = final_plan(
+            dedup.lsh_candidate_pairs(
+                dedup.minhash_signatures(dedup.shingles(docs, distinct=False))
+            )
+        )
+    finally:
+        spark.conf.set(conf, prev)
+    assert "SortMergeJoin" in sign and "SortMergeJoin" in bands
+    assert sign.count("ArrowEvalPython") == 1, sign
+    assert reused(sign, "bucket"), sign
+    assert reused(bands, "band_idx"), bands
 
 
 def test_cosine_topk_lsh_hot_bucket_guard(spark, hot_emb):
