@@ -1047,9 +1047,18 @@ _C_DTOR = re.compile(
 # envelope).  In-class forms are found per class extent in the branch
 # body: the bare shape `Name(args) {` / `Name(args);` is exactly a call
 # statement's, so the name must equal the ENCLOSING class's name to
-# count — extent-scoped patterns are the only safe anchor.
+# count — the branch keeps a _C_CTOR_IN hit only when its name group is
+# the class's.  _C_CTOR_IN is a lookahead, so it is tried at EVERY line
+# start: a call whose argument list runs over several lines cannot hide
+# the constructor line after it (the branch skips hits that start inside
+# the previous kept one, as a left-to-right non-overlapping scan would).
 _C_CTOR_OUT = re.compile(
     r"^[ \t]*(\w+)\s*::\s*\1\s*\(([^;{}]*)\)\s*(?::[^{};]*)?\{", re.M
+)
+_C_CTOR_IN = re.compile(
+    r"^(?=([ \t]+(?:explicit\s+)?(\w+)\s*\(([^;{}]*)\)\s*(?:noexcept\s*)?"
+    r"(?:=\s*(?:default|delete)\s*)?(?::[^{};]*)?([{;])))",
+    re.M,
 )
 # Two-word control forms (`else if (...)`) fit the _C_FN shape — single
 # keywords self-exclude (no second identifier) but these need a name filter.
@@ -1564,22 +1573,20 @@ def extract_mentions(
             fn_spans.append((m.start(), m.end(), cname))
             ctor_spans.append((m.start(), m.end()))
         for cstart, cname, cend in class_extents:
-            cpat = re.compile(
-                r"^[ \t]+(?:explicit\s+)?" + re.escape(cname) +
-                r"\s*\(([^;{}]*)\)\s*(?:noexcept\s*)?"
-                r"(?:=\s*(?:default|delete)\s*)?(?::[^{};]*)?([{;])",
-                re.M,
-            )
-            for m in cpat.finditer(text, cstart, cend):
-                ctor_spans.append((m.start(), m.end()))
-                if m.group(2) == "{":
+            kept_end = cstart
+            for m in _C_CTOR_IN.finditer(text, cstart, cend):
+                if m.group(2) != cname or m.start() < kept_end:
+                    continue
+                kept_end = m.end(1)
+                ctor_spans.append((m.start(), kept_end))
+                if m.group(4) == "{":
                     decls.append(
                         (m.start(),
                          {"kind": "method", "name": cname, "owner": cname})
                     )
-                    fn_spans.append((m.start(), m.end(), cname))
+                    fn_spans.append((m.start(), kept_end, cname))
                 else:
-                    proto_spans.append((m.start(), m.end()))
+                    proto_spans.append((m.start(), kept_end))
         for m in _C_FN.finditer(text):
             qual, name = m.group(2), m.group(3)
             if name in _C_CTRL:  # `else if (...) {` fits the def shape

@@ -18,10 +18,11 @@ The per-document entity, schema and triple rows are not stages but
 ``kind`` filters (operators/extract.py ``*_view``) of extracted's read-back
 frame, which is its checkpoint when a rerun skips extracted.
 
-Each stage returns as soon as its data is written; its commit bookkeeping
-(read-back lineage aggregate, side tables, marker) runs on the
-warehouse's committer thread while the next stage writes (sources/io.py).
-:func:`run_job` returns only after every commit.
+Each stage commits inline and runs no Spark job beyond its write: its
+rows and fingerprint are observed inside the write, and the driver writes
+its metrics row and marker before the next stage of its chain starts
+(sources/io.py).  Per-file lineage is computed on read
+(``Warehouse.lineage``), off the job's path.
 
 Shuffle layout per BASELINE north_star: explicit repartition(repo, lang)
 before the link stage; AQE + skew-join on (session.py); the deleted-ids /
@@ -92,7 +93,7 @@ def run_job(
     (user_prompt_for_filter stand-in) — restricts mention extraction, so
     every downstream stage reflects the filter."""
     wh = Warehouse(warehouse_root, fmt)
-    commits: Dict[str, Future] = {}
+    infos: Dict[str, StageInfo] = {}
     errors: list = []
     errors_lock = threading.Lock()
     failed = threading.Event()
@@ -129,13 +130,10 @@ def run_job(
         failed.set()
 
     def stage(name: str, build, config) -> DataFrame:
-        """Write stage ``name`` in this thread; its commit is queued."""
+        """Write and commit stage ``name`` in this thread."""
         if failed.is_set():
             raise _Aborted(name)
-        out, commits[name] = wh.run_stage_nowait(spark, name, build, config=config)
-        commits[name].add_done_callback(
-            lambda f: f.exception() is None or fail(f.exception())
-        )
+        out, infos[name] = wh.run_stage(spark, name, build, config=config)
         return out
 
     def entity_chain():
@@ -248,11 +246,9 @@ def run_job(
             )
     except BaseException as exc:
         fail(exc)
-    finally:
-        wh.drain_commits()
     if errors:
         raise errors[0]
-    return {name: commits[name].result() for name in STAGES if name in commits}
+    return {name: infos[name] for name in STAGES}
 
 
 def _arg_parser() -> "argparse.ArgumentParser":

@@ -11,7 +11,9 @@ Usage: python scripts/ann_recall_curve.py [sf_dir] [cpus] [k]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -57,9 +59,6 @@ def main() -> None:
         if clustered_n < 2:
             raise SystemExit("clustered:<n> needs n >= 2 (top-k excludes self)")
 
-    from pyspark.sql import functions as F
-
-    from scrapontologies_spark.operators import similarity
     from scrapontologies_spark.session import build_session
 
     spark = build_session(
@@ -68,10 +67,27 @@ def main() -> None:
         shuffle_partitions=2 * cpus,
     )
     spark.sparkContext.setLogLevel("ERROR")
-    if clustered_n:
-        emb = _clustered(spark, clustered_n).persist()
-    else:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").persist()
+    work = tempfile.mkdtemp(prefix="ann-recall-")
+    try:
+        _curves(spark, sf_dir, clustered_n, k, work)
+    finally:
+        spark.stop()
+        shutil.rmtree(work)
+
+
+def _curves(spark, sf_dir: str, clustered_n: int, k: int, work: str) -> None:
+    from scrapontologies_spark.operators import similarity
+
+    # timed over an uncached parquet copy, as the registry queries read:
+    # over a persisted frame AQE does not reuse the keyed side of the LSH
+    # self-join, so the timing would include a second keying pass
+    src = (
+        _clustered(spark, clustered_n)
+        if clustered_n
+        else spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    )
+    src.write.parquet(f"{work}/embeddings")
+    emb = spark.read.parquet(f"{work}/embeddings")
     n = emb.count()
 
     t0 = time.time()
@@ -81,7 +97,6 @@ def main() -> None:
     if not exact:
         # 0/1-row embeddings table: every recall denominator below would be
         # a ZeroDivisionError after the expensive brute-force pass
-        spark.stop()
         raise SystemExit(
             f"no exact top-k pairs at n={n} rows — recall is undefined; "
             "point the script at a table with >= 2 embeddings"
@@ -130,8 +145,6 @@ def main() -> None:
             f"| {cells} | {probes} | {rec:.3f} | {w:.2f} | {w / bf_wall:.2f}x |",
             flush=True,
         )
-
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -92,13 +92,11 @@ def test_format_switch_orc_runs_and_resumes(spark, corpus, tmp_path):
 
 
 def test_commit_spark_job_budget(spark, tmp_path):
-    """One warehouse commit launches at most 4 Spark jobs: the data write
-    (a shuffle stage + the write) and ONE read-back aggregate (a shuffle
-    stage + the collect).  Lineage and metrics are written by the driver,
-    and the read-back uses the written schema and is the DataFrame
-    run_stage returns, so no schema-inference job, no second read and no
-    Python-worker job remains.  The read-back runs on the committer thread
-    under the caller's job group, so it is counted here."""
+    """One warehouse commit launches at most 2 Spark jobs: the data write
+    (a shuffle stage + the write).  The rows and fingerprint are observed
+    inside the write, the metrics row and marker are written by the
+    driver, the read-back uses the written schema and lineage is computed
+    only when read, so the commit adds no job of its own."""
     import os
 
     wh = Warehouse(str(tmp_path / "wh"))
@@ -108,8 +106,7 @@ def test_commit_spark_job_budget(spark, tmp_path):
     sc.setJobGroup(group, "one warehouse commit")
     try:
         _, info = wh.run_stage(spark, "s", lambda: df)
-        # standalone run_stage waits for its own commit: the marker and the
-        # _metrics row exist the moment it returns
+        # the marker and the _metrics row exist the moment run_stage returns
         assert wh.is_complete("s")
         assert os.path.exists(f"{wh.root}/_metrics/stage=s/part-00000.parquet")
     finally:
@@ -117,7 +114,49 @@ def test_commit_spark_job_budget(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert info.rows == 1000
     assert len(wh.lineage(spark).collect()) == 4  # multi-file stage
-    assert len(jobs) <= 4, sorted(jobs)
+    assert len(jobs) <= 2, sorted(jobs)
+
+
+def test_lineage_is_read_from_the_files_and_shows_drift(spark, tmp_path):
+    """Lineage is aggregated from the stage files when read, while the
+    marker holds what the write observed: once a data file is replaced
+    with other rows after the commit, the lineage no longer sums to the
+    marker's fingerprint."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    _, info = wh.run_stage(spark, "s", lambda: spark.range(1000).repartition(4))
+
+    def lineage_sums():
+        rows = wh.lineage(spark).collect()
+        return sum(r.rows for r in rows), sum(r.fingerprint for r in rows) % 2 ** 63
+
+    assert lineage_sums() == (info.rows, info.fingerprint)
+    first = sorted(f for f in os.listdir(wh.path("s")) if f.endswith(".parquet"))[0]
+    os.remove(f"{wh.path('s')}/.{first}.crc")  # Hadoop's checksum of the old file
+    pq.write_table(
+        pa.table({"id": pa.array(range(5000, 5010), pa.int64())}),
+        f"{wh.path('s')}/{first}",
+    )
+    meta = wh._read_marker("s")
+    assert (meta["rows"], meta["fingerprint"]) == (info.rows, info.fingerprint)
+    assert lineage_sums()[1] != meta["fingerprint"]
+
+
+def test_empty_stage_commits_zero_rows_and_fingerprint(spark, tmp_path):
+    """A stage of no rows commits rows=0 and fingerprint=0 (the observed
+    sum is NULL) and has no lineage rows."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    _, info = wh.run_stage(spark, "empty", lambda: spark.range(10).filter("id < 0"))
+    assert (info.rows, info.fingerprint) == (0, 0)
+    meta = wh._read_marker("empty")
+    assert (meta["rows"], meta["fingerprint"]) == (0, 0)
+    (m,) = wh.metrics(spark).collect()
+    assert (m.stage, m.rows, m.fingerprint) == ("empty", 0, 0)
+    assert wh.lineage(spark).collect() == []
 
 
 def test_salted_reconcile_job_stage_equivalence(spark, corpus, tmp_path):
@@ -352,7 +391,7 @@ def test_file_uri_warehouse_root_resolves_to_posix(spark, tmp_path):
         Warehouse("file://otherhost/data/wh")
 
 
-# --- the concurrent stage DAG and pipelined commits -------------------------
+# --- the concurrent stage DAG and inline commits ----------------------------
 
 # the stages each stage reads (run_job's DAG)
 _READS = {
@@ -380,7 +419,7 @@ def clean_fingerprints(spark, tmp_path_factory):
 
 def _job_threads():
     return [t.name for t in threading.enumerate()
-            if t.name.startswith(("run_job", "warehouse-committer"))]
+            if t.name.startswith("run_job")]
 
 
 def test_schema_chain_overlaps_entity_chain(spark, corpus, tmp_path, monkeypatch):
@@ -400,33 +439,6 @@ def test_schema_chain_overlaps_entity_chain(spark, corpus, tmp_path, monkeypatch
     monkeypatch.setattr(wh_io, "stage_observer", observer)
     run_job(spark, corpus, str(tmp_path / "wh"), chunk_bytes=512)
     assert events.index(("global_schema", "start")) < events.index(("entities", "end"))
-
-
-def test_commit_bookkeeping_runs_behind_downstream_writes(
-    spark, corpus, tmp_path, monkeypatch, clean_fingerprints
-):
-    """extracted's bookkeeping is held until a downstream stage starts: a
-    job that waited for each commit before the next write would time out
-    here.  The outputs are those of an undisturbed run."""
-    downstream = threading.Event()
-
-    def observer(stage, event):
-        if event == "start" and stage != "extracted":
-            downstream.set()
-
-    real = Warehouse._write_side_table
-
-    def held(self, table, stage, rows):
-        if (table, stage) == ("_lineage", "extracted") and not downstream.wait(timeout=30):
-            raise TimeoutError("extracted's commit held back every downstream stage")
-        real(self, table, stage, rows)
-
-    monkeypatch.setattr(Warehouse, "_write_side_table", held)
-    monkeypatch.setattr(wh_io, "stage_observer", observer)
-    infos = run_job(spark, corpus, str(tmp_path / "wh"), chunk_bytes=512)
-    assert downstream.is_set()
-    assert _fingerprints(infos) == clean_fingerprints
-    assert not _job_threads()
 
 
 def test_markers_land_after_the_markers_of_their_inputs(
@@ -486,49 +498,3 @@ def test_failing_branch_raises_and_keeps_completed_stages(
     rerun = run_job(spark, corpus, root, chunk_bytes=512)
     assert {s for s, i in rerun.items() if i.skipped} == done
     assert _fingerprints(rerun) == clean_fingerprints
-
-
-def test_commit_queue_is_fifo_under_contention(tmp_path):
-    """Many threads queue commits while the committer starts and exits:
-    every commit runs once, each thread's commits run in its order, a
-    commit queued behind a failed one fails, and drain_commits leaves no
-    committer behind."""
-    import sys
-    import time
-    from concurrent.futures import ThreadPoolExecutor
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    ran = []
-
-    def producer(t):
-        futs = []
-        for i in range(200):
-            futs.append(wh._enqueue_commit(lambda t=t, i=i: ran.append((t, i)) or i))
-            time.sleep(0.0002 * (i % 3))  # let the queue drain and the committer exit
-        return futs
-
-    switch = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        with ThreadPoolExecutor(16) as pool:
-            futs = [f for fs in pool.map(producer, range(16)) for f in fs]
-        assert [f.result(timeout=60) for f in futs] == list(range(200)) * 16
-    finally:
-        sys.setswitchinterval(switch)
-    wh.drain_commits()
-    assert sorted(ran) == [(t, i) for t in range(16) for i in range(200)]
-    for t in range(16):
-        assert [i for u, i in ran if u == t] == list(range(200))
-    assert not _job_threads()
-
-    # a failed commit fails the ones queued behind it, not later ones
-    gate = threading.Event()
-    first = wh._enqueue_commit(lambda: gate.wait(10) and 1 / 0)
-    second = wh._enqueue_commit(lambda: "committed")
-    gate.set()
-    with pytest.raises(ZeroDivisionError):
-        first.result(timeout=10)
-    with pytest.raises(RuntimeError, match="earlier commit failed"):
-        second.result(timeout=10)
-    wh.drain_commits()
-    assert wh._enqueue_commit(lambda: "committed").result(timeout=10) == "committed"
